@@ -8,16 +8,36 @@ SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 SF_MED = "/root/testdata/sf0.01"
 
 
+# the whole suite (~800 tests, thousands of stages) shares ONE JVM, and
+# localCheckpoint blocks and broadcast variables are reclaimed only on
+# driver GC (ContextCleaner), so the heap grows until a full GC.  A fixed
+# 20g heap on a 15.7 GiB host let it grow until the kernel OOM-killed the
+# JVM, and every later Spark test failed with Connection refused.  The
+# heap is therefore a share of physical RAM that leaves room for:
+#   - the session JVM's native overhead (RSS ~1.5 GB above -Xmx);
+#   - test_soak_chaos's child JVM (fixed 6g heap, ~3.5 GB RSS), which
+#     runs while the session JVM is alive;
+#   - pytest and the Python workers (~1 GB).
+# Capped at 20g, the heap large hosts used before (a 32-core full-suite
+# run once exhausted a heap under 8g).
+DRIVER_HEAP_RAM_FRACTION = 0.4
+DRIVER_HEAP_CAP_MB = 20 * 1024
+
+
+def driver_heap(phys_bytes: int) -> str:
+    """Driver heap (a ``spark.driver.memory`` value) for a host with
+    ``phys_bytes`` of physical RAM."""
+    mb = min(int(phys_bytes * DRIVER_HEAP_RAM_FRACTION) >> 20,
+             DRIVER_HEAP_CAP_MB)
+    return f"{mb}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
     from ton_indexer_spark.session import get_spark
 
-    # the whole suite (~800 tests, thousands of stages) shares ONE JVM:
-    # localCheckpoint blocks and broadcast variables are reclaimed lazily
-    # (ContextCleaner runs on driver GC), so the long-lived test session
-    # gets more heap than the 8g production default — a full-suite run
-    # OOM'd the shared JVM at ~7,500 stages in under 8g
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "20g")
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", driver_heap(phys))
     s = get_spark(app_name="ton_indexer_spark_tests", shuffle_partitions=8)
     yield s
 

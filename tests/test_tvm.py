@@ -968,6 +968,7 @@ def _signed_external_population():
     return rows
 
 
+@needs_reference
 def test_signed_external_replay():
     """Replay REAL signed wallet externals end to end: recv_external
     executes CHKSIGNU over the chain-captured signature through the
@@ -1047,6 +1048,7 @@ def test_signed_external_replay():
     assert res.exit_code not in (0, 1), res.exit_code
 
 
+@needs_reference
 def test_emulator_auto_executes_real_signed_external():
     """wallet_hop="auto": a signed external whose signature verifies is
     executed for REAL (recv_external through CHKSIGNU + RFC 8032), so
