@@ -14,7 +14,7 @@ import json
 
 import pytest
 
-from parity_harness import TRACES_DIR
+from parity_harness import REF_TRACE_FIXTURES, TRACES_DIR, reference_params
 from ton_indexer_spark.classifier.fixture_replay import (
     fixture_ctx,
     fixture_rows,
@@ -35,7 +35,10 @@ def _canon(acts: list[dict]) -> str:
 
 @pytest.mark.parametrize(
     "fixture",
-    sorted(p.name for p in TRACES_DIR.glob("*.lz4")),
+    reference_params(
+        sorted(p.name for p in TRACES_DIR.glob("*.lz4")),
+        TRACES_DIR, REF_TRACE_FIXTURES,
+    ),
 )
 def test_golden_fixture_indexed_equals_full_scan(fixture):
     data = load_fixture(TRACES_DIR / fixture)

@@ -113,6 +113,26 @@ def test_transactions_message_enrichment(ton, tduck):
     assert row["in_msg"] is not None
 
 
+def test_transactions_page_keeps_order_after_enrichment(ton, tduck):
+    """The message enrichment joins after paging; the page must still come
+    back in the route's total order (lt DESC, account, hash)."""
+    from ton_indexer_spark.plans import transactions_query
+
+    acc = pick(tduck, "SELECT account FROM transactions GROUP BY account ORDER BY count(*) DESC, account LIMIT 1")
+    got = [
+        (r["lt"], r["account"], r["hash"])
+        for r in transactions_query(ton, accounts=[acc], limit=20).collect()
+    ]
+    want = tduck.execute(
+        f"""
+        SELECT lt, account, hash FROM transactions WHERE account = '{acc}'
+        ORDER BY lt DESC, account ASC, hash ASC LIMIT 20
+        """
+    ).fetchall()
+    assert len(want) > 1
+    assert got == [tuple(r) for r in want]
+
+
 def test_messages_inout_fold(ton, tduck):
     from ton_indexer_spark.plans import messages_query
 

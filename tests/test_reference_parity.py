@@ -17,7 +17,13 @@ from __future__ import annotations
 
 import pytest
 
-from parity_harness import CASES_DIR, load_cases, run_yaml_case
+from parity_harness import (
+    CASES_DIR,
+    REF_YAML_CASES,
+    load_cases,
+    reference_params,
+    run_yaml_case,
+)
 
 # (yaml file, case name) pairs not yet at parity.  Shrink, never grow.
 KNOWN_GAPS: set[tuple[str, str]] = {
@@ -34,18 +40,21 @@ def _all_cases() -> list[tuple[str, str]]:
 
 @pytest.mark.parametrize(
     "yaml_name,case_name",
-    [
-        pytest.param(
-            y, c,
-            id=f"{y.removesuffix('.yaml')}:{c}",
-            marks=(
-                [pytest.mark.xfail(
-                    reason="documented parity gap", strict=True)]
-                if (y, c) in KNOWN_GAPS else []
-            ),
-        )
-        for y, c in _all_cases()
-    ],
+    reference_params(
+        [
+            pytest.param(
+                y, c,
+                id=f"{y.removesuffix('.yaml')}:{c}",
+                marks=(
+                    [pytest.mark.xfail(
+                        reason="documented parity gap", strict=True)]
+                    if (y, c) in KNOWN_GAPS else []
+                ),
+            )
+            for y, c in _all_cases()
+        ],
+        CASES_DIR, REF_YAML_CASES, n_args=2,
+    ),
 )
 def test_reference_golden_case(yaml_name, case_name):
     run_yaml_case(yaml_name, case_name)

@@ -23,6 +23,8 @@ import sys
 
 import pytest
 
+from tests.conftest import driver_heap, host_ram
+
 _spec = importlib.util.spec_from_file_location(
     "soak_chaos",
     os.path.join(os.path.dirname(__file__), "..", "examples",
@@ -32,6 +34,9 @@ soak = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(soak)
 
 N_TRACES, N_BATCHES, KILL_AT = 2_500, 8, 4
+# the session's host-RAM heap rule, capped at 6g, so a small host does not
+# start the children with a heap it cannot hold
+CHILD_HEAP = driver_heap(host_ram(), cap_mb=6 * 1024)
 
 
 @pytest.fixture(scope="module")
@@ -49,7 +54,7 @@ def _child(root: str, sub: str, kill: int | str | None):
         cmd.append(str(kill))
     return subprocess.run(
         cmd, capture_output=True, text=True,
-        env=dict(os.environ, SPARK_GRAFT_DRIVER_MEM="6g"),
+        env=dict(os.environ, SPARK_GRAFT_DRIVER_MEM=CHILD_HEAP),
     )
 
 

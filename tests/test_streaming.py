@@ -54,6 +54,56 @@ def test_incremental_matches_batch(spark, fixture_dir, tmp_path):
     assert asm.open_trace_count() > 0  # pending traces retained in state
 
 
+def test_broken_trace_is_not_split_at_the_batch_boundary(spark, tmp_path):
+    """A broken trace whose out-edge is consumed in a later batch stays
+    open until then and is emitted once, whole: a trace completes when its
+    pending edges reach zero (TraceAssembler.cpp:350-366), broken or not."""
+    from ton_indexer_spark.streaming import IncrementalTraceAssembler
+
+    tx_schema = (
+        "account string, hash string, lt long, now long, "
+        "mc_block_seqno long, aborted boolean, orig_status string, "
+        "end_status string, total_fees long"
+    )
+    msg_schema = (
+        "tx_hash string, tx_lt long, msg_hash string, direction string, "
+        "source string, destination string, value long, opcode long, "
+        "created_lt long, body_hash string"
+    )
+
+    def tx(h, lt, seqno):
+        return (f"acc_{h}", h, lt, lt, seqno, False, "active", "active", 0)
+
+    def msg(tx_hash, lt, msg_hash, direction, source, destination):
+        return (tx_hash, lt, msg_hash, direction, source, destination, 1, 0,
+                lt, None)
+
+    batches = [
+        # r's in-message is internal with no producer → broken; its
+        # out-message is consumed only in the next batch
+        ([tx("r", 100, 1)], [msg("r", 100, "i0", "in", "X", "R"),
+                             msg("r", 100, "m1", "out", "R", "C")]),
+        ([tx("c", 200, 2)], [msg("c", 200, "m1", "in", "R", "C")]),
+    ]
+    asm = IncrementalTraceAssembler(spark, state_dir=str(tmp_path / "state"))
+    emitted, members = [], []
+    for i, (t, m) in enumerate(batches):
+        res = asm.process_batch(spark.createDataFrame(t, tx_schema),
+                                spark.createDataFrame(m, msg_schema),
+                                batch_id=i)
+        emitted.append([r.asDict() for r in res.final_traces.collect()])
+        members.append(sorted(
+            (r["hash"], r["trace_id"])
+            for r in res.final_transactions.collect()))
+
+    assert emitted[0] == [] and members[0] == []
+    [trace] = emitted[1]
+    assert (trace["trace_id"], trace["state"], trace["nodes_"],
+            trace["edges_"], trace["pending_edges_"]) == ("r", "broken", 2, 1, 0)
+    assert members[1] == [("c", "r"), ("r", "r")]
+    assert asm.open_trace_count() == 0
+
+
 def test_state_restart_resumes(spark, fixture_dir, tmp_path):
     from ton_indexer_spark.streaming import IncrementalTraceAssembler
 

@@ -72,6 +72,55 @@ def test_pipeline_with_classification_and_push(spark, fixture_dir, tmp_path):
     )  # pending overlay never overlaps finalized traces
 
 
+def test_pending_overlay_tracks_open_traces(spark, fixture_dir, tmp_path):
+    """The overlay comes from the batch's one classification: after each
+    batch pending_actions holds exactly the actions of the traces still
+    open, and the batch that closes the last open trace empties it."""
+    from ton_indexer_spark.classifier import classify_traces
+    from ton_indexer_spark.streaming.ingest import IngestPipeline
+
+    truth = spark.read.parquet(f"{fixture_dir}/traces.parquet")
+    # the traces that have closed by the end of the fixture
+    closing = truth.filter(F.col("pending_edges_") == 0)
+    txs = spark.read.parquet(f"{fixture_dir}/transactions.parquet").join(
+        closing.select("trace_id"), "trace_id", "left_semi")
+    msgs = spark.read.parquet(f"{fixture_dir}/messages.parquet").join(
+        closing.select("trace_id"), "trace_id", "left_semi")
+    contents = spark.read.parquet(f"{fixture_dir}/message_contents.parquet")
+    jw = spark.read.parquet(f"{fixture_dir}/jetton_wallets.parquet")
+    # cut where the most closing traces straddle the batch boundary
+    spans = [(r[0], r[1]) for r in closing.select(
+        "mc_seqno_start", "mc_seqno_end").collect()]
+    cut = max(sorted({s for s, _ in spans}),
+              key=lambda c: sum(s <= c < e for s, e in spans))
+
+    out = str(tmp_path / "out")
+    pipe = IngestPipeline(spark, out_dir=out, state_dir=str(tmp_path / "state"),
+                          classify=True, message_contents=contents,
+                          jetton_wallets=jw)
+
+    def overlay():
+        return sorted(
+            str(tuple(r)) for r in spark.read.parquet(
+                os.path.join(out, "pending_actions")).drop("finality").collect())
+
+    pipe.process_batch(
+        txs.filter(F.col("mc_block_seqno") <= cut).drop("trace_id"),
+        msgs.filter(F.col("mc_seqno") <= cut).drop("trace_id"), batch_id=0)
+    open_txs, open_msgs = pipe.assembler.open_rows()
+    assert open_txs.count() > 0
+    cls = classify_traces(open_txs, open_msgs, contents, jw)
+    want = sorted(str(tuple(r)) for r in cls.actions.collect())
+    cls.unpersist()
+    assert want and overlay() == want
+
+    pipe.process_batch(
+        txs.filter(F.col("mc_block_seqno") > cut).drop("trace_id"),
+        msgs.filter(F.col("mc_seqno") > cut).drop("trace_id"), batch_id=1)
+    assert pipe.assembler.open_trace_count() == 0
+    assert overlay() == []
+
+
 def test_pending_overlay(spark, fixture_dir):
     from ton_indexer_spark.catalog import Catalog
     from ton_indexer_spark.plans import traces_query

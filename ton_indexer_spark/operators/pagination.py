@@ -19,7 +19,7 @@ DEFAULT_LIMIT = 100
 MAX_LIMIT = 1000
 
 
-def _order_cols(sort: Sequence[tuple[str, str]]) -> list[Column]:
+def order_columns(sort: Sequence[tuple[str, str]]) -> list[Column]:
     cols = []
     for name, direction in sort:
         c = F.col(name)
@@ -51,7 +51,7 @@ def paginate(
                     c < keyset[name] if direction.lower() == "desc" else c > keyset[name]
                 )
                 break
-    df = df.orderBy(*_order_cols(sort))
+    df = df.orderBy(*order_columns(sort))
     if offset:
         df = df.offset(int(offset))
     return df.limit(limit)

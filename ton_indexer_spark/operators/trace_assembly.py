@@ -12,15 +12,21 @@ the first transaction, with states:
 - ``complete`` otherwise.
 
 Batch re-expression (order-free, so it parallelizes):
-1. edge list: out-rows ⋈ in-rows on msg_hash (one shuffle on msg_hash);
-2. a transaction consumes exactly one in-message, so producer→consumer
-   edges form a FOREST; roots found by pointer doubling — one self-join
-   per O(log depth) round (operators/graph.py:forest_roots);
-3. trace_id = root transaction hash (the reference's convention,
+1. one row-preserving pass keyed by msg_hash: each message row learns its
+   producer (the out-row's transaction) and how many in- and out-rows
+   share its hash;
+2. one aggregate per transaction over those rows: orphan flag (an internal
+   in-message nobody produced), pending out-edges (destined out-messages
+   nobody consumed), out-edge count, parent (minimum producer of its
+   in-messages) and its in-message;
+3. a transaction consumes exactly one in-message, so the child→parent
+   pairs form a FOREST; roots found by operators/graph.py:forest_roots;
+   trace_id = root transaction hash (the reference's convention,
    migrate.cpp:516) — the parentless tx, exactly as in the incremental
    assembler;
-4. orphan in-messages / unconsumed out-messages are anti-joins on msg_hash
-   → broken / pending flags + counters aggregated per component.
+4. one pass keyed by trace_id puts every trace field (counters, spans,
+   state) on each member row, materialized once; the trace rows and the
+   per-transaction assignment are projections of that frame.
 
 The streaming variant (streaming/trace_assembler.py) shares the same
 semantics; this operator also serves as its reconciliation/backfill path —
@@ -32,16 +38,36 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ton_indexer_spark.operators.graph import forest_roots
 
+# one row per trace (schemas.TRACES minus classification state)
+TRACE_COLS = [
+    "trace_id", "external_hash", "external_hash_norm",
+    "mc_seqno_start", "mc_seqno_end", "start_lt", "end_lt",
+    "start_utime", "end_utime", "state", "edges_", "pending_edges_",
+    "nodes_",
+]
+
 
 @dataclass
 class AssembledTraces:
-    transactions: DataFrame  # input txs + assigned trace_id
-    traces: DataFrame        # one row per trace (schemas.TRACES minus class. state)
+    members: DataFrame     # input txs + trace_id + every TRACE_COLS field
+    tx_columns: list[str]  # the input transaction columns
+
+    @property
+    def transactions(self) -> DataFrame:
+        """Input txs + assigned trace_id."""
+        return self.members.select(*self.tx_columns, "trace_id")
+
+    @property
+    def traces(self) -> DataFrame:
+        """One row per trace, taken from its lowest-hash member."""
+        return self.members.filter(
+            F.col("hash") == F.col("first_member_")
+        ).select(*TRACE_COLS)
 
 
 def assemble_traces(
@@ -61,131 +87,94 @@ def assemble_traces(
     edge count; None keeps the operator's size-gated default.
     """
     txs = transactions.drop("trace_id")
-    # the message projection feeds four independent branches (edges,
-    # orphans, unconsumed, root_in) — materialize it once with truncated
-    # lineage instead of recomputing the caller's upstream plan per branch
-    # (at block cadence the recompute, not the data, is the wall)
+    # hash leads, as it does in any frame joined on it
+    tx_columns = ["hash", *(c for c in txs.columns if c != "hash")]
+    is_in = F.col("direction") == "in"
+    is_out = F.col("direction") == "out"
+
+    # 1. row-preserving pass keyed by msg_hash (one shuffle): the producer
+    # and the in/out row counts of each message hash
+    by_hash = Window.partitionBy("msg_hash")
     msgs = messages.select(
-        "tx_hash", "tx_lt", "msg_hash", "direction", "source", "destination"
+        "tx_hash", "msg_hash", "direction", "source", "destination",
+        F.min(F.when(is_out, F.col("tx_hash"))).over(by_hash)
+        .alias("producer"),
+        F.count(F.when(is_in, 1)).over(by_hash).alias("n_in"),
+        F.count(F.when(is_out, 1)).over(by_hash).alias("n_out"),
+    )
+    # 2. per-transaction facts (one shuffle on tx_hash); materialized
+    # because forest_roots sizes and resolves it and step 4 joins it
+    per_tx = msgs.groupBy(F.col("tx_hash").alias("hash")).agg(
+        # orphan internal in-message → broken (TraceAssembler.cpp:316-325)
+        F.max(
+            F.when(is_in & F.col("source").isNotNull() & (F.col("n_out") == 0), 1)
+        ).alias("orphan_"),
+        # destined out-message nobody consumed → pending edge
+        F.count(
+            F.when(is_out & F.col("destination").isNotNull() & (F.col("n_in") == 0), 1)
+        ).alias("pending_"),
+        # producer→consumer edges leaving this tx (out-row × in-rows)
+        F.sum(F.when(is_out, F.col("n_in"))).alias("out_edges_"),
+        # duplicate producers (corrupt input) keep the minimum parent
+        F.min(F.when(is_in, F.col("producer"))).alias("parent_"),
+        # a root's in-message is its trace's external hash
+        F.min(F.when(is_in, F.col("msg_hash"))).alias("in_msg_"),
     ).localCheckpoint(eager=True)
 
-    outs = msgs.filter(F.col("direction") == "out").select(
-        F.col("msg_hash"), F.col("tx_hash").alias("src_tx")
-    )
-    ins = msgs.filter(F.col("direction") == "in").select(
-        F.col("msg_hash"), F.col("tx_hash").alias("dst_tx"), F.col("source")
-    )
-
-    # matched internal edges (one shuffle on msg_hash); reused by the
-    # root-finding loop (both sides of its self-join) and edge_counts
-    edges = (
-        outs.join(ins, "msg_hash")
-        .select("src_tx", "dst_tx", "msg_hash")
-        .localCheckpoint(eager=True)
-    )
-
-    # orphan internal in-messages → broken roots (TraceAssembler.cpp:316-325)
-    orphans = (
-        ins.filter(F.col("source").isNotNull())
-        .join(outs, "msg_hash", "left_anti")
-        .select(F.col("dst_tx").alias("tx"), F.lit(1).alias("orphan"))
-    )
-    # unconsumed destined out-messages → pending edges
-    unconsumed = (
-        msgs.filter((F.col("direction") == "out") & F.col("destination").isNotNull())
-        .join(ins.select("msg_hash"), "msg_hash", "left_anti")
-        .groupBy(F.col("tx_hash").alias("tx"))
-        .agg(F.count(F.lit(1)).alias("n_pending"))
-    )
-
-    # each tx consumes exactly ONE in-message → producer→consumer edges form
-    # a forest; root-finding = pointer doubling (one join per round) instead
-    # of generic connected components (operators/graph.py:forest_roots)
+    # 3. each tx consumes exactly ONE in-message → producer→consumer edges
+    # form a forest; root-finding = forest_roots instead of generic
+    # connected components (operators/graph.py)
     fr_kwargs = (
         {} if forest_local_threshold is None
         else {"local_threshold": forest_local_threshold}
     )
     comp = forest_roots(
-        edges.select(
-            F.col("dst_tx").alias("child"), F.col("src_tx").alias("parent")
+        per_tx.filter(F.col("parent_").isNotNull()).select(
+            F.col("hash").alias("child"), F.col("parent_").alias("parent")
         ),
         **fr_kwargs,
     ).withColumnRenamed("node", "hash")
-    labeled = (
-        txs.join(comp, "hash", "left")
+
+    # 4. one pass keyed by trace_id (one shuffle): every trace field on
+    # each member row
+    by_trace = Window.partitionBy("trace_id")
+
+    def over(agg):
+        return agg.over(by_trace)
+
+    pending_edges = F.coalesce(over(F.sum("pending_")), F.lit(0))
+    external_hash = over(
+        F.max(F.when(F.col("hash") == F.col("trace_id"), F.col("in_msg_")))
+    )
+    members = (
+        txs.join(per_tx, "hash", "left")
+        .join(comp, "hash", "left")
         # a tx with no parent roots its own trace; trace_id = root tx hash
         # (the reference's convention, migrate.cpp:516)
-        .withColumn("component", F.coalesce(F.col("root"), F.col("hash")))
-        .drop("root")
-        .withColumn("trace_id", F.col("component"))
-        # reused by roots/flags/edge_counts/root_in and the output
-        .localCheckpoint(eager=True)
-    )
-    roots = labeled.select("component", "trace_id").distinct()
-
-    # per-tx flags
-    flags = (
-        labeled.select("component", "hash", "lt", "now", "mc_block_seqno")
-        .join(orphans.withColumnRenamed("tx", "hash"), "hash", "left")
-        .join(unconsumed.withColumnRenamed("tx", "hash"), "hash", "left")
-    )
-    edge_counts = (
-        edges.join(
-            labeled.select(F.col("hash").alias("src_tx"), "component"), "src_tx"
-        )
-        .groupBy("component")
-        .agg(F.count(F.lit(1)).alias("edges_"))
-    )
-    # external hash: root's in-message (external or orphaned internal)
-    root_in = (
-        ins.select(F.col("dst_tx").alias("hash"), "msg_hash")
-        .join(
-            labeled.select("hash", "component", "trace_id").filter(
-                F.col("hash") == F.col("trace_id")
-            ),
-            "hash",
-        )
-        .groupBy("component")
-        .agg(F.min("msg_hash").alias("external_hash"))
-    )
-
-    traces = (
-        flags.groupBy("component")
-        .agg(
-            F.count(F.lit(1)).alias("nodes_"),
-            F.sum(F.coalesce(F.col("orphan"), F.lit(0))).alias("n_orphans"),
-            F.sum(F.coalesce(F.col("n_pending"), F.lit(0))).alias("pending_edges_"),
-            F.min("lt").alias("start_lt"),
-            F.max("lt").alias("end_lt"),
-            F.min("now").alias("start_utime"),
-            F.max("now").alias("end_utime"),
-            F.min("mc_block_seqno").alias("mc_seqno_start"),
-            F.max("mc_block_seqno").alias("mc_seqno_end"),
-        )
-        .join(edge_counts, "component", "left")
-        .join(roots, "component")
-        .join(root_in, "component", "left")
+        .withColumn("trace_id", F.coalesce(F.col("root"), F.col("hash")))
         .select(
+            *tx_columns,
             "trace_id",
-            "external_hash",
-            F.col("external_hash").alias("external_hash_norm"),
-            "mc_seqno_start",
-            "mc_seqno_end",
-            "start_lt",
-            "end_lt",
-            "start_utime",
-            "end_utime",
-            F.when(F.col("n_orphans") > 0, "broken")
-            .when(F.col("pending_edges_") > 0, "pending")
+            external_hash.alias("external_hash"),
+            external_hash.alias("external_hash_norm"),
+            over(F.min("mc_block_seqno")).alias("mc_seqno_start"),
+            over(F.max("mc_block_seqno")).alias("mc_seqno_end"),
+            over(F.min("lt")).alias("start_lt"),
+            over(F.max("lt")).alias("end_lt"),
+            over(F.min("now")).alias("start_utime"),
+            over(F.max("now")).alias("end_utime"),
+            F.when(over(F.max("orphan_")) > 0, "broken")
+            .when(pending_edges > 0, "pending")
             .otherwise("complete")
             .alias("state"),
-            F.coalesce(F.col("edges_"), F.lit(0)).alias("edges_"),
-            "pending_edges_",
-            "nodes_",
+            F.coalesce(over(F.sum("out_edges_")), F.lit(0)).alias("edges_"),
+            pending_edges.alias("pending_edges_"),
+            over(F.count(F.lit(1))).alias("nodes_"),
+            over(F.min("hash")).alias("first_member_"),
         )
+        .localCheckpoint(eager=True)
     )
-    assigned = labeled.drop("component")
-    return AssembledTraces(transactions=assigned, traces=traces)
+    return AssembledTraces(members=members, tx_columns=tx_columns)
 
 
 def broken_trace_roots(messages: DataFrame) -> DataFrame:

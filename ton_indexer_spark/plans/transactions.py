@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ton_indexer_spark.catalog import Catalog
 from ton_indexer_spark.operators import filter_by_array, filter_range, paginate
+from ton_indexer_spark.operators.pagination import order_columns
 
 
 def transactions_query(
@@ -63,22 +64,21 @@ def transactions_query(
     # sort-key semantics: utime filters → order by now; else by lt
     # (crud_transactions.go:55-74,87); tiebreakers pin a total order
     key = "now" if (start_utime is not None or end_utime is not None) else "lt"
-    txs = paginate(
-        txs,
-        sort=[(key, sort), ("lt", sort), ("account", "asc"), ("hash", "asc")],
-        limit=limit,
-        offset=offset,
-    )
+    order = [(key, sort), ("lt", sort), ("account", "asc"), ("hash", "asc")]
+    txs = paginate(txs, sort=order, limit=limit, offset=offset)
 
     if not with_messages:
         return txs
-    return _with_messages(cat, txs)
+    return _with_messages(cat, txs, order)
 
 
-def _with_messages(cat: Catalog, txs: DataFrame) -> DataFrame:
+def _with_messages(
+    cat: Catalog, txs: DataFrame, order: Sequence[tuple[str, str]]
+) -> DataFrame:
     """Enrichment: in/out messages with bodies, out-msgs sorted by
     created_lt (crud_transactions.go:227-261) — one ordered collect per
-    direction.  Shared by every transactions-shaped endpoint."""
+    direction.  Shared by every transactions-shaped endpoint; ``order`` is
+    the page's sort, which the enrichment join does not preserve."""
     contents = cat.message_contents.select(
         F.col("hash").alias("body_hash"), F.col("body")
     )
@@ -103,11 +103,18 @@ def _with_messages(cat: Catalog, txs: DataFrame) -> DataFrame:
             F.collect_list(F.when(F.col("direction") == "out", F.col("msg")))
         ).alias("out_msgs"),
     )
-    return txs.join(
-        folded,
-        (txs["hash"] == folded["tx_hash"]) & (txs["lt"] == folded["tx_lt"]),
-        "left",
-    ).drop("tx_hash", "tx_lt")
+    # re-apply the page's total order: the page is at most MAX_LIMIT rows,
+    # so one partition sorts it without a range-partitioning sample job
+    return (
+        txs.join(
+            folded,
+            (txs["hash"] == folded["tx_hash"]) & (txs["lt"] == folded["tx_lt"]),
+            "left",
+        )
+        .drop("tx_hash", "tx_lt")
+        .coalesce(1)
+        .sortWithinPartitions(*order_columns(order))
+    )
 
 
 def adjacent_transactions(
@@ -140,15 +147,16 @@ def adjacent_transactions(
         .select(F.col("adj_hash").alias("hash"))
         .distinct()
     )
+    order = [("lt", "asc"), ("hash", "asc")]
     txs = paginate(
         cat.transactions.join(adj, "hash", "left_semi"),
-        sort=[("lt", "asc"), ("hash", "asc")],
+        sort=order,
         limit=1_000_000,
         offset=0,
     )
     if not with_messages:
         return txs
-    return _with_messages(cat, txs)
+    return _with_messages(cat, txs, order)
 
 
 def transactions_by_message(
@@ -173,10 +181,8 @@ def transactions_by_message(
     probe = m.select(F.col("tx_hash").alias("hash"),
                      F.col("tx_lt").alias("lt")).distinct()
     txs = cat.transactions.join(probe, ["hash", "lt"], "left_semi")
-    txs = paginate(
-        txs, sort=[("lt", "desc"), ("hash", "asc")],
-        limit=limit, offset=offset,
-    )
+    order = [("lt", "desc"), ("hash", "asc")]
+    txs = paginate(txs, sort=order, limit=limit, offset=offset)
     if not with_messages:
         return txs
-    return _with_messages(cat, txs)
+    return _with_messages(cat, txs, order)

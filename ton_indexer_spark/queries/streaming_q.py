@@ -151,9 +151,10 @@ _ORACLE = f"""
            a.pending_edges,
            a.start_lt,
            a.end_lt,
-           -- the streaming-emission invariant: complete/broken traces
-           -- finalize in the batch of their LAST member; pending stay open
-           CASE WHEN a.n_orphans = 0 AND a.pending_edges > 0
+           -- the streaming-emission invariant: a trace without pending
+           -- edges (complete or broken) finalizes in the batch of its LAST
+           -- member; one with pending edges stays open
+           CASE WHEN a.pending_edges > 0
                 THEN CAST(NULL AS BIGINT) ELSE a.max_seqno
            END AS emitted_batch
     FROM agg a LEFT JOIN ecount ec USING (trace_id)

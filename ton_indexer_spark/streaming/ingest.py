@@ -10,8 +10,10 @@ Spark shape — one foreachBatch, no queues, no triggers:
                 maxFilesPerTrigger = the reference's --max-active-tasks)
       → foreachBatch:
             1. IncrementalTraceAssembler.process_batch   (T2 state op)
-            2. classify finalized traces                  (T5, optional)
+            2. classify final and still-open traces once  (T5, optional)
             3. write_facts(txs, traces, actions)          (T8 idempotent sink)
+               + replace pending_actions with the open
+                 traces' actions from step 2              (T6 overlay)
             4. merge_dimension(latest account states)     (W2 LWW)
             5. publish_batch(...)                         (T7, optional)
 
@@ -104,29 +106,36 @@ class IngestPipeline:
 
         res = self.assembler.process_batch(txs, msgs, batch_id=batch_id)
         flushed = res.final_transactions
-        if flushed.head(1):
+        final = res.final_traces
+        # a final trace has members, so one probe covers both sinks
+        has_final = bool(final.head(1))
+        if has_final:
             sink(
                 flushed,
                 "transactions",
                 sort_cols=["lt", "account", "hash"],
             )
-        final = res.final_traces
-        if final.head(1):
             sink(
                 final.withColumn("mc_block_seqno", final["mc_seqno_end"]),
                 "traces",
                 sort_cols=["end_lt", "trace_id"],
             )
-            if self.classify:  # T5: classification follows finalization
-                from ton_indexer_spark.classifier import classify_traces
+        if self.classify:
+            # T5 + T6: one classification of final and still-open traces;
+            # the final trace join keeps the final actions for the sinks,
+            # the open traces' actions replace the pending overlay (the
+            # emulated/pending overlay the reference keeps in Redis)
+            from ton_indexer_spark.classifier import classify_traces
+            from ton_indexer_spark.sources.writer import atomic_replace
 
-                cls = classify_traces(
-                    flushed,
-                    res.final_messages,
-                    message_contents,
-                    self.jetton_wallets,
-                    self.nft_items,
-                )
+            cls = classify_traces(
+                flushed.unionByName(res.pending_transactions),
+                res.final_messages.unionByName(res.pending_messages),
+                message_contents,
+                self.jetton_wallets,
+                self.nft_items,
+            )
+            if has_final:
                 actions = cls.actions.join(
                     final.select(
                         "trace_id",
@@ -136,35 +145,41 @@ class IngestPipeline:
                     ),
                     "trace_id",
                 )
-                if actions.head(1):
-                    sink(
-                        actions.withColumn(
-                            "mc_block_seqno", actions["trace_mc_seqno_end"]
-                        ),
-                        "actions",
-                        sort_cols=["trace_end_lt", "trace_id", "action_id"],
-                    )
-                    sink(
-                        cls.action_accounts.join(
-                            final.select(
-                                "trace_id",
-                                final["end_lt"].alias("trace_end_lt"),
-                                final["mc_seqno_end"].alias("mc_block_seqno"),
-                            ),
+                sink(
+                    actions.withColumn(
+                        "mc_block_seqno", actions["trace_mc_seqno_end"]
+                    ),
+                    "actions",
+                    sort_cols=["trace_end_lt", "trace_id", "action_id"],
+                )
+                sink(
+                    cls.action_accounts.join(
+                        final.select(
                             "trace_id",
+                            final["end_lt"].alias("trace_end_lt"),
+                            final["mc_seqno_end"].alias("mc_block_seqno"),
                         ),
-                        "action_accounts",
-                        sort_cols=["account", "trace_end_lt"],
-                    )
-                # all classify outputs are on disk — release the cached
-                # classify-stage output for this batch
-                cls.unpersist()
+                        "trace_id",
+                    ),
+                    "action_accounts",
+                    sort_cols=["account", "trace_end_lt"],
+                )
+            atomic_replace(
+                cls.actions.join(
+                    res.pending_traces.select("trace_id"), "trace_id",
+                    "left_semi",
+                ).withColumn("finality", F.lit("pending")),
+                os.path.join(self.out_dir, "pending_actions"),
+            )
+            # all classify outputs are on disk — release the cached
+            # classify-stage output for this batch
+            cls.unpersist()
 
         if (
             self.audit_every is not None
             and batch_id is not None
             and batch_id % self.audit_every == 0
-            and final.head(1)
+            and has_final
         ):
             from ton_indexer_spark.operators.audit import audit_traces
 
@@ -203,27 +218,6 @@ class IngestPipeline:
             version_col="last_trans_lt",
             tiebreakers=["hash"],
         )
-
-        # T6: provisional actions for still-pending traces, overwritten each
-        # batch (the emulated/pending overlay the reference keeps in Redis)
-        if self.classify:
-            open_rows = self.assembler.open_rows()
-            if open_rows is not None and open_rows[0].head(1):
-                from ton_indexer_spark.classifier import classify_traces
-                from ton_indexer_spark.sources.writer import atomic_replace
-
-                pend = classify_traces(
-                    open_rows[0],
-                    open_rows[1],
-                    message_contents,
-                    self.jetton_wallets,
-                    self.nft_items,
-                )
-                atomic_replace(
-                    pend.actions.withColumn("finality", F.lit("pending")),
-                    os.path.join(self.out_dir, "pending_actions"),
-                )
-                pend.unpersist()
 
         if self.publisher is not None:  # T7 fan-out
             publish_batch(

@@ -10,14 +10,14 @@ restored (or backtracked 50 blocks) on restart (:90-212).
 Spark re-expression: the per-transaction state machine becomes a per-micro-
 batch *incremental connected-components* step.  Key insight making this
 correct AND bounded: once a trace has zero pending edges it can never gain
-members (every join happens through a pending out-edge), so completed/broken
-traces are emitted and dropped from state; the carried state is exactly the
-reference's open-trace set — transactions and messages of still-pending
-traces.
+members (every join happens through a pending out-edge), so such traces —
+complete or broken — are emitted and dropped from state; the carried state
+is exactly the reference's open-trace set — transactions and messages of
+traces with pending edges.
 
-    state ∪ batch → assemble_traces (batch CC) → split by state:
-        complete/broken → emit (final)            [T4: broken preserved]
-        pending         → keep rows in state      [T6: pending overlay]
+    state ∪ batch → assemble_traces (batch CC) → split by pending edges:
+        0 pending edges or TTL → emit (final)     [T4: broken preserved]
+        pending edges          → keep in state    [T6: pending overlay]
 
 State is persisted as parquet per batch (atomic dir swap) — the analog of
 the reference's ``<seqno>.tastate`` snapshots (T3); on restart the assembler
@@ -28,8 +28,11 @@ Wire it either from ``foreachBatch`` of a Structured Streaming source
 (see streaming/ingest.py) or drive ``process_batch`` directly.
 
 Scale: state size ∝ open traces only (the reference's own bound); each
-batch costs one msg_hash shuffle + O(log diameter) CC rounds over
-|batch| + |open| rows, independent of table history size.
+batch costs, over |batch| + |open| rows and independent of table history
+size: one read of the messages, the assembler's three shuffles (msg_hash,
+tx_hash, trace_id) plus its root finding (one in-memory task at block
+cadence, O(log depth) rounds above forest_roots' size gate), one
+tx_hash join that labels the messages, and the two snapshot writes.
 """
 
 from __future__ import annotations
@@ -55,10 +58,12 @@ _MSG_STATE_COLS = [
 
 @dataclass
 class BatchResult:
-    final_traces: DataFrame        # state ∈ {complete, broken} — safe to append
-    pending_traces: DataFrame      # provisional snapshot (overlay, T6)
-    final_transactions: DataFrame  # full tx rows of final traces + trace_id
-    final_messages: DataFrame      # message rows of final traces + trace_id
+    final_traces: DataFrame          # no pending edges left, or TTL-expired
+    pending_traces: DataFrame        # provisional snapshot (overlay, T6)
+    final_transactions: DataFrame    # full tx rows of final traces + trace_id
+    final_messages: DataFrame        # message rows of final traces + trace_id
+    pending_transactions: DataFrame  # tx rows of open traces + provisional id
+    pending_messages: DataFrame      # their message rows + provisional id
 
 
 class IncrementalTraceAssembler:
@@ -254,64 +259,61 @@ class IncrementalTraceAssembler:
                 else:
                     self._open_txs = self._open_msgs = None
         all_txs, all_msgs = self._union_state(batch_txs, batch_msgs)
+        # state ∪ batch messages feed both the assembler and the message
+        # split below: read them once
+        all_msgs = all_msgs.localCheckpoint(eager=True)
         assembled = assemble_traces(all_txs, all_msgs)
-        # checkpoint everything returned to callers BEFORE the state swap —
-        # their lazy plans must not reference the replaced state files
-        traces = assembled.traces.localCheckpoint(eager=True)
-        tx_assign_full = assembled.transactions.select(
-            *_TX_STATE_COLS, "trace_id"
-        ).localCheckpoint(eager=True)
 
-        final = traces.filter(F.col("state").isin("complete", "broken"))
-        pending = traces.filter(F.col("state") == "pending")
-
+        # a trace can gain members only through a pending out-edge, so it
+        # is final once it has none (TraceAssembler.cpp:350-366) — broken
+        # traces included — or once its TTL expires
+        closed = F.col("pending_edges_") == 0
         if self.pending_ttl_mc_seqnos is not None:
-            horizon_row = all_txs.agg(F.max("mc_block_seqno")).collect()[0][0]
-            if horizon_row is not None:
-                cutoff = horizon_row - self.pending_ttl_mc_seqnos
-                expired = pending.filter(F.col("mc_seqno_end") < cutoff)
-                pending = pending.filter(F.col("mc_seqno_end") >= cutoff)
-                final = final.unionByName(expired)
+            horizon = assembled.members.agg(F.max("mc_block_seqno")).first()[0]
+            if horizon is not None:
+                cutoff = horizon - self.pending_ttl_mc_seqnos
+                closed = closed | (F.col("mc_seqno_end") < cutoff)
+        # a trace without mc_seqno stays open rather than vanish from both
+        closed = F.coalesce(closed, F.lit(False))
 
-        # NO broadcast hints on the id-set joins: at block cadence these
-        # sets are tiny and AQE broadcasts them anyway, but a backfill or
-        # the 50-block backtrack path makes them arbitrarily large — a
-        # forced broadcast would OOM exactly when it matters.  AQE picks
-        # the strategy from the real runtime size.
-        final_ids = final.select("trace_id")
-        final_txs = tx_assign_full.join(
-            final_ids, "trace_id", "left_semi"
+        # every frame handed out below filters one of two materialized
+        # frames, so none references the state files replaced at the end
+        traces = assembled.traces
+        txs = assembled.members.select(
+            *_TX_STATE_COLS, "trace_id", closed.alias("closed")
+        )
+        # NO broadcast hint: at block cadence AQE broadcasts the small side
+        # anyway, but a backfill or the 50-block backtrack path makes it
+        # arbitrarily large — a forced broadcast would OOM exactly when it
+        # matters
+        msgs = all_msgs.join(
+            txs.select(F.col("hash").alias("tx_hash"), "trace_id", "closed"),
+            "tx_hash",
         ).localCheckpoint(eager=True)
-        final_msgs = (
-            all_msgs.join(
-                final_txs.select(F.col("hash").alias("tx_hash")),
-                "tx_hash",
-                "left_semi",
-            )
-            .join(
-                final_txs.select(F.col("hash").alias("tx_hash"), "trace_id"),
-                "tx_hash",
-            )
-            .localCheckpoint(eager=True)
-        )
 
-        # retain only rows belonging to still-pending traces; the provisional
-        # trace_id rides along so the pending overlay (T6) can classify and
-        # serve these traces before finalization
-        pending_tx = (
-            tx_assign_full.join(
-                pending.select("trace_id"), "trace_id", "left_semi"
-            ).select(*_TX_STATE_COLS, "trace_id")
-        )
-        pending_hashes = pending_tx.select(F.col("hash").alias("tx_hash"))
-        pending_msgs = all_msgs.join(pending_hashes, "tx_hash", "left_semi")
-        self._persist_state(pending_tx, pending_msgs, batch_id=batch_id)
+        def split(df: DataFrame, cols: list[str], final: bool) -> DataFrame:
+            return df.filter(
+                F.col("closed") if final else ~F.col("closed")
+            ).select(*cols)
 
+        tx_cols = [*_TX_STATE_COLS, "trace_id"]
+        msg_cols = [*_MSG_STATE_COLS, "trace_id"]
+        pending_txs = split(txs, tx_cols, False)
+        pending_msgs = split(msgs, msg_cols, False)
+        # the pending rows become the open-trace state; the provisional
+        # trace_id rides along on transactions so the pending overlay (T6)
+        # can classify and serve these traces before finalization
+        self._persist_state(
+            pending_txs, pending_msgs.select(*_MSG_STATE_COLS),
+            batch_id=batch_id,
+        )
         return BatchResult(
-            final_traces=final,
-            pending_traces=pending,
-            final_transactions=final_txs,
-            final_messages=final_msgs,
+            final_traces=traces.filter(closed),
+            pending_traces=traces.filter(~closed),
+            final_transactions=split(txs, tx_cols, True),
+            final_messages=split(msgs, msg_cols, True),
+            pending_transactions=pending_txs,
+            pending_messages=pending_msgs,
         )
 
     def open_trace_count(self) -> int:
