@@ -7,8 +7,9 @@ driver gates stayed green.  These tests run in <2 s without a JVM and are
 deliberately import-sensitive:
 
 * every registered matcher body is *executed* (not just imported) against
-  nodes that match nothing, so an unresolved name anywhere in the matcher
-  library fails here first;
+  nodes rooted at no opcode, an unknown one and every opcode the library
+  names, so an unresolved name anywhere in the matcher library fails here
+  first, and so does a matcher that matches outside its ``@opcodes``;
 * ``_classify_group`` re-raises engine errors (NameError/ImportError/
   AttributeError/UnboundLocalError) instead of masking them, and records a
   ``failure_reason`` for genuine data errors — mirroring the reference,
@@ -21,6 +22,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from ton_indexer_spark.classifier import base, protocols
 from ton_indexer_spark.classifier import matchers as M
 from ton_indexer_spark.classifier.classify import _ROW_COLS, _classify_group
 from ton_indexer_spark.classifier.matchers import MATCHERS, classify_tree
@@ -71,25 +73,43 @@ def _node(opcode=None, source=ACC[0], value=10**9, children=0,
     return n
 
 
+# every 32-bit opcode constant the matcher library names
+OPCODES = sorted({
+    v for mod in (base, M, protocols) for k, v in vars(mod).items()
+    if k.isupper() and type(v) is int and 0 <= v < 2**32
+})
 # node shapes chosen so opcode/value/child comparisons in every matcher
 # evaluate: never-matching opcode, no opcode, external root, children,
-# out-messages, aborted
+# out-messages, aborted — plus one node rooted at every named opcode,
+# which a keyed matcher must not match unless it declares that opcode
 SHAPES = [
     _node(opcode=0x0BADC0DE),
     _node(opcode=None, value=None),
     _node(opcode=0x0BADC0DE, source=None),
     _node(opcode=0x0BADC0DE, children=2, out_opcode=0x0BADC0D1),
     _node(opcode=0x0BADC0DE, aborted=True),
+    *(_node(opcode=op, children=2, out_opcode=0x0BADC0D1) for op in OPCODES),
 ]
 
 
 @pytest.mark.parametrize("name,matcher", MATCHERS, ids=[n for n, _ in MATCHERS])
 def test_every_matcher_body_executes(name, matcher):
-    """An unresolved name inside any matcher raises here, JVM-free."""
+    """An unresolved name inside any matcher raises here, JVM-free.  A
+    keyed matcher must also return None on every node whose root opcode
+    lies outside its ``@opcodes`` declaration, since the dispatch index
+    never offers it one."""
+    declared = getattr(matcher, "opcodes", None)
     for node in SHAPES:
         node.consumed = False
+        for child in node.children:
+            child.consumed = False
         res = matcher(node, dict(EMPTY_CTX))
         assert res is None or isinstance(res, dict)
+        if declared is not None and node.in_msg.opcode not in declared:
+            assert res is None, (
+                f"{name} matched opcode {node.in_msg.opcode!r} outside its "
+                f"declared {sorted(declared)}"
+            )
 
 
 def test_minimal_trace_classifies_without_spark():

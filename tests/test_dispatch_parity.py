@@ -1,11 +1,10 @@
 """Opcode-indexed dispatch ≡ full matcher scan (classifier/dispatch.py).
 
-The index derives each matcher's admitted opcode set from its own source
-(plus three justified explicit entries in matchers._build_index); these
-tests prove the derivation is conservative by replaying every reference
-golden fixture AND a synthetic corpus through BOTH dispatch paths and
-asserting identical actions — the same defense-in-depth the round-5
-verdict demanded for classifier changes.
+The index keys each matcher on the opcodes it declares with ``@opcodes``;
+these tests prove every declaration is conservative by replaying every
+reference golden fixture AND a synthetic corpus through BOTH dispatch
+paths and asserting identical actions — the same defense-in-depth the
+round-5 verdict demanded for classifier changes.
 """
 
 from __future__ import annotations
@@ -86,7 +85,7 @@ def test_synthetic_corpus_indexed_equals_full_scan():
     for r in C._records(df):
         groups.setdefault(r["trace_id"], []).append(r)
 
-    def run(use_index: bool) -> str:
+    def run(use_index: bool) -> list[tuple[str, str]]:
         outs = []
         for tid, rows in groups.items():
             ctx = {
@@ -99,74 +98,13 @@ def test_synthetic_corpus_indexed_equals_full_scan():
                 build_tree([dict(r) for r in rows]), ctx, use_index=use_index
             )
             outs.append((tid, _canon(flatten_actions(acts))))
-        return json.dumps(sorted(outs))
+        return sorted(outs)
 
     assert run(True) == run(False)
 
 
 class TestExtractorRules:
-    """The AST walker must key the canonical shapes and stay wildcard on
-    everything it can't prove."""
-
-    def test_negative_guard(self):
-        from ton_indexer_spark.classifier.dispatch import root_opcode_guard
-
-        X = 0xAB
-
-        def m(node, ctx):
-            if node.in_msg is None or node.in_msg.opcode != 0xAB:
-                return None
-            return {"type": "x"}
-
-        assert root_opcode_guard(m) == frozenset({X})
-
-    def test_branch_chain_with_terminal_none(self):
-        from ton_indexer_spark.classifier.dispatch import root_opcode_guard
-
-        def m(node, ctx):
-            op = node.in_msg.opcode
-            if op == 0x1:
-                kind = "a"
-            elif op == 0x2:
-                kind = "b"
-            else:
-                return None
-            return {"type": kind}
-
-        assert root_opcode_guard(m) == frozenset({0x1, 0x2})
-
-    def test_unprovable_shapes_stay_wildcard(self):
-        from ton_indexer_spark.classifier.dispatch import root_opcode_guard
-
-        def helper(node):
-            return None
-
-        def m1(node, ctx):  # helper call the walker can't follow
-            got = helper(node)
-            if got is None:
-                return None
-            return {"type": "x"}
-
-        def m2(node, ctx):  # fall-through after an unterminated chain
-            if node.in_msg.opcode == 0x5:
-                pass
-            return {"type": "y"}
-
-        assert root_opcode_guard(m1) is None
-        assert root_opcode_guard(m2) is None
-
-    def test_rebound_alias_not_trusted(self):
-        from ton_indexer_spark.classifier.dispatch import root_opcode_guard
-
-        def m(node, ctx):
-            op = node.in_msg.opcode
-            if node.in_msg.value:
-                op = 0x99  # rebind — tests on `op` are no longer the root op
-            if op != 0x7:
-                return None
-            return {"type": "x"}
-
-        assert root_opcode_guard(m) is None
+    """The index built from the matchers' ``@opcodes`` declarations."""
 
     def test_index_preserves_priority_order(self):
         pos = {name: i for i, (name, _) in enumerate(MATCHERS)}
@@ -177,8 +115,8 @@ class TestExtractorRules:
             assert order == sorted(order)
 
     def test_keyed_majority(self):
-        # the index only pays off if most matchers key; alert if a source
-        # refactor silently degrades extraction back toward full scans
+        # the index only pays off if most matchers key; alert if a
+        # refactor drops declarations and degrades toward full scans
         assert _INDEX.n_keyed >= 65, _INDEX.keys
 
 

@@ -139,10 +139,13 @@ def test_pending_ttl_evicts(spark, fixture_dir, tmp_path):
         spark, state_dir=str(tmp_path / "state"), pending_ttl_mc_seqnos=0
     )
     res = asm.process_batch(txs.drop("trace_id"), msgs)
-    # ttl=0 → every pending trace older than the horizon is evicted as final
+    # ttl=0 → every pending trace with an mc_seqno is evicted as final; only
+    # a trace without one may stay open
     states = {r["state"] for r in res.final_traces.collect()}
     assert "pending" in states
-    assert asm.open_trace_count() == 0 or res.pending_traces.count() >= 0
+    assert res.pending_traces.filter(
+        F.col("mc_seqno_end").isNotNull()
+    ).count() == 0
 
 
 def test_replayed_batch_is_idempotent(spark, fixture_dir, tmp_path):

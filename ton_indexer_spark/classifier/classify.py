@@ -594,6 +594,10 @@ class ClassifiedActions:
         return self._accounts_fn(self.actions)
 
     def unpersist(self) -> None:
+        """Release the persisted classify-stage output.  An output read
+        (or first built) after this call still answers correctly, but its
+        plan reads ``raw`` again, so the classify stage is recomputed: the
+        matcher UDF runs over the batch a second time."""
         if self._cached is not None:
             self._cached.unpersist()
 

@@ -1,367 +1,45 @@
 """Opcode-indexed matcher dispatch.
 
-``classify_tree`` historically ran every registered matcher on every
-node; with ~140 matchers and the guard-fail path dominated by the root
-opcode check, dispatch itself was the largest classify cost once the
-pandas boundary was removed (matchers.py profile: ~1.4M ``_op`` calls
-for a 23k-node corpus).
+Running every registered matcher on every node made dispatch the largest
+classify cost once the pandas boundary was removed (matchers.py profile:
+~1.4M ``_op`` calls for a 23k-node corpus), because most matchers reject
+a node on its root in-message opcode alone.
 
-Matchers overwhelmingly admit only specific root opcodes, in one of two
-shapes::
+Each such matcher declares the opcodes it admits where it is defined, as
+the reference's ``ContractMatcher(opcode)`` does::
 
-    if _op(node) != JETTON_TRANSFER:          # restricting guard
-        return None
-    ...
+    @opcodes(JETTON_TRANSFER, DEDUST_SWAP)
+    def match_dedust_swap(node, ctx): ...
 
-    op = _op(node)                            # contributing branches
-    if op == DEDUST_SWAP: ...
-    elif op == JETTON_TRANSFER: ...
-    else:
-        return None
-
-``root_opcode_guard`` derives the admitted opcode set per matcher with a
-conservative AST walk over the matcher source (so the index can never
-drift from the code):
-
-- a *restricting guard* — ``if <op> != X: return None`` (also ``not in``
-  and the ``node.in_msg is None or ...`` form) — intersects the
-  surviving-op set;
-- a *contributing if* — ``if <op> == X:`` / ``in (X, Y)`` / an ``or`` of
-  equalities / a recorded bool alias (``is_ton = op == X``) — admits its
-  constants (its body needs no inspection: it only runs under those
-  ops), and its ``elif``/``else`` chain is analyzed recursively;
-- any OTHER statement that can ``return`` a non-None value is a *leak*:
-  a match not provably under an op test.  A leak admits the whole
-  surviving set — and if no restricting guard bounded it, the matcher is
-  a wildcard (always dispatched).
-
-``<op>`` means exactly ``_op(node)``, ``node.in_msg.opcode``, or a pure
-local alias of either; opcode constants resolve through the function's
-globals and closure.  Anything the walker does not recognize errs toward
-over-admission — extra candidate calls, never a missed match.  A parity
-test additionally replays every reference golden fixture and a synthetic
-corpus through both dispatch paths (tests/test_dispatch_parity.py).
+A declaration is a promise that the matcher returns None for any node
+whose root opcode lies outside the set; a matcher without one is a
+wildcard and runs on every node.  ``OpcodeIndex`` reads the declarations
+and hands ``classify_tree`` only the candidates for a node's opcode, in
+registry priority order.  tests/test_dispatch_parity.py replays the
+golden fixtures and a synthetic corpus through both the index and the
+full scan, and tests/test_classifier_smoke.py checks each declaration
+against every matcher body.
 """
 
 from __future__ import annotations
 
-import ast
-import inspect
-import textwrap
 from collections.abc import Callable
 
-# sentinel for "all opcodes" (no restriction proven)
-_UNIVERSE = None
 
+def opcodes(*ops: int) -> Callable[[Callable], Callable]:
+    """Declare the root in-message opcodes a matcher can match on."""
 
-def _const_env(fn: Callable) -> dict[str, int]:
-    env = {k: v for k, v in fn.__globals__.items() if isinstance(v, int)}
-    if fn.__closure__:
-        for name, cell in zip(fn.__code__.co_freevars, fn.__closure__):
-            try:
-                v = cell.cell_contents
-            except ValueError:
-                continue
-            if isinstance(v, int):
-                env[name] = v
-    return env
+    def declare(fn: Callable) -> Callable:
+        fn.opcodes = frozenset(ops)
+        return fn
 
-
-class _Walker:
-    def __init__(self, env: dict[str, int], fdef: ast.AST):
-        self.env = env
-        self.msg_aliases: set[str] = set()   # m = node.in_msg
-        self.op_aliases: set[str] = set()    # op = _op(node)
-        self.bool_aliases: dict[str, frozenset[int]] = {}  # is_x = op == C
-        # an alias is only trustworthy if its name is stored EXACTLY once
-        # in the whole function — a rebind inside a branch would make a
-        # later test on the alias mean something else (under-admission)
-        stores: dict[str, int] = {}
-        for n in ast.walk(fdef):
-            if isinstance(n, ast.Name) and isinstance(
-                n.ctx, (ast.Store, ast.Del)
-            ):
-                stores[n.id] = stores.get(n.id, 0) + 1
-        self.single_store = {k for k, v in stores.items() if v == 1}
-
-    # -- expression classifiers ------------------------------------------
-    def is_in_msg(self, e: ast.expr) -> bool:
-        if isinstance(e, ast.Name) and e.id in self.msg_aliases:
-            return True
-        return (
-            isinstance(e, ast.Attribute)
-            and e.attr == "in_msg"
-            and isinstance(e.value, ast.Name)
-            and e.value.id == "node"
-        )
-
-    def is_op(self, e: ast.expr) -> bool:
-        if isinstance(e, ast.Name) and e.id in self.op_aliases:
-            return True
-        if (
-            isinstance(e, ast.Call)
-            and isinstance(e.func, ast.Name)
-            and e.func.id == "_op"
-            and len(e.args) == 1
-            and isinstance(e.args[0], ast.Name)
-            and e.args[0].id == "node"
-            and not e.keywords
-        ):
-            return True
-        return (
-            isinstance(e, ast.Attribute)
-            and e.attr == "opcode"
-            and self.is_in_msg(e.value)
-        )
-
-    def const(self, e: ast.expr) -> int | None:
-        if isinstance(e, ast.Constant) and isinstance(e.value, int):
-            return e.value
-        if isinstance(e, ast.Name):
-            v = self.env.get(e.id)
-            return v if isinstance(v, int) else None
-        return None
-
-    def consts(self, e: ast.expr) -> frozenset[int] | None:
-        if isinstance(e, (ast.Tuple, ast.List, ast.Set)):
-            vals = [self.const(x) for x in e.elts]
-            if vals and all(v is not None for v in vals):
-                return frozenset(vals)
-            return None
-        v = self.const(e)
-        return frozenset({v}) if v is not None else None
-
-    def eq_set(self, t: ast.expr) -> frozenset[int] | None:
-        """Opcodes admitted by a positive test (op == X / op in (...) /
-        bool alias / or-chain of those); None if not recognized."""
-        if isinstance(t, ast.Name) and t.id in self.bool_aliases:
-            return self.bool_aliases[t.id]
-        if isinstance(t, ast.BoolOp) and isinstance(t.op, ast.Or):
-            out: frozenset[int] = frozenset()
-            for part in t.values:
-                s = self.eq_set(part)
-                if s is None:
-                    return None
-                out |= s
-            return out
-        if isinstance(t, ast.Compare) and len(t.ops) == 1 and self.is_op(
-            t.left
-        ):
-            op, right = t.ops[0], t.comparators[0]
-            if isinstance(op, ast.Eq):
-                v = self.const(right)
-                return frozenset({v}) if v is not None else None
-            if isinstance(op, ast.In):
-                return self.consts(right)
-        return None
-
-    def restrict_set(self, t: ast.expr) -> frozenset[int] | None:
-        """Surviving opcodes if this test GUARDS a `return None` (op !=
-        X / op not in (...) / `node.in_msg is None or <those>`)."""
-        if isinstance(t, ast.BoolOp) and isinstance(t.op, ast.Or) and len(
-            t.values
-        ) == 2:
-            first, second = t.values
-            if (
-                isinstance(first, ast.Compare)
-                and len(first.ops) == 1
-                and isinstance(first.ops[0], ast.Is)
-                and self.is_in_msg(first.left)
-                and isinstance(first.comparators[0], ast.Constant)
-                and first.comparators[0].value is None
-            ):
-                return self.restrict_set(second)
-            return None
-        if isinstance(t, ast.Compare) and len(t.ops) == 1 and self.is_op(
-            t.left
-        ):
-            op, right = t.ops[0], t.comparators[0]
-            if isinstance(op, ast.NotEq):
-                v = self.const(right)
-                return frozenset({v}) if v is not None else None
-            if isinstance(op, ast.NotIn):
-                return self.consts(right)
-        return None
-
-    # -- statement analysis ----------------------------------------------
-    def record_alias(self, s: ast.stmt) -> bool:
-        if not (
-            isinstance(s, ast.Assign)
-            and len(s.targets) == 1
-            and isinstance(s.targets[0], ast.Name)
-        ):
-            return False
-        tgt = s.targets[0].id
-        if tgt not in self.single_store:
-            return False
-        if self.is_in_msg(s.value):
-            self.msg_aliases.add(tgt)
-            return True
-        if self.is_op(s.value):
-            self.op_aliases.add(tgt)
-            return True
-        eq = self.eq_set(s.value)
-        if eq is not None:
-            self.bool_aliases[tgt] = eq
-            return True
-        return False
-
-
-def _returns_value(stmts: list[ast.stmt]) -> bool:
-    """True if any reachable `return <non-None>` occurs (nested defs
-    excluded — their returns don't return from the matcher)."""
-    for s in stmts:
-        for n in ast.walk(_strip_defs(s)):
-            if isinstance(n, ast.Return) and not (
-                n.value is None
-                or (isinstance(n.value, ast.Constant) and n.value.value is None)
-            ):
-                return True
-    return False
-
-
-def _strip_defs(s: ast.stmt) -> ast.stmt:
-    class Stripper(ast.NodeTransformer):
-        def visit_FunctionDef(self, node):  # noqa: N802
-            return ast.Pass()
-
-        def visit_AsyncFunctionDef(self, node):  # noqa: N802
-            return ast.Pass()
-
-        def visit_Lambda(self, node):  # noqa: N802
-            return ast.Constant(value=None)
-
-    import copy
-
-    return Stripper().visit(copy.deepcopy(s))
-
-
-def _is_return_none(stmts: list[ast.stmt]) -> bool:
-    return (
-        len(stmts) == 1
-        and isinstance(stmts[0], ast.Return)
-        and (
-            stmts[0].value is None
-            or (
-                isinstance(stmts[0].value, ast.Constant)
-                and stmts[0].value.value is None
-            )
-        )
-    )
-
-
-def root_opcode_guard(fn: Callable) -> frozenset[int] | None:
-    """The opcode set a matcher can possibly match on, or None for
-    wildcard (dispatch on every opcode).  Conservative: unrecognized
-    shapes over-admit, never under-admit."""
-    try:
-        src = textwrap.dedent(inspect.getsource(fn))
-        fdef = ast.parse(src).body[0]
-    except (OSError, SyntaxError, IndexError):
-        return None
-    if not isinstance(fdef, (ast.FunctionDef, ast.AsyncFunctionDef)):
-        return None
-    w = _Walker(_const_env(fn), fdef)
-
-    def analyze(
-        stmts: list[ast.stmt], restrict: frozenset[int] | None
-    ) -> tuple[frozenset[int] | None, frozenset[int] | None, bool]:
-        """Returns (admitted, restrict_after, leaked_unbounded).
-        admitted None means wildcard-leak (unbounded)."""
-        admitted: frozenset[int] = frozenset()
-        for s in stmts:
-            if isinstance(s, (ast.Import, ast.ImportFrom, ast.Pass)):
-                continue
-            if isinstance(s, ast.Expr) and isinstance(s.value, ast.Constant):
-                continue  # docstring / bare literal
-            if w.record_alias(s):
-                continue
-            if isinstance(s, ast.Return):
-                if s.value is None or (
-                    isinstance(s.value, ast.Constant) and s.value.value is None
-                ):
-                    continue
-                # non-None return at this level: admits whatever survives
-                if restrict is _UNIVERSE:
-                    return None, restrict, True
-                admitted |= restrict
-                continue
-            if isinstance(s, ast.If):
-                # restricting guard: `if <neg op test>: return None`
-                if _is_return_none(s.body) and not s.orelse:
-                    r = w.restrict_set(s.test)
-                    if r is not None:
-                        restrict = (
-                            r if restrict is _UNIVERSE else restrict & r
-                        )
-                        continue
-                # walk the if/elif chain
-                cur, union, all_eq = s, frozenset(), True
-                while True:
-                    eq = w.eq_set(cur.test)
-                    if eq is not None:
-                        admitted |= (
-                            eq if restrict is _UNIVERSE else eq & restrict
-                        )
-                        union |= eq
-                    else:
-                        all_eq = False
-                        # unknown test: its body may match under any op
-                        if _returns_value(cur.body):
-                            if restrict is _UNIVERSE:
-                                return None, restrict, True
-                            admitted |= restrict
-                    orelse = cur.orelse
-                    if len(orelse) == 1 and isinstance(orelse[0], ast.If):
-                        cur = orelse[0]
-                        continue
-                    break
-                if _is_return_none(orelse):
-                    # `else: return None` — code after the chain only runs
-                    # when one of the branch tests passed; if every test
-                    # was a recognized op test, that bounds later returns
-                    if all_eq:
-                        restrict = (
-                            union
-                            if restrict is _UNIVERSE
-                            else restrict & union
-                        )
-                elif orelse:
-                    sub, _, leaked = analyze(orelse, restrict)
-                    if sub is None:
-                        return None, restrict, True
-                    admitted |= sub
-                continue
-            # any other statement: a leak only if it can return a value
-            if _returns_value([s]):
-                if restrict is _UNIVERSE:
-                    return None, restrict, True
-                admitted |= restrict
-        return admitted, restrict, False
-
-    body = fdef.body
-    admitted, restrict, leaked = analyze(body, _UNIVERSE)
-    if admitted is None:
-        return None
-    if not admitted:
-        # no non-None return found at all?  Shouldn't happen for a real
-        # matcher — treat as wildcard rather than "never dispatch"
-        return restrict if restrict is not _UNIVERSE else None
-    return admitted
+    return declare
 
 
 class OpcodeIndex:
     """Priority-preserving opcode dispatch over a (name, fn) registry."""
 
-    def __init__(
-        self,
-        matchers: list[tuple[str, Callable]],
-        explicit: dict[str, frozenset[int]] | None = None,
-    ):
-        """``explicit`` — manual keys for matchers whose guard lives
-        inside a helper call the AST walk can't follow (each entry must
-        carry a written justification at its definition site); they are
-        covered by the same both-paths parity tests as derived keys."""
+    def __init__(self, matchers: list[tuple[str, Callable]]):
         # keep both the source reference (identity staleness check) and a
         # snapshot copy (an in-place append to the source changes its
         # length relative to this copy, so callers detect that too)
@@ -371,11 +49,8 @@ class OpcodeIndex:
         self._wild: list[tuple[int, Callable]] = []
         self._keyed: dict[int, list[tuple[int, Callable]]] = {}
         self._cache: dict[int | None, list[Callable]] = {}
-        explicit = explicit or {}
         for pos, (name, fn) in enumerate(self.matchers):
-            ops = root_opcode_guard(fn)
-            if ops is None and name in explicit:
-                ops = explicit[name]
+            ops = getattr(fn, "opcodes", None)
             self.keys[name] = ops
             if ops is None:
                 self._wild.append((pos, fn))

@@ -53,6 +53,7 @@ from ton_indexer_spark.classifier.base import (  # noqa: F401  (re-exported)
     _jetton_chain,
     _op,
 )
+from ton_indexer_spark.classifier.dispatch import OpcodeIndex, opcodes
 from ton_indexer_spark.classifier.protocols import (
     PROTOCOL_MATCHERS,
     TAIL_MATCHERS,
@@ -113,6 +114,7 @@ JETTON_MINT_MINTER = 0x00000015   # standard minter mint entry
 JETTON_MINT_ALT = 0x642B7D07      # alternative minter mint entry
 
 
+@opcodes(JETTON_MINT_MINTER, JETTON_MINT_ALT)
 def match_jetton_mint_entry(node: Node, ctx: Ctx) -> dict | None:
     """Mint matched from the MINTER-side entry call (ops 0x15 /
     0x642b7d07, reference JettonMintBlockMatcher jettons.py:250-280).
@@ -179,6 +181,7 @@ def match_jetton_mint_entry(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(JETTON_INTERNAL)
 def match_jetton_mint(node: Node, ctx: Ctx) -> dict | None:
     """Internal transfer (0x178d4519) arriving at a jetton wallet DIRECTLY
     from its master (not from a peer wallet) = mint."""
@@ -252,6 +255,7 @@ def match_auction_bid(node: Node, ctx: Ctx) -> dict | None:
 TS_MINT_TOKENS = 0x1674B0A0  # mint jettons / mint NFT (staking.py:26-30)
 
 
+@opcodes(STAKE_DEPOSIT_OP)
 def match_stake_deposit(node: Node, ctx: Ctx) -> dict | None:
     """Tonstakers deposit (staking.py:132-176 TONStakersDepositMatcher):
     deposit request at the pool, minting tsTON back to the user; amount =
@@ -294,6 +298,7 @@ def match_stake_deposit(node: Node, ctx: Ctx) -> dict | None:
                  })
 
 
+@opcodes(JETTON_TRANSFER)
 def match_jetton_swap(node: Node, ctx: Ctx) -> dict | None:
     """DEX swap: a jetton-transfer chain INTO a pool account, whose notify
     triggers a second jetton-transfer chain OUT of the pool back to the
@@ -400,6 +405,7 @@ def match_jetton_swap(node: Node, ctx: Ctx) -> dict | None:
     return parent
 
 
+@opcodes(MULTISIG_NEW_ORDER)
 def match_multisig_create_order(node: Node, ctx: Ctx) -> dict | None:
     if node.in_msg is None or node.in_msg.opcode != MULTISIG_NEW_ORDER:
         return None
@@ -424,6 +430,7 @@ def match_multisig_create_order(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(JETTON_TRANSFER)
 def match_jetton_transfer(node: Node, ctx: Ctx) -> dict | None:
     """owner → sender-wallet (0x0f8a7ea5) → receiver-wallet (0x178d4519)
     [→ owner notify (0x7362d09c)] [→ excesses (0xd53276db)]
@@ -510,6 +517,7 @@ def match_jetton_transfer(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(JETTON_TRANSFER)
 def match_jetton_transfer_fallback(node: Node, ctx: Ctx) -> dict | None:
     """Transfer request with NO internal-transfer leg (wallet rejected or
     out-of-gas before spawning 0x178d4519) — still a user-intent transfer.
@@ -558,6 +566,7 @@ def match_jetton_transfer_fallback(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(JETTON_BURN)
 def match_jetton_burn(node: Node, ctx: Ctx) -> dict | None:
     if node.in_msg is None or node.in_msg.opcode != JETTON_BURN:
         return None
@@ -597,6 +606,7 @@ def _num(v):
         return None
 
 
+@opcodes(NFT_TRANSFER)
 def match_nft_transfer(node: Node, ctx: Ctx) -> dict | None:
     """old-owner → nft item (0x5fcc3d14) [→ new-owner (0x05138d91)],
     with the reference's purchase detection (nft.py:105-190): a transfer
@@ -732,6 +742,7 @@ def match_nft_transfer(node: Node, ctx: Ctx) -> dict | None:
     return act
 
 
+@opcodes(SUBSCRIPTION_PAY_RESPONSE, SUBSCRIPTION_PAYMENT)
 def match_subscription(node: Node, ctx: Ctx) -> dict | None:
     """Wallet-plugin subscription payment (subscriptions.py:28-59).
 
@@ -870,6 +881,7 @@ def match_multisig_approve(node: Node, ctx: Ctx) -> dict | None:
     return None
 
 
+@opcodes(CHANGE_DNS_OP)
 def match_change_dns(node: Node, ctx: Ctx) -> dict | None:
     """change_dns_record at a DNS item; an empty record payload means
     deletion (the reference's change_dns vs delete_dns distinction)."""
@@ -894,6 +906,7 @@ def match_change_dns(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(ELECTOR_NEW_STAKE, ELECTOR_RECOVER_STAKE)
 def match_election(node: Node, ctx: Ctx) -> dict | None:
     m = node.in_msg
     if m is None:
@@ -910,6 +923,7 @@ def match_election(node: Node, ctx: Ctx) -> dict | None:
     return None
 
 
+@opcodes(STAKE_WITHDRAW_OP)
 def match_stake_withdraw(node: Node, ctx: Ctx) -> dict | None:
     """Liquid-staking withdraw (staking.py TONStakersWithdraw family):
     a withdraw request at the pool; when the payout leg (pool_withdrawal
@@ -937,6 +951,7 @@ def match_stake_withdraw(node: Node, ctx: Ctx) -> dict | None:
                  staking_data=staking)
 
 
+@opcodes(VESTING_SEND, VESTING_ADD_WHITELIST)
 def match_vesting(node: Node, ctx: Ctx) -> dict | None:
     """Vesting wallet ops (vesting.py): send_message forwards an inner
     message (left unclaimed — it classifies as its own action, as in the
@@ -976,6 +991,7 @@ def match_vesting(node: Node, ctx: Ctx) -> dict | None:
                  **extra)
 
 
+@opcodes(UNSUBSCRIBE_OP)
 def match_unsubscribe(node: Node, ctx: Ctx) -> dict | None:
     """Wallet plugin destruct ('dstr') = unsubscribe
     (subscriptions.py:62-80): the subscription contract forwards the
@@ -988,6 +1004,7 @@ def match_unsubscribe(node: Node, ctx: Ctx) -> dict | None:
     return _base(node, "unsubscribe", destination=node.account)
 
 
+@opcodes(NFT_DISCOVERY)
 def match_nft_discovery(node: Node, ctx: Ctx) -> dict | None:
     """TEP-62 get_static_data → report_static_data round trip."""
     if node.in_msg is None or node.in_msg.opcode != NFT_DISCOVERY:
@@ -999,6 +1016,7 @@ def match_nft_discovery(node: Node, ctx: Ctx) -> dict | None:
     return _base(node, "nft_discovery", claimed=claimed, asset=node.account)
 
 
+@opcodes(JETTON_TRANSFER)
 def match_dex_deposit_liquidity(node: Node, ctx: Ctx) -> dict | None:
     """Provide-liquidity: a jetton-transfer chain INTO a pool whose
     notification makes the pool mint LP tokens straight from its own
@@ -1039,6 +1057,7 @@ def match_dex_deposit_liquidity(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(JETTON_BURN)
 def match_dex_withdraw_liquidity(node: Node, ctx: Ctx) -> dict | None:
     """Withdraw-liquidity: LP-token burn whose burn-notification lands at
     a pool, which pays the underlying assets back out (jetton chains
@@ -1181,6 +1200,7 @@ def match_nft_sale_purchase(node: Node, ctx: Ctx) -> dict | None:
     return match_nft_transfer(child, ctx)
 
 
+@opcodes(OWNERSHIP_ASSIGNED)
 def match_nft_ownership_notice(node: Node, ctx: Ctx) -> dict | None:
     """A bare ownership_assigned notification from a known NFT item is a
     transfer in its own right (nft.py:299-345 non-purchase arm of
@@ -1287,26 +1307,7 @@ MATCHERS: list[tuple[str, Callable[[Node, Ctx], dict | None]]] = [
 ]
 
 
-def _build_index():
-    from ton_indexer_spark.classifier.dispatch import OpcodeIndex
-
-    # explicit keys for matchers whose root guard lives inside a helper
-    # the AST walk can't follow; each is justified here and covered by
-    # tests/test_dispatch_parity.py:
-    # - jetton_swap / dex_deposit_liquidity open with _jetton_chain(node),
-    #   whose first guard requires node.in_msg.opcode == JETTON_TRANSFER
-    #   (base.py::_jetton_chain) and every later leg derives from it;
-    # - stonfi_swap opens with _transfer_shape(node), both of whose arms
-    #   require _op(node) == JETTON_TRANSFER (protocols.py:753-762).
-    explicit = {
-        "jetton_swap": frozenset({JETTON_TRANSFER}),
-        "dex_deposit_liquidity": frozenset({JETTON_TRANSFER}),
-        "stonfi_swap": frozenset({JETTON_TRANSFER}),
-    }
-    return OpcodeIndex(MATCHERS, explicit=explicit)
-
-
-_INDEX = _build_index()
+_INDEX = OpcodeIndex(MATCHERS)
 
 
 def classify_tree(
@@ -1318,10 +1319,10 @@ def classify_tree(
     (postprocess.py — reference event_processing.py:304-307).
 
     ``use_index`` — opcode-keyed candidate dispatch (dispatch.py);
-    priority order is preserved and the keys are derived from the
-    matcher guards themselves, so indexed ≡ full scan
-    (tests/test_dispatch_parity.py replays every golden fixture through
-    both).  The flag exists for that parity test."""
+    priority order is preserved and the keys are the opcodes each
+    matcher declares where it is defined (``@opcodes``), so indexed ≡
+    full scan (tests/test_dispatch_parity.py replays every golden fixture
+    through both).  The flag exists for that parity test."""
     from ton_indexer_spark.classifier.postprocess import run_post_processors
 
     if use_index:
@@ -1331,7 +1332,7 @@ def classify_tree(
             # mutated IN PLACE (MATCHERS[i] = ...) — the snapshot copy
             # compares element-wise, so any of the three re-derives the
             # index and a changed matcher is never dispatched stale
-            _INDEX = _build_index()
+            _INDEX = OpcodeIndex(MATCHERS)
     else:
         full_scan = [m for _, m in MATCHERS]
     actions: list[dict] = []

@@ -32,6 +32,7 @@ from ton_indexer_spark.classifier.base import (
     _jetton_chain,
     _op,
 )
+from ton_indexer_spark.classifier.dispatch import opcodes
 from ton_indexer_spark.classifier.tree import Node
 
 # --- DeDust (messages/swaps.py:81-127, messages/liquidity.py:17-96)
@@ -249,52 +250,11 @@ def _simple(opcode: int, typ: str, **static):
     """Factory for single-node opcode matchers (the reference's
     ``ContractMatcher(opcode)`` leaf shape, basic_matchers.py analog)."""
 
+    @opcodes(opcode)
     def match(node: Node, ctx: Ctx) -> dict | None:
         if _op(node) != opcode:
             return None
         return _base(node, typ, **static)
-
-    match.__name__ = f"match_{typ}"
-    return match
-
-
-def _has_payload_struct(typ: str) -> bool:
-    """True iff ACTIONS_OUT_SCHEMA serializes a `{typ}_data` struct —
-    derived from the schema (lazy import: classify imports this module)
-    so the log matchers can never attach a payload the serializer would
-    silently drop."""
-    from ton_indexer_spark.classifier.classify import _PAYLOAD_STRUCTS
-
-    return any(f.name == f"{typ}_data" for f in _PAYLOAD_STRUCTS)
-
-
-def _log_event(opcode: int, typ: str):
-    """Factory for log-only matchers: the action is evidenced by an
-    external-out event message (tgBTC / LayerZero logs — the reference's
-    *LogOnlyMatcher family)."""
-
-    def match(node: Node, ctx: Ctx) -> dict | None:
-        if opcode not in node.out_opcodes():
-            return None
-        # the event payload IS the action data (reference *LogOnlyMatcher
-        # parses the log body, e.g. tgbtc.py TgBTCMintLogOnlyMatcher):
-        # decode the emitting out-message and carry its fields — but only
-        # for types with a serialized payload struct; attaching a key the
-        # actions schema lacks would be silently dropped downstream
-        data = None
-        if _has_payload_struct(typ):
-            ev = next(
-                (m for m in node.out_msgs if m.opcode == opcode), None
-            )
-            if ev is not None:
-                decoded = ev.decoded_body()
-                data = {
-                    k: v for k, v in decoded.items() if k != "opcode"
-                } or None
-        return _base(
-            node, typ, destination=node.account,
-            **({f"{typ}_data": data} if data else {}),
-        )
 
     match.__name__ = f"match_{typ}"
     return match
@@ -306,6 +266,7 @@ def _log_event(opcode: int, typ: str):
 DEDUST_SWAP_NOTIFICATION = 0x9C610DE3  # pool success event (swaps.py:81)
 
 
+@opcodes(DEDUST_SWAP, JETTON_TRANSFER)
 def match_dedust_swap(node: Node, ctx: Ctx) -> dict | None:
     """DeDust swap, TON or jetton entry (swaps.py:479-686
     DedustSwapBlockMatcher): vault → swap_external at the pool [→ peer
@@ -642,6 +603,7 @@ def match_dedust_deposit_liquidity(node: Node, ctx: Ctx) -> dict | None:
     return act
 
 
+@opcodes(JETTON_BURN)
 def match_dedust_withdraw_liquidity(node: Node, ctx: Ctx) -> dict | None:
     """LP burn whose burn-notify pool answers with DeDust payouts
     (0x474f86cf) — distinguishes the DeDust shape from the generic
@@ -688,58 +650,6 @@ def match_dedust_withdraw_liquidity(node: Node, ctx: Ctx) -> dict | None:
 # ------------------------------------------------------------------ Ston.fi
 
 
-def _router_swap(node: Node, ctx: Ctx, swap_op: int, pay_op: int,
-                 dex: str) -> dict | None:
-    """Ston.fi-shaped swap: pool receives swap op, answers with a payment
-    request to the router which pays the user out (swaps.py:8-64)."""
-    if _op(node) != swap_op:
-        return None
-    claimed = [node]
-    pay = node.child_via(pay_op)
-    out_chain = None
-    if pay is not None:
-        claimed.append(pay)
-        for c in pay.children:
-            out_chain = _jetton_chain(c, ctx)
-            if out_chain is not None:
-                claimed += out_chain["claimed"]
-                break
-    body = node.in_msg.decoded_body()
-    return _base(
-        node,
-        "jetton_swap",
-        claimed=claimed,
-        source=body.get("user", node.in_msg.source),
-        destination=out_chain["dest_owner"] if out_chain else None,
-        amount=body.get("amount"),
-        jetton_swap_data={
-            "dex": dex,
-            "sender": body.get("user", node.in_msg.source),
-            "amount_in": body.get("amount"),
-            "asset_in": body.get("asset_in"),
-            "amount_out": out_chain["amount"] if out_chain else None,
-            "asset_out": out_chain["asset"] if out_chain else None,
-            "peer_address": node.account,
-            "min_out_amount": body.get("min_out"),
-            "peer_swaps": [],
-            "dex_incoming_transfer": {
-                "amount": body.get("amount"),
-                "asset": body.get("asset_in"),
-                "source": body.get("user", node.in_msg.source),
-                "destination": node.account,
-            },
-            "dex_outgoing_transfer": {
-                "amount": out_chain["amount"],
-                "asset": out_chain["asset"],
-                "source": node.account,
-                "destination": out_chain["dest_owner"],
-                "source_jetton_wallet": out_chain["sender_wallet"],
-                "destination_jetton_wallet": out_chain["receiver_wallet"],
-            } if out_chain else None,
-        },
-    )
-
-
 # stonfi v1 payment-request exit codes (swaps.py:62-71)
 STONFI_EXIT_OK = 0xC64370E5
 STONFI_EXIT_OK_REF = 0x45078540
@@ -781,6 +691,7 @@ def _transfer_shape(node: Node, ctx: Ctx) -> dict | None:
     }
 
 
+@opcodes(JETTON_TRANSFER)
 def match_stonfi_swap(node: Node, ctx: Ctx) -> dict | None:
     """Ston.fi v1 swap, anchored at the entry jetton/pTON transfer into
     the router (reference StonfiSwapBlockMatcher, swaps.py:81-209): the
@@ -905,6 +816,7 @@ STONFI_V2_POOL_SWAP = 0x6664DE2A   # pool swap entry (swaps.py:234)
 STONFI_V2_EXIT_OK = 0xC64370E5
 
 
+@opcodes(JETTON_TRANSFER, PTON_TRANSFER)
 def match_stonfi_v2_swap(node: Node, ctx: Ctx) -> dict | None:
     """Ston.fi v2 swap, single- or multi-hop (swaps.py:233-477
     StonfiV2SwapBlockMatcher): anchored at the INPUT transfer (jetton
@@ -1028,6 +940,7 @@ STONFI_V2_ACCOUNT_ADD = 0x50C6A654  # account add-liquidity (liquidity.py:716)
 STONFI_V2_CB_ADD = 0x06ECD527       # pool cb_add_liquidity (liquidity.py:711)
 
 
+@opcodes(JETTON_TRANSFER, STONFI_V2_PROVIDE_LIQUIDITY, PTON_TRANSFER)
 def match_stonfi_v2_provide_liquidity(node: Node, ctx: Ctx) -> dict | None:
     """Ston.fi v2 liquidity provision (liquidity.py:687-785
     StonfiV2ProvideLiquidityMatcher): anchored at the entry transfer
@@ -1117,6 +1030,7 @@ def match_stonfi_v2_provide_liquidity(node: Node, ctx: Ctx) -> dict | None:
     return act
 
 
+@opcodes(PTON_TRANSFER)
 def match_pton_transfer(node: Node, ctx: Ctx) -> dict | None:
     """pTON (proxy-TON) transfer wraps plain TON movement in the jetton
     interface; the reference surfaces it as a ton_transfer
@@ -1190,6 +1104,7 @@ def _tonco_transfer_out(c: Node, ctx: Ctx, swap_op: int = TONCO_SWAP) -> dict | 
     }
 
 
+@opcodes(JETTON_TRANSFER, PTON_TRANSFER)
 def match_tonco_swap(node: Node, ctx: Ctx) -> dict | None:
     """Tonco swap, single- or multi-hop (swaps.py:687-1230
     ToncoSwapBlockMatcher): anchored at the INPUT transfer (jetton chain
@@ -1398,6 +1313,7 @@ def _tonco_payout_leg(c: Node, ctx: Ctx) -> dict | None:
     }
 
 
+@opcodes(JETTON_TRANSFER, PTON_TRANSFER)
 def match_tonco_deposit_liquidity(node: Node, ctx: Ctx) -> dict | None:
     """Tonco concentrated-liquidity deposit
     (liquidity.py:928-1185 ToncoDepositLiquidityMatcher), anchored at the
@@ -1535,6 +1451,7 @@ def match_tonco_deposit_liquidity(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(TONCO_START_BURN)
 def match_tonco_withdraw_liquidity(node: Node, ctx: Ctx) -> dict | None:
     """Tonco position burn → two router payouts
     (liquidity.py:1218-1505 ToncoWithdrawLiquidityMatcher): anchored at
@@ -1627,6 +1544,7 @@ def match_tonco_withdraw_liquidity(node: Node, ctx: Ctx) -> dict | None:
     return act
 
 
+@opcodes(TONCO_CREATE_POOL)
 def match_tonco_deploy_pool(node: Node, ctx: Ctx) -> dict | None:
     """ROUTERV3_CREATE_POOL → POOLV3_INIT (+excesses)
     (liquidity.py:1535-1620 ToncoDeployPoolBlockMatcher): the action's
@@ -1674,6 +1592,7 @@ COFFEE_SWAP_EVENT = 0xC0FFEE30
 COFFEE_NOTIFICATION_OP = 0xC0FFEE36
 
 
+@opcodes(JETTON_TRANSFER, COFFEE_SWAP_NATIVE)
 def match_coffee_swap(node: Node, ctx: Ctx) -> dict | None:
     """swap.coffee swap (swaps.py:1231-1448 CoffeeSwapBlockMatcher):
     entry jetton chain into the vault or a native swap call, then
@@ -1825,6 +1744,7 @@ COFFEE_DEPOSIT_INTERNAL = 0xC0FFEE29    # messages/coffee.py:846-858
 COFFEE_DEPOSIT_EVENT = 0xC0FFEE33       # messages/coffee.py:520-539
 
 
+@opcodes(COFFEE_DEPOSIT_NATIVE, JETTON_TRANSFER)
 def match_coffee_deposit_liquidity(node: Node, ctx: Ctx) -> dict | None:
     """swap.coffee two-sided deposit (liquidity.py:1640-1816
     CoffeeDepositLiquidityMatcher): each asset leg (native vault call or
@@ -1951,6 +1871,7 @@ def match_coffee_deposit_liquidity(node: Node, ctx: Ctx) -> dict | None:
     return act
 
 
+@opcodes(COFFEE_WITHDRAW_DEPOSIT)
 def match_coffee_withdraw_liquidity(node: Node, ctx: Ctx) -> dict | None:
     if _op(node) != COFFEE_WITHDRAW_DEPOSIT:
         return None
@@ -1974,6 +1895,7 @@ def match_coffee_withdraw_liquidity(node: Node, ctx: Ctx) -> dict | None:
 COFFEE_WITHDRAW_EVENT = 0xC0FFEE35
 
 
+@opcodes(JETTON_BURN)
 def match_coffee_lp_withdraw(node: Node, ctx: Ctx) -> dict | None:
     """swap.coffee LP burn withdrawal (liquidity.py:1838-1968
     CoffeeWithdrawLiquidityMatcher): LP jetton burn → pool burn notify
@@ -2051,6 +1973,7 @@ def match_coffee_lp_withdraw(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COFFEE_CREATE_VAULT)
 def match_coffee_create_vault(node: Node, ctx: Ctx) -> dict | None:
     """create_vault#c0ffee06 at the factory, deploying the vault
     (liquidity.py:1991-2027 CoffeeCreateVaultMatcher): the action's
@@ -2294,6 +2217,7 @@ def _evaa_comment_child(node: Node) -> Node | None:
     return None
 
 
+@opcodes(EVAA_SUPPLY_MASTER, JETTON_TRANSFER)
 def match_evaa_supply(node: Node, ctx: Ctx) -> dict | None:
     """EVAA supply, TON and jetton arms (blocks/evaa.py:119-316
     EvaaSupplyBlockMatcher): anchored at the supply_master#1 call (TON) or
@@ -2392,6 +2316,7 @@ def match_evaa_supply(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(EVAA_WITHDRAW_MASTER)
 def match_evaa_withdraw(node: Node, ctx: Ctx) -> dict | None:
     """EVAA withdraw (blocks/evaa.py:340-565 EvaaWithdrawBlockMatcher):
     withdraw_master#2 -> headered withdraw_user#21 on the user contract ->
@@ -2504,6 +2429,7 @@ def match_evaa_withdraw(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(EVAA_LIQUIDATE_MASTER)
 def match_evaa_liquidate(node: Node, ctx: Ctx) -> dict | None:
     if _op(node) != EVAA_LIQUIDATE_MASTER:
         return None
@@ -2590,6 +2516,7 @@ def _jvault_assets(stake_wallet: str, ctx: Ctx):
     return pool, asset, minter
 
 
+@opcodes(JETTON_TRANSFER)
 def match_jvault_stake(node: Node, ctx: Ctx) -> dict | None:
     """JVault stake (blocks/jvault.py:104-183 JVaultStakeBlockMatcher):
     anchored at the entry jetton transfer whose pool notify triggers
@@ -2704,6 +2631,7 @@ def match_jvault_unstake_request(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(JVAULT_CLAIM)
 def match_jvault_claim(node: Node, ctx: Ctx) -> dict | None:
     """Claim rewards (blocks/jvault.py:317-371): stake wallet forwards
     send_claimed_rewards to the pool, which pays the reward jettons out
@@ -2749,6 +2677,7 @@ TS_INIT_NFT = 0x132F9A45           # payout NFT init (staking.py:33-34)
 TS_ASSET_DISTRIBUTION = 0x1140A64F  # start distribution (staking.py:287)
 
 
+@opcodes(JETTON_BURN)
 def match_tonstakers_withdraw(node: Node, ctx: Ctx) -> dict | None:
     """Tonstakers withdraw via tsTON burn (staking.py:178-243
     TONStakersWithdrawMatcher): wallet burn -> burn notification ->
@@ -2806,6 +2735,7 @@ def match_tonstakers_withdraw(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(TS_NFT_BURN_NOTIFICATION)
 def match_tonstakers_delayed_withdrawal(node: Node, ctx: Ctx) -> dict | None:
     """Payout-NFT burn releasing the delayed withdrawal
     (staking.py:245-300 TONStakersDelayedWithdrawalMatcher): nft burn ->
@@ -3036,6 +2966,7 @@ def match_tgbtc_burn(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(TGBTC_NEW_KEY_CALL)
 def match_tgbtc_new_key(node: Node, ctx: Ctx) -> dict | None:
     """tgBTC DKG new-key announcement (tgbtc.py:270-332
     TgBTCNewKeyBlockMatcher): the coordinator's dkg-completed log rides on
@@ -3164,6 +3095,7 @@ def match_layerzero_send(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(LZ_RECEIVE_PREPARE)
 def match_layerzero_receive(node: Node, ctx: Ctx) -> dict | None:
     """LayerZero lzReceive (layerzero.py:338-424): receive-prepare at the
     channel → OApp prepare → receive lock → execute → OApp execute
@@ -3203,6 +3135,7 @@ def match_layerzero_receive(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(LZ_ULN_COMMIT)
 def match_layerzero_commit_packet(node: Node, ctx: Ctx) -> dict | None:
     """LayerZero packet-verification commit (layerzero.py:424-506):
     uln commit → uln-connection commit → endpoint commit → channel
@@ -3291,6 +3224,7 @@ def _cocoon_client_tail(node: Node) -> "tuple[list[Node], Node | None, Node | No
     return claimed, creq, payout
 
 
+@opcodes(COCOON_PAYOUT_PAYLOAD, COCOON_LAST_PAYOUT_PAYLOAD)
 def match_cocoon_worker_payout(node: Node, ctx: Ctx) -> dict | None:
     """[Last]PayoutPayload at the worker → WorkerProxyRequest back to the
     proxy with the payout + excesses (blocks/cocoon.py:67-222)."""
@@ -3334,6 +3268,7 @@ def match_cocoon_worker_payout(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COCOON_EXT_PROXY_PAYOUT)
 def match_cocoon_proxy_payout(node: Node, ctx: Ctx) -> dict | None:
     """ExtProxyPayoutRequest at the proxy → payout + excesses
     (blocks/cocoon.py:241-314)."""
@@ -3363,6 +3298,7 @@ def match_cocoon_proxy_payout(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COCOON_CHARGE_PAYLOAD)
 def match_cocoon_proxy_charge(node: Node, ctx: Ctx) -> dict | None:
     """ChargePayload at the proxy → excesses + (usually aborted) client
     request (blocks/cocoon.py:336-414)."""
@@ -3390,6 +3326,7 @@ def match_cocoon_proxy_charge(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COCOON_EXT_CLIENT_TOPUP)
 def match_cocoon_client_top_up(node: Node, ctx: Ctx) -> dict | None:
     """ExtClientTopUp at the client → proxy request + excesses
     (blocks/cocoon.py:435-508)."""
@@ -3412,6 +3349,7 @@ def match_cocoon_client_top_up(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COCOON_REGISTER_PROXY)
 def match_cocoon_register_proxy(node: Node, ctx: Ctx) -> dict | None:
     """RegisterProxy at the root (blocks/cocoon.py:527-576)."""
     if _op(node) != COCOON_REGISTER_PROXY:
@@ -3432,6 +3370,7 @@ def match_cocoon_register_proxy(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COCOON_UNREGISTER_PROXY)
 def match_cocoon_unregister_proxy(node: Node, ctx: Ctx) -> dict | None:
     """UnregisterProxy at the root (blocks/cocoon.py:597-648)."""
     if _op(node) != COCOON_UNREGISTER_PROXY:
@@ -3455,6 +3394,7 @@ def match_cocoon_unregister_proxy(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COCOON_OWNER_CLIENT_REGISTER)
 def match_cocoon_client_register(node: Node, ctx: Ctx) -> dict | None:
     """OwnerClientRegister at the client (blocks/cocoon.py:670-760)."""
     if _op(node) != COCOON_OWNER_CLIENT_REGISTER:
@@ -3477,6 +3417,7 @@ def match_cocoon_client_register(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COCOON_CHANGE_SECRET_HASH)
 def match_cocoon_client_change_secret_hash(node: Node, ctx: Ctx) -> dict | None:
     """OwnerClientChangeSecretHash at the client (blocks/cocoon.py)."""
     if _op(node) != COCOON_CHANGE_SECRET_HASH:
@@ -3499,6 +3440,7 @@ def match_cocoon_client_change_secret_hash(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COCOON_INCREASE_STAKE)
 def match_cocoon_client_increase_stake(node: Node, ctx: Ctx) -> dict | None:
     """OwnerClientIncreaseStake at the client (blocks/cocoon.py)."""
     if _op(node) != COCOON_INCREASE_STAKE:
@@ -3522,6 +3464,7 @@ def match_cocoon_client_increase_stake(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COCOON_CLIENT_WITHDRAW_OP)
 def match_cocoon_client_withdraw(node: Node, ctx: Ctx) -> dict | None:
     """OwnerClientWithdraw at the client; the refunded amount rides in
     the ClientProxyRequest's RefundGranted payload
@@ -3551,6 +3494,7 @@ def match_cocoon_client_withdraw(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COCOON_GRANT_REFUND_PAYLOAD)
 def match_cocoon_grant_refund(node: Node, ctx: Ctx) -> dict | None:
     """GrantRefundPayload proxy→client, paying the refund out through the
     client's proxy request (blocks/cocoon.py:1104-1219)."""
@@ -3582,6 +3526,7 @@ def match_cocoon_grant_refund(node: Node, ctx: Ctx) -> dict | None:
 
 # -------------------------------------------------------- NFT / DNS extras
 
+@opcodes(TELEITEM_START_AUCTION)
 def match_teleitem_start_auction(node: Node, ctx: Ctx) -> dict | None:
     """Start-auction at a teleitem: the auction config (bids, duration)
     decodes from the body ref (TeleitemStartAuction, messages/nft.py:
@@ -3611,6 +3556,7 @@ match_dns_release = _simple(DNS_RELEASE, "dns_release")
 match_nft_update_sale = _simple(NFT_SALE_UPDATE, "nft_update_sale")
 
 
+@opcodes(AUCTION_FILL_UP)
 def match_teleitem_purchase(node: Node, ctx: Ctx) -> dict | None:
     """Fragment (telegram) auction fill-up at the item itself: the item acts
     as its own auction; ownership-assigned leg completes the purchase
@@ -3662,6 +3608,7 @@ def match_auction_outbid(node: Node, ctx: Ctx) -> dict | None:
 # ------------------------------------------------------------------ Ethena
 
 
+@opcodes(JETTON_TRANSFER)
 def match_ethena_withdrawal_request(node: Node, ctx: Ctx) -> dict | None:
     """USDe transfer whose chain mints a timelocked tsUSDe position:
     transfer → internal → notify → mint → tsUSDe leg (0xb2583ed5)
@@ -3699,6 +3646,7 @@ def match_ethena_withdrawal_request(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(JETTON_TRANSFER)
 def match_ethena_deposit(node: Node, ctx: Ctx) -> dict | None:
     """USDe transfer answered by a tsUSDe mint (0x642b7d07) from the pool
     (EthenaDepositBlockMatcher, ethena_staking.py:109-160).  Serialized as
@@ -3739,6 +3687,7 @@ def match_ethena_deposit(node: Node, ctx: Ctx) -> dict | None:
 # ------------------------------------------------- swap.coffee staking/MEV
 
 
+@opcodes(JETTON_TRANSFER)
 def match_coffee_staking_deposit(node: Node, ctx: Ctx) -> dict | None:
     """Jetton transfer into the staking pool → pool call (0xf9471134,
     optionally duplicated as a log) → position-NFT mint
@@ -3783,6 +3732,7 @@ def match_coffee_staking_deposit(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COFFEE_STAKING_WITHDRAW)
 def match_coffee_staking_withdraw(node: Node, ctx: Ctx) -> dict | None:
     """withdraw_1 at the position NFT → withdraw_2 (master) → withdraw_3
     (pool) → jetton transfer back to the owner; all three hops share
@@ -3830,6 +3780,7 @@ def match_coffee_staking_withdraw(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COFFEE_STAKING_CLAIM)
 def match_coffee_staking_claim_rewards(node: Node, ctx: Ctx) -> dict | None:
     """Admin claim (0xb30c7310) at the pool paying rewards out via a
     jetton transfer (CoffeeStakingClaimRewardsMatcher, staking.py:636-700)."""
@@ -3864,6 +3815,7 @@ def match_coffee_staking_claim_rewards(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COFFEE_MEV_HOLD_FUNDS)
 def match_coffee_mev_protect_hold_funds(node: Node, ctx: Ctx) -> dict | None:
     """TON sent into the MEV-protect escrow (0x6bc79e7e), optionally with
     a service-fee leg (CoffeeMevProtectHoldFundsMatcher,
@@ -3883,6 +3835,7 @@ def match_coffee_mev_protect_hold_funds(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(COFFEE_MEV_FAILED_SWAP)
 def match_coffee_mev_protect_failed_swap(node: Node, ctx: Ctx) -> dict | None:
     """MEV-protect refund of a failed protected swap (0xee51ce51,
     CoffeeMevProtectFailedSwapMatcher, liquidity.py:2342-2384)."""
@@ -3901,6 +3854,7 @@ def match_coffee_mev_protect_failed_swap(node: Node, ctx: Ctx) -> dict | None:
 # ------------------------------------------------------- Ston.fi v2 extras
 
 
+@opcodes(JETTON_BURN)
 def match_stonfi_v2_withdraw_liquidity(node: Node, ctx: Ctx) -> dict | None:
     """LP burn → pool withdraw_liquidity (0x297437cf) → router payouts
     (0x657b54f5) → jetton transfers to the user
@@ -3959,6 +3913,7 @@ def match_stonfi_v2_withdraw_liquidity(node: Node, ctx: Ctx) -> dict | None:
 # ------------------------------------------------------- LayerZero extras
 
 
+@opcodes(JETTON_TRANSFER)
 def match_layerzero_send_tokens(node: Node, ctx: Ctx) -> dict | None:
     """Jetton transfer whose chain drives an endpoint send — surfaced as
     one layerzero_send_tokens action instead of transfer + send
@@ -3994,6 +3949,7 @@ def match_layerzero_send_tokens(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(LZ_DVN_VERIFY)
 def match_layerzero_dvn_verify(node: Node, ctx: Ctx) -> dict | None:
     """DVN verify (0xa0d51a8d) → proxy call → ULN verify → ULN-connection
     verify (LayerZeroDvnVerifyMatcher, blocks/layerzero.py:508-560)."""
@@ -4068,6 +4024,7 @@ def match_cocoon_client_request_refund(node: Node, ctx: Ctx) -> dict | None:
 # --------------------------------------------------- NFT / DNS additions
 
 
+@opcodes(AUCTION_FILL_UP)
 def match_dns_purchase(node: Node, ctx: Ctx) -> dict | None:
     """Auction fill-up (0x370fec51) at a .ton DNS item — the DNS analog
     of the fragment purchase (DnsPurchaseMatcher, auction.py:545-585).
@@ -4092,6 +4049,7 @@ def match_dns_purchase(node: Node, ctx: Ctx) -> dict | None:
     )
 
 
+@opcodes(TELEITEM_CANCEL_AUCTION)
 def match_teleitem_cancel_auction(node: Node, ctx: Ctx) -> dict | None:
     """teleitem_cancel_auction (0x371638ae) at an NFT item with the
     optional teleitem_ok ack (TeleitemCancelAuctionMatcher,

@@ -3760,22 +3760,6 @@ def _coffee_creation_params(s: "Slice") -> dict:
     return d
 
 
-def decode_coffee_pool_creator_request(raw: bytes | str) -> dict | None:
-    """create_pool_creator_request#c0ffee23: amount, pool asset pair,
-    recipient and the acting sender (messages/coffee.py:713-731)."""
-    try:
-        s = parse_boc(raw).begin_parse()
-        if s.load_uint(32) != 0xC0FFEE23:
-            return None
-        d = {"query_id": s.load_uint(64), "amount": s.load_coins()}
-        d.update(_coffee_pool_params(s))
-        d.update(_coffee_creation_params(s))
-        d["sender"] = s.load_address()
-        return d
-    except Exception:
-        return None
-
-
 def decode_coffee_pool_request(raw: bytes | str) -> dict | None:
     """create_pool_request#c0ffee25: both amounts + the other leg's
     initiator (messages/coffee.py:752-775)."""

@@ -38,94 +38,6 @@ def _b64(payload: dict) -> str:
     ).decode()
 
 
-def _fixture_rows():
-    """(tx rows, msg rows, body rows) for four deterministic traces."""
-    from ton_indexer_spark.classifier.matchers import (
-        EXCESSES,
-        JETTON_INTERNAL,
-        JETTON_NOTIFY,
-        JETTON_TRANSFER,
-    )
-
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt, *, aborted=False):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, aborted,
-                    "active", "active", trace))
-        return h
-
-    def msg(trace, tx_hash, tx_lt, n, direction, source, destination,
-            value=None, opcode=None, body=None):
-        mh = f"{trace}-m{n}"
-        bh = None
-        if body is not None:
-            bh = f"bh-{mh}"
-            bodies.append((bh, body))
-        msgs.append((trace, tx_hash, tx_lt, mh, direction, source,
-                     destination, value, opcode, tx_lt - 2, bh))
-        return mh
-
-    # gt1: external root wallet tx → simple value transfer w/ comment
-    r = tx("gt1", 1, ACC[0], 100)
-    msg("gt1", r, 100, 1, "in", None, ACC[0])
-    m = msg("gt1", r, 100, 2, "out", ACC[0], ACC[1], value=10**9, opcode=0,
-            body=_b64({"comment": "gate check"}))
-    t = tx("gt1", 2, ACC[1], 110)
-    msgs.append(("gt1", t, 110, m, "in", ACC[0], ACC[1], 10**9, 0, 101,
-                 f"bh-{m}"))
-
-    # gt2: TEP-74 jetton transfer — owner→W1(transfer)→W2(internal)
-    #      →notify(new owner) + excesses(old owner)
-    r = tx("gt2", 1, ACC[0], 200)
-    msg("gt2", r, 200, 1, "in", None, ACC[0])
-    body = _b64({"amount": 5000, "destination": ACC[1]})
-    m = msg("gt2", r, 200, 2, "out", ACC[0], W1, value=10**8,
-            opcode=JETTON_TRANSFER, body=body)
-    t1 = tx("gt2", 2, W1, 210)
-    msgs.append(("gt2", t1, 210, m, "in", ACC[0], W1, 10**8,
-                 JETTON_TRANSFER, 201, f"bh-{m}"))
-    m2 = msg("gt2", t1, 210, 3, "out", W1, W2, value=10**7,
-             opcode=JETTON_INTERNAL)
-    t2 = tx("gt2", 3, W2, 220)
-    msgs.append(("gt2", t2, 220, m2, "in", W1, W2, 10**7,
-                 JETTON_INTERNAL, 211, None))
-    m3 = msg("gt2", t2, 220, 4, "out", W2, ACC[1], value=1,
-             opcode=JETTON_NOTIFY)
-    t3 = tx("gt2", 4, ACC[1], 230)
-    msgs.append(("gt2", t3, 230, m3, "in", W2, ACC[1], 1,
-                 JETTON_NOTIFY, 221, None))
-    m4 = msg("gt2", t2, 220, 5, "out", W2, ACC[0], value=2,
-             opcode=EXCESSES)
-    t4 = tx("gt2", 5, ACC[0], 240)
-    msgs.append(("gt2", t4, 240, m4, "in", W2, ACC[0], 2,
-                 EXCESSES, 222, None))
-
-    # gt3: unmatched internal call → call_contract
-    r = tx("gt3", 1, ACC[2], 300)
-    msg("gt3", r, 300, 1, "in", None, ACC[2])
-    m = msg("gt3", r, 300, 2, "out", ACC[2], ACC[3], value=5,
-            opcode=0x12345678)
-    t = tx("gt3", 2, ACC[3], 310)
-    msgs.append(("gt3", t, 310, m, "in", ACC[2], ACC[3], 5, 0x12345678,
-                 301, None))
-
-    # gt4: 6-tx chain — exceeds big_trace_cutoff=4 → skipped sentinel
-    prev_acct, prev_tx = None, None
-    for i in range(6):
-        acct = ACC[i % 5]
-        h = tx("gt4", i + 1, acct, 400 + 10 * i)
-        if prev_tx is None:
-            msg("gt4", h, 400, i * 2 + 1, "in", None, acct)
-        else:
-            m = msg("gt4", prev_tx, 400 + 10 * (i - 1), i * 2, "out",
-                    prev_acct, acct, value=7, opcode=0x0BAD0000 + i)
-            msgs.append(("gt4", h, 400 + 10 * i, m, "in", prev_acct, acct,
-                         7, 0x0BAD0000 + i, 400 + 10 * (i - 1) + 1, None))
-        prev_acct, prev_tx = acct, h
-    return txs, msgs, bodies
-
-
 _TX_SCHEMA = ("hash string, account string, lt long, now long, "
               "aborted boolean, orig_status string, end_status string, "
               "trace_id string")
@@ -135,30 +47,156 @@ _MSG_SCHEMA = ("trace_id string, tx_hash string, tx_lt long, "
                "created_lt long, body_hash string")
 
 
-def _classified(spark: SparkSession):
-    from ton_indexer_spark.classifier import classify_traces
+class _TraceBuilder:
+    """Transaction, message and body rows of hand-built fixture traces,
+    in the shape ``classify_traces`` reads.  Transaction ``n`` of trace
+    ``t`` is ``t-tx<n>``; a message is ``t-m<n>`` (``t-e0`` for the
+    external root); a body is stored under ``bh-<message hash>``."""
 
-    txs, msgs, bodies = _fixture_rows()
-    # the fixture is a handful of rows, but a bare createDataFrame
-    # parallelizes it over defaultParallelism slices, so every scan of
-    # it pays 32 near-empty Python-RDD tasks per downstream stage (and a
-    # coalesce(1) is WORSE: the single task then walks all 32 parent
-    # slices through sequential Python-worker handshakes — measured 14 s
-    # vs 2.5 s).  One slice at creation + a 1-partition classify shuffle
-    # makes every fixture stage a single task end to end.
+    def __init__(self):
+        self.txs, self.msgs, self.bodies = [], [], []
+
+    def tx(self, trace, n, account, lt, *, aborted=False,
+           orig_status="active") -> str:
+        h = f"{trace}-tx{n}"
+        self.txs.append((h, account, lt, 1_700_000_000 + lt, aborted,
+                         orig_status, "active", trace))
+        return h
+
+    def body(self, bh, body) -> str | None:
+        """Store ``body`` under hash ``bh``; None when there is no body."""
+        if body is None:
+            return None
+        self.bodies.append((bh, body))
+        return bh
+
+    def msg(self, trace, tx_hash, tx_lt, mh, direction, source,
+            destination, value, opcode, created_lt, bh=None) -> None:
+        """One message row, as transaction ``tx_hash`` sees it."""
+        self.msgs.append((trace, tx_hash, tx_lt, mh, direction, source,
+                          destination, value, opcode, created_lt, bh))
+
+    def link(self, trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
+             destination, value, opcode, body) -> None:
+        """One message: out-row at the producer, in-row at the consumer,
+        ONE created_lt for both (it is the same message)."""
+        mh = f"{trace}-m{n}"
+        bh = self.body(f"bh-{mh}", body)
+        for tx_hash, tx_lt, direction in ((src_tx, src_lt, "out"),
+                                          (dst_tx, dst_lt, "in")):
+            self.msg(trace, tx_hash, tx_lt, mh, direction, source,
+                     destination, value, opcode, src_lt + 1, bh)
+
+    def ext(self, trace, root_tx, lt, account, opcode=None,
+            body=None) -> None:
+        """The external in-message that roots a trace."""
+        mh = f"{trace}-e0"
+        self.msg(trace, root_tx, lt, mh, "in", None, account, None, opcode,
+                 lt - 2, self.body(f"bh-{mh}", body))
+
+    def event(self, trace, name, src_tx, src_lt, source, opcode,
+              body) -> None:
+        """An external-out event log ``<trace>-<name>``: an out-row no
+        transaction consumes."""
+        mh = f"{trace}-{name}"
+        self.msg(trace, src_tx, src_lt, mh, "out", source, None, None,
+                 opcode, src_lt + 1, self.body(f"bh-{mh}", body))
+
+    def classify(self, spark: SparkSession, **kwargs):
+        """``classify_traces`` over the rows; ``kwargs`` are its dimension
+        frames and settings."""
+        from ton_indexer_spark.classifier import classify_traces
+
+        # a fixture is a handful of rows, but a bare createDataFrame
+        # parallelizes it over defaultParallelism slices, so every scan of
+        # it pays 32 near-empty Python-RDD tasks per downstream stage (and
+        # a coalesce(1) is WORSE: the single task then walks all 32 parent
+        # slices through sequential Python-worker handshakes — measured
+        # 14 s vs 2.5 s).  One slice at creation (+ a 1-partition classify
+        # shuffle via n_partitions) makes every stage a single task.
+        sc = spark.sparkContext
+        return classify_traces(
+            spark.createDataFrame(sc.parallelize(self.txs, 1), _TX_SCHEMA),
+            spark.createDataFrame(sc.parallelize(self.msgs, 1), _MSG_SCHEMA),
+            spark.createDataFrame(sc.parallelize(self.bodies, 1),
+                                  "hash string, body string"),
+            **kwargs,
+        )
+
+
+def _classified(spark: SparkSession):
+    """Four deterministic traces.  A message's out-row carries created_lt
+    = producer lt - 2 and its in-row producer lt + 1 (+ 2 for the
+    producer's second message), so the rows are written one by one
+    rather than with ``link``."""
+    from ton_indexer_spark.classifier.matchers import (
+        EXCESSES,
+        JETTON_INTERNAL,
+        JETTON_NOTIFY,
+        JETTON_TRANSFER,
+    )
+
+    b = _TraceBuilder()
+
+    # gt1: external root wallet tx → simple value transfer w/ comment
+    r = b.tx("gt1", 1, ACC[0], 100)
+    b.msg("gt1", r, 100, "gt1-m1", "in", None, ACC[0], None, None, 98)
+    t = b.tx("gt1", 2, ACC[1], 110)
+    bh = b.body("bh-gt1-m2", _b64({"comment": "gate check"}))
+    b.msg("gt1", r, 100, "gt1-m2", "out", ACC[0], ACC[1], 10**9, 0, 98, bh)
+    b.msg("gt1", t, 110, "gt1-m2", "in", ACC[0], ACC[1], 10**9, 0, 101, bh)
+
+    # gt2: TEP-74 jetton transfer — owner→W1(transfer)→W2(internal)
+    #      →notify(new owner) + excesses(old owner)
+    r = b.tx("gt2", 1, ACC[0], 200)
+    b.msg("gt2", r, 200, "gt2-m1", "in", None, ACC[0], None, None, 198)
+    t1 = b.tx("gt2", 2, W1, 210)
+    bh = b.body("bh-gt2-m2", _b64({"amount": 5000, "destination": ACC[1]}))
+    b.msg("gt2", r, 200, "gt2-m2", "out", ACC[0], W1, 10**8,
+          JETTON_TRANSFER, 198, bh)
+    b.msg("gt2", t1, 210, "gt2-m2", "in", ACC[0], W1, 10**8,
+          JETTON_TRANSFER, 201, bh)
+    t2 = b.tx("gt2", 3, W2, 220)
+    b.msg("gt2", t1, 210, "gt2-m3", "out", W1, W2, 10**7, JETTON_INTERNAL,
+          208)
+    b.msg("gt2", t2, 220, "gt2-m3", "in", W1, W2, 10**7, JETTON_INTERNAL,
+          211)
+    t3 = b.tx("gt2", 4, ACC[1], 230)
+    b.msg("gt2", t2, 220, "gt2-m4", "out", W2, ACC[1], 1, JETTON_NOTIFY, 218)
+    b.msg("gt2", t3, 230, "gt2-m4", "in", W2, ACC[1], 1, JETTON_NOTIFY, 221)
+    t4 = b.tx("gt2", 5, ACC[0], 240)
+    b.msg("gt2", t2, 220, "gt2-m5", "out", W2, ACC[0], 2, EXCESSES, 218)
+    b.msg("gt2", t4, 240, "gt2-m5", "in", W2, ACC[0], 2, EXCESSES, 222)
+
+    # gt3: unmatched internal call → call_contract
+    r = b.tx("gt3", 1, ACC[2], 300)
+    b.msg("gt3", r, 300, "gt3-m1", "in", None, ACC[2], None, None, 298)
+    t = b.tx("gt3", 2, ACC[3], 310)
+    b.msg("gt3", r, 300, "gt3-m2", "out", ACC[2], ACC[3], 5, 0x12345678, 298)
+    b.msg("gt3", t, 310, "gt3-m2", "in", ACC[2], ACC[3], 5, 0x12345678, 301)
+
+    # gt4: 6-tx chain — exceeds big_trace_cutoff=5 → skipped sentinel
+    prev_acct, prev_tx = None, None
+    for i in range(6):
+        acct, lt = ACC[i % 5], 400 + 10 * i
+        h = b.tx("gt4", i + 1, acct, lt)
+        if prev_tx is None:
+            b.msg("gt4", h, lt, "gt4-m1", "in", None, acct, None, None,
+                  lt - 2)
+        else:
+            mh, op = f"gt4-m{i * 2}", 0x0BAD0000 + i
+            b.msg("gt4", prev_tx, lt - 10, mh, "out", prev_acct, acct, 7,
+                  op, lt - 12)
+            b.msg("gt4", h, lt, mh, "in", prev_acct, acct, 7, op, lt - 9)
+        prev_acct, prev_tx = acct, h
+
     sc = spark.sparkContext
-    txs_df = spark.createDataFrame(sc.parallelize(txs, 1), _TX_SCHEMA)
-    msgs_df = spark.createDataFrame(sc.parallelize(msgs, 1), _MSG_SCHEMA)
-    bodies_df = spark.createDataFrame(
-        sc.parallelize(bodies, 1), "hash string, body string")
     jw = spark.createDataFrame(
         sc.parallelize([(W1, ACC[0], JETTON), (W2, ACC[1], JETTON)], 1),
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        txs_df, msgs_df, bodies_df, jetton_wallets=jw, big_trace_cutoff=5,
-        n_partitions=1,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=5,
+                      n_partitions=1)
 
 
 # the classifier is deterministic over the fixed fixture, so the oracles
@@ -258,7 +296,6 @@ def _failed_external_fixture(spark: SparkSession):
     failed-external recovery path (reference try_process_unknown_event,
     event_processing.py:340-362): the signed body's embedded transfer is
     recovered as a success=False ghost action."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.functions.boc import (
         encode_comment,
         encode_jetton_transfer,
@@ -280,19 +317,12 @@ def _failed_external_fixture(spark: SparkSession):
     )
     v4_body = encode_wallet_external([jt_inner], wallet="v4")
 
-    txs, msgs, bodies = [], [], []
-    for tid, acct, lt, body in (("gf1", wallet, 100, v3_body),
-                                ("gf2", wallet, 200, v4_body)):
-        txs.append((f"{tid}-tx1", acct, lt, 1_700_000_000 + lt, True,
-                    "active", "active", tid))
-        bodies.append((f"bh-{tid}", body))
-        msgs.append((tid, f"{tid}-tx1", lt, f"{tid}-m1", "in", None, acct,
-                     None, None, lt - 2, f"bh-{tid}"))
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-    )
+    b = _TraceBuilder()
+    for tid, lt, body in (("gf1", 100, v3_body), ("gf2", 200, v4_body)):
+        h = b.tx(tid, 1, wallet, lt, aborted=True)
+        b.msg(tid, h, lt, f"{tid}-m1", "in", None, wallet, None, None,
+              lt - 2, b.body(f"bh-{tid}", body))
+    return b.classify(spark)
 
 
 _FAILED_EXT_ORACLE = f"""
@@ -475,7 +505,6 @@ def _stonfi_fixture(spark: SparkSession):
     router notify → swap#25938561 into the pool → payment_request back →
     router pays out through a second full jetton chain.  9 transactions,
     every body a real BOC."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.functions.boc import (
         encode_jetton_internal,
         encode_jetton_notify,
@@ -486,73 +515,48 @@ def _stonfi_fixture(spark: SparkSession):
 
     STONFI_EXIT_OK = 0xC64370E5
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
+    b = _TraceBuilder()
 
-    def tx(n, account, lt):
-        h = f"sw1-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", "sw1"))
-        return h
-
-    def link(n, src_tx, src_lt, dst_tx, dst_lt, source, destination,
-             value, opcode, body):
-        """One message: out-row at the producer, in-row at the consumer,
-        ONE created_lt for both (it is the same message)."""
-        mh, bh = f"sw1-m{n}", None
-        if body is not None:
-            bh = f"bh-sw1-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append(("sw1", src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append(("sw1", dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    t1 = tx(1, USER, 100)
-    msgs.append(("sw1", t1, 100, "sw1-e0", "in", None, USER,
-                 None, None, 98, None))
-    t2 = tx(2, UW_IN, 110)
-    link(1, t1, 100, t2, 110, USER, UW_IN, 10**8, JETTON_TRANSFER_OP,
-         encode_jetton_transfer(1, 1000, destination=ROUTER))
-    t3 = tx(3, RW_IN, 120)
-    link(2, t2, 110, t3, 120, UW_IN, RW_IN, 10**7, JETTON_INTERNAL_OP,
-         encode_jetton_internal(1, 1000, from_owner=USER))
-    t4 = tx(4, ROUTER, 130)
-    link(3, t3, 120, t4, 130, RW_IN, ROUTER, 10**6, JETTON_NOTIFY_OP,
-         encode_jetton_notify(1, 1000, sender=USER))
-    t5 = tx(5, POOL, 140)
-    link(4, t4, 130, t5, 140, ROUTER, POOL, 10**6, STONFI_SWAP_OP,
-         encode_stonfi_swap(1, user=USER, token_wallet=RW_IN,
-                            amount=1000, min_out=450,
-                            from_real_user=USER))
-    t6 = tx(6, ROUTER, 150)
-    link(5, t5, 140, t6, 150, POOL, ROUTER, 10**6, STONFI_PAY_OP,
-         encode_stonfi_payment_request(
-             1, owner=USER, exit_code=STONFI_EXIT_OK,
-             amount0_out=500, token0_out=RW_OUT,
-             amount1_out=0, token1_out=None))
-    t7 = tx(7, RW_OUT, 160)
-    link(6, t6, 150, t7, 160, ROUTER, RW_OUT, 10**6, JETTON_TRANSFER_OP,
-         encode_jetton_transfer(2, 500, destination=USER))
-    t8 = tx(8, UW_OUT, 170)
-    link(7, t7, 160, t8, 170, RW_OUT, UW_OUT, 10**5, JETTON_INTERNAL_OP,
-         encode_jetton_internal(2, 500, from_owner=ROUTER))
-    t9 = tx(9, USER, 180)
-    link(8, t8, 170, t9, 180, UW_OUT, USER, 1, JETTON_NOTIFY_OP,
-         encode_jetton_notify(2, 500, sender=ROUTER))
+    t1 = b.tx("sw1", 1, USER, 100)
+    b.ext("sw1", t1, 100, USER)
+    t2 = b.tx("sw1", 2, UW_IN, 110)
+    b.link("sw1", 1, t1, 100, t2, 110, USER, UW_IN, 10**8, JETTON_TRANSFER_OP,
+           encode_jetton_transfer(1, 1000, destination=ROUTER))
+    t3 = b.tx("sw1", 3, RW_IN, 120)
+    b.link("sw1", 2, t2, 110, t3, 120, UW_IN, RW_IN, 10**7, JETTON_INTERNAL_OP,
+           encode_jetton_internal(1, 1000, from_owner=USER))
+    t4 = b.tx("sw1", 4, ROUTER, 130)
+    b.link("sw1", 3, t3, 120, t4, 130, RW_IN, ROUTER, 10**6, JETTON_NOTIFY_OP,
+           encode_jetton_notify(1, 1000, sender=USER))
+    t5 = b.tx("sw1", 5, POOL, 140)
+    b.link("sw1", 4, t4, 130, t5, 140, ROUTER, POOL, 10**6, STONFI_SWAP_OP,
+           encode_stonfi_swap(1, user=USER, token_wallet=RW_IN,
+                              amount=1000, min_out=450,
+                              from_real_user=USER))
+    t6 = b.tx("sw1", 6, ROUTER, 150)
+    b.link("sw1", 5, t5, 140, t6, 150, POOL, ROUTER, 10**6, STONFI_PAY_OP,
+           encode_stonfi_payment_request(
+               1, owner=USER, exit_code=STONFI_EXIT_OK,
+               amount0_out=500, token0_out=RW_OUT,
+               amount1_out=0, token1_out=None))
+    t7 = b.tx("sw1", 7, RW_OUT, 160)
+    b.link("sw1", 6, t6, 150, t7, 160, ROUTER, RW_OUT, 10**6,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(2, 500, destination=USER))
+    t8 = b.tx("sw1", 8, UW_OUT, 170)
+    b.link("sw1", 7, t7, 160, t8, 170, RW_OUT, UW_OUT, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(2, 500, from_owner=ROUTER))
+    t9 = b.tx("sw1", 9, USER, 180)
+    b.link("sw1", 8, t8, 170, t9, 180, UW_OUT, USER, 1, JETTON_NOTIFY_OP,
+           encode_jetton_notify(2, 500, sender=ROUTER))
 
     jw = spark.createDataFrame(
         [(UW_IN, USER, J1), (RW_IN, ROUTER, J1),
          (RW_OUT, ROUTER, J2), (UW_OUT, USER, J2)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 from ton_indexer_spark.classifier.base import (  # noqa: E402
@@ -626,7 +630,6 @@ def _nft_sale_fixture(spark: SparkSession):
     + seller payout + marketplace fee.  Sale dimension carries the full
     listing record (price/owner/marketplace) like the reference's
     interface repository (nft.py:117-150)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.functions.boc import (
         encode_nft_ownership_assigned,
         encode_nft_transfer,
@@ -634,42 +637,24 @@ def _nft_sale_fixture(spark: SparkSession):
 
     SELLER, BUYER, MARKET = ACC[1], ACC[2], ACC[3]
     PRICE = 10**10
-    txs, msgs, bodies = [], [], []
+    b = _TraceBuilder()
 
-    def tx(n, account, lt):
-        h = f"ns1-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", "ns1"))
-        return h
-
-    def link(n, src_tx, src_lt, dst_tx, dst_lt, source, destination,
-             value, opcode, body):
-        mh, bh = f"ns1-m{n}", None
-        if body is not None:
-            bh = f"bh-ns1-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append(("ns1", src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append(("ns1", dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    t1 = tx(1, BUYER, 100)
-    msgs.append(("ns1", t1, 100, "ns1-e0", "in", None, BUYER,
-                 None, None, 98, None))
-    t2 = tx(2, SALE, 110)
-    link(1, t1, 100, t2, 110, BUYER, SALE, PRICE + 10**9, 0, None)
-    t3 = tx(3, ITEM, 120)
-    link(2, t2, 110, t3, 120, SALE, ITEM, 10**8, NFT_TRANSFER_OP,
-         encode_nft_transfer(5, new_owner=BUYER, response=SALE,
-                             forward_amount=1))
-    t4 = tx(4, BUYER, 130)
-    link(3, t3, 120, t4, 130, ITEM, BUYER, 1, OWNERSHIP_OP,
-         encode_nft_ownership_assigned(5, prev_owner=SALE))
-    t5 = tx(5, SELLER, 140)
-    link(4, t2, 110, t5, 140, SALE, SELLER, PRICE - 3 * 10**8, None, None)
-    t6 = tx(6, MARKET, 150)
-    link(5, t2, 110, t6, 150, SALE, MARKET, 3 * 10**8, None, None)
+    t1 = b.tx("ns1", 1, BUYER, 100)
+    b.ext("ns1", t1, 100, BUYER)
+    t2 = b.tx("ns1", 2, SALE, 110)
+    b.link("ns1", 1, t1, 100, t2, 110, BUYER, SALE, PRICE + 10**9, 0, None)
+    t3 = b.tx("ns1", 3, ITEM, 120)
+    b.link("ns1", 2, t2, 110, t3, 120, SALE, ITEM, 10**8, NFT_TRANSFER_OP,
+           encode_nft_transfer(5, new_owner=BUYER, response=SALE,
+                               forward_amount=1))
+    t4 = b.tx("ns1", 4, BUYER, 130)
+    b.link("ns1", 3, t3, 120, t4, 130, ITEM, BUYER, 1, OWNERSHIP_OP,
+           encode_nft_ownership_assigned(5, prev_owner=SALE))
+    t5 = b.tx("ns1", 5, SELLER, 140)
+    b.link("ns1", 4, t2, 110, t5, 140, SALE, SELLER, PRICE - 3 * 10**8, None,
+           None)
+    t6 = b.tx("ns1", 6, MARKET, 150)
+    b.link("ns1", 5, t2, 110, t6, 150, SALE, MARKET, 3 * 10**8, None, None)
 
     sales = spark.createDataFrame(
         [(SALE, ITEM, PRICE, SELLER, MARKET)],
@@ -677,10 +662,8 @@ def _nft_sale_fixture(spark: SparkSession):
         "owner string, marketplace_address string",
     )
     items = spark.createDataFrame([(ITEM,)], "address string")
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
+    return b.classify(
+        spark,
         nft_items=items,
         nft_sales=sales,
         big_trace_cutoff=20,
@@ -743,7 +726,6 @@ def _multisig_fixture(spark: SparkSession):
     the multisig; an approve answered approve_rejected (exit 111); and a
     vote-by-COMMENT approve ("approve" text body, signer_index -1 —
     reference multisig.py:167-200)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.functions.boc import (
         encode_comment,
         encode_multisig_approve,
@@ -755,72 +737,46 @@ def _multisig_fixture(spark: SparkSession):
 
     S1, S2, S3 = ACC[4], ACC[5], ACC[0]
     order_cell = parse_boc(encode_comment("order payload"))
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
+    b = _TraceBuilder()
 
     # mg1: opcode approve → accepted + execute
-    t1 = tx("mg1", 1, S1, 100)
-    msgs.append(("mg1", t1, 100, "mg1-e0", "in", None, S1,
-                 None, None, 98, None))
-    t2 = tx("mg1", 2, ORDER_C, 110)
-    link("mg1", 1, t1, 100, t2, 110, S1, ORDER_C, 10**8, MS_APPROVE_OP,
-         encode_multisig_approve(7, signer_index=2))
-    t3 = tx("mg1", 3, S1, 120)
-    link("mg1", 2, t2, 110, t3, 120, ORDER_C, S1, 1, MS_ACCEPTED_OP,
-         encode_multisig_approve_accepted(7))
-    t4 = tx("mg1", 4, MULTI, 130)
-    link("mg1", 3, t2, 110, t4, 130, ORDER_C, MULTI, 10**7, MS_EXECUTE_OP,
-         encode_multisig_execute(7, order_seqno=3,
-                                 expiration_date=1_800_000_000,
-                                 approvals_num=2,
-                                 signers_hash=b"\x11" * 32,
-                                 order=order_cell))
+    t1 = b.tx("mg1", 1, S1, 100)
+    b.ext("mg1", t1, 100, S1)
+    t2 = b.tx("mg1", 2, ORDER_C, 110)
+    b.link("mg1", 1, t1, 100, t2, 110, S1, ORDER_C, 10**8, MS_APPROVE_OP,
+           encode_multisig_approve(7, signer_index=2))
+    t3 = b.tx("mg1", 3, S1, 120)
+    b.link("mg1", 2, t2, 110, t3, 120, ORDER_C, S1, 1, MS_ACCEPTED_OP,
+           encode_multisig_approve_accepted(7))
+    t4 = b.tx("mg1", 4, MULTI, 130)
+    b.link("mg1", 3, t2, 110, t4, 130, ORDER_C, MULTI, 10**7, MS_EXECUTE_OP,
+           encode_multisig_execute(7, order_seqno=3,
+                                   expiration_date=1_800_000_000,
+                                   approvals_num=2,
+                                   signers_hash=b"\x11" * 32,
+                                   order=order_cell))
 
     # mg2: opcode approve → rejected(exit 111)
-    t1 = tx("mg2", 1, S2, 200)
-    msgs.append(("mg2", t1, 200, "mg2-e0", "in", None, S2,
-                 None, None, 198, None))
-    t2 = tx("mg2", 2, ORDER_C2, 210)
-    link("mg2", 1, t1, 200, t2, 210, S2, ORDER_C2, 10**8, MS_APPROVE_OP,
-         encode_multisig_approve(8, signer_index=0))
-    t3 = tx("mg2", 3, S2, 220)
-    link("mg2", 2, t2, 210, t3, 220, ORDER_C2, S2, 1, MS_REJECTED_OP,
-         encode_multisig_approve_rejected(8, exit_code=111))
+    t1 = b.tx("mg2", 1, S2, 200)
+    b.ext("mg2", t1, 200, S2)
+    t2 = b.tx("mg2", 2, ORDER_C2, 210)
+    b.link("mg2", 1, t1, 200, t2, 210, S2, ORDER_C2, 10**8, MS_APPROVE_OP,
+           encode_multisig_approve(8, signer_index=0))
+    t3 = b.tx("mg2", 3, S2, 220)
+    b.link("mg2", 2, t2, 210, t3, 220, ORDER_C2, S2, 1, MS_REJECTED_OP,
+           encode_multisig_approve_rejected(8, exit_code=111))
 
     # mg3: vote by comment → accepted (signer_index -1)
-    t1 = tx("mg3", 1, S3, 300)
-    msgs.append(("mg3", t1, 300, "mg3-e0", "in", None, S3,
-                 None, None, 298, None))
-    t2 = tx("mg3", 2, ORDER_C3, 310)
-    link("mg3", 1, t1, 300, t2, 310, S3, ORDER_C3, 10**8, 0,
-         encode_comment("approve"))
-    t3 = tx("mg3", 3, S3, 320)
-    link("mg3", 2, t2, 310, t3, 320, ORDER_C3, S3, 1, MS_ACCEPTED_OP,
-         encode_multisig_approve_accepted(9))
+    t1 = b.tx("mg3", 1, S3, 300)
+    b.ext("mg3", t1, 300, S3)
+    t2 = b.tx("mg3", 2, ORDER_C3, 310)
+    b.link("mg3", 1, t1, 300, t2, 310, S3, ORDER_C3, 10**8, 0,
+           encode_comment("approve"))
+    t3 = b.tx("mg3", 3, S3, 320)
+    b.link("mg3", 2, t2, 310, t3, 320, ORDER_C3, S3, 1, MS_ACCEPTED_OP,
+           encode_multisig_approve_accepted(9))
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 def _order_boc_b64() -> str:
@@ -908,7 +864,6 @@ def _dedust_fixture(spark: SparkSession):
     Each pool emits a swap notification event (op 9c610de3) whose body —
     like every other decoded body here — is a real BOC through the
     engine's cell codec; two hops means peer_swaps carries both legs."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         DEDUST_PAYOUT_FROM_POOL,
         DEDUST_SWAP,
@@ -927,74 +882,45 @@ def _dedust_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
+    b = _TraceBuilder()
 
-    def tx(n, account, lt):
-        h = f"dd1-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", "dd1"))
-        return h
-
-    def link(n, src_tx, src_lt, dst_tx, dst_lt, source, destination,
-             value, opcode, body):
-        mh, bh = f"dd1-m{n}", None
-        if body is not None:
-            bh = f"bh-dd1-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append(("dd1", src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append(("dd1", dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def event(n, src_tx, src_lt, source, opcode, body):
-        """External-out pool event: an out-row with no consuming tx."""
-        mh, bh = f"dd1-e{n}", f"bh-dd1-e{n}"
-        bodies.append((bh, body))
-        msgs.append(("dd1", src_tx, src_lt, mh, "out", source, None,
-                     None, opcode, src_lt + 1, bh))
-
-    t1 = tx(1, USER, 100)
-    msgs.append(("dd1", t1, 100, "dd1-e0", "in", None, USER,
-                 None, None, 98, None))
-    t2 = tx(2, VAULT_A, 110)
-    link(1, t1, 100, t2, 110, USER, VAULT_A, 2 * 10**9, DEDUST_SWAP,
-         encode_dedust_swap(1, 10**9, pool=POOL1))
-    t3 = tx(3, POOL1, 120)
-    link(2, t2, 110, t3, 120, VAULT_A, POOL1, 10**6,
-         DEDUST_SWAP_EXTERNAL, None)
-    event(1, t3, 120, POOL1, DEDUST_SWAP_NOTIFICATION,
-          encode_dedust_swap_notification("TON", JX, 10**9, 800,
-                                          sender=USER))
-    t4 = tx(4, POOL2, 130)
-    link(3, t3, 120, t4, 130, POOL1, POOL2, 10**6, DEDUST_SWAP_PEER, None)
-    event(2, t4, 130, POOL2, DEDUST_SWAP_NOTIFICATION,
-          encode_dedust_swap_notification(JX, J2, 800, 600, sender=USER))
-    t5 = tx(5, VAULT_B, 140)
-    link(4, t4, 130, t5, 140, POOL2, VAULT_B, 10**6,
-         DEDUST_PAYOUT_FROM_POOL,
-         encode_dedust_payout(1, 600, op=OP_DEDUST_PAYOUT_POOL))
-    t6 = tx(6, VW_OUT, 150)
-    link(5, t5, 140, t6, 150, VAULT_B, VW_OUT, 10**6, JETTON_TRANSFER_OP,
-         encode_jetton_transfer(2, 600, destination=USER))
-    t7 = tx(7, UW_J2, 160)
-    link(6, t6, 150, t7, 160, VW_OUT, UW_J2, 10**5, JETTON_INTERNAL_OP,
-         encode_jetton_internal(2, 600, from_owner=VAULT_B))
-    t8 = tx(8, USER, 170)
-    link(7, t7, 160, t8, 170, UW_J2, USER, 1, JETTON_NOTIFY_OP,
-         encode_jetton_notify(2, 600, sender=VAULT_B))
+    t1 = b.tx("dd1", 1, USER, 100)
+    b.ext("dd1", t1, 100, USER)
+    t2 = b.tx("dd1", 2, VAULT_A, 110)
+    b.link("dd1", 1, t1, 100, t2, 110, USER, VAULT_A, 2 * 10**9, DEDUST_SWAP,
+           encode_dedust_swap(1, 10**9, pool=POOL1))
+    t3 = b.tx("dd1", 3, POOL1, 120)
+    b.link("dd1", 2, t2, 110, t3, 120, VAULT_A, POOL1, 10**6,
+           DEDUST_SWAP_EXTERNAL, None)
+    b.event("dd1", "e1", t3, 120, POOL1, DEDUST_SWAP_NOTIFICATION,
+            encode_dedust_swap_notification("TON", JX, 10**9, 800,
+                                            sender=USER))
+    t4 = b.tx("dd1", 4, POOL2, 130)
+    b.link("dd1", 3, t3, 120, t4, 130, POOL1, POOL2, 10**6, DEDUST_SWAP_PEER,
+           None)
+    b.event("dd1", "e2", t4, 130, POOL2, DEDUST_SWAP_NOTIFICATION,
+            encode_dedust_swap_notification(JX, J2, 800, 600, sender=USER))
+    t5 = b.tx("dd1", 5, VAULT_B, 140)
+    b.link("dd1", 4, t4, 130, t5, 140, POOL2, VAULT_B, 10**6,
+           DEDUST_PAYOUT_FROM_POOL,
+           encode_dedust_payout(1, 600, op=OP_DEDUST_PAYOUT_POOL))
+    t6 = b.tx("dd1", 6, VW_OUT, 150)
+    b.link("dd1", 5, t5, 140, t6, 150, VAULT_B, VW_OUT, 10**6,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(2, 600, destination=USER))
+    t7 = b.tx("dd1", 7, UW_J2, 160)
+    b.link("dd1", 6, t6, 150, t7, 160, VW_OUT, UW_J2, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(2, 600, from_owner=VAULT_B))
+    t8 = b.tx("dd1", 8, USER, 170)
+    b.link("dd1", 7, t7, 160, t8, 170, UW_J2, USER, 1, JETTON_NOTIFY_OP,
+           encode_jetton_notify(2, 600, sender=VAULT_B))
 
     jw = spark.createDataFrame(
         [(VW_OUT, VAULT_B, J2), (UW_J2, USER, J2)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _DEDUST_ORACLE = f"""
@@ -1064,7 +990,6 @@ def _tonstakers_fixture(spark: SparkSession):
     delayed withdrawal (same entry, pool mints a payout NFT instead).
     Every decoded body (deposit, burn, withdraw request, internal
     transfer, notify, excesses) is a real BOC."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.base import (
         BURN_NOTIFY,
         JETTON_BURN,
@@ -1087,91 +1012,64 @@ def _tonstakers_fixture(spark: SparkSession):
 
     USER = ACC[0]
     TON = 10**9
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # ts1: deposit 101 TON, mint 100e9 tsTON shares back to the user
-    t1 = tx("ts1", 1, USER, 100); ext("ts1", t1, 100)
-    t2 = tx("ts1", 2, TS_POOL, 110)
-    link("ts1", 1, t1, 100, t2, 110, USER, TS_POOL, 101 * TON,
-         STAKE_DEPOSIT_OP, encode_tonstakers_deposit(1))
-    t3 = tx("ts1", 3, TS_MINTER, 120)
-    link("ts1", 2, t2, 110, t3, 120, TS_POOL, TS_MINTER, 10**6,
-         TS_MINT_TOKENS, None)
-    t4 = tx("ts1", 4, TS_WALLET, 130)
-    link("ts1", 3, t3, 120, t4, 130, TS_MINTER, TS_WALLET, 10**5,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(1, 100 * TON, from_owner=TS_POOL))
-    t5 = tx("ts1", 5, USER, 140)
-    link("ts1", 4, t4, 130, t5, 140, TS_WALLET, USER, 1,
-         JETTON_NOTIFY_OP, encode_jetton_notify(1, 100 * TON,
-                                                sender=TS_POOL))
-    t6 = tx("ts1", 6, USER, 150)
-    link("ts1", 5, t2, 110, t6, 150, TS_POOL, USER, 10**6,
-         0xD53276DB, encode_excesses(1))
+    t1 = b.tx("ts1", 1, USER, 100); b.ext("ts1", t1, 100, USER)
+    t2 = b.tx("ts1", 2, TS_POOL, 110)
+    b.link("ts1", 1, t1, 100, t2, 110, USER, TS_POOL, 101 * TON,
+           STAKE_DEPOSIT_OP, encode_tonstakers_deposit(1))
+    t3 = b.tx("ts1", 3, TS_MINTER, 120)
+    b.link("ts1", 2, t2, 110, t3, 120, TS_POOL, TS_MINTER, 10**6,
+           TS_MINT_TOKENS, None)
+    t4 = b.tx("ts1", 4, TS_WALLET, 130)
+    b.link("ts1", 3, t3, 120, t4, 130, TS_MINTER, TS_WALLET, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(1, 100 * TON, from_owner=TS_POOL))
+    t5 = b.tx("ts1", 5, USER, 140)
+    b.link("ts1", 4, t4, 130, t5, 140, TS_WALLET, USER, 1,
+           JETTON_NOTIFY_OP, encode_jetton_notify(1, 100 * TON,
+                                                  sender=TS_POOL))
+    t6 = b.tx("ts1", 6, USER, 150)
+    b.link("ts1", 5, t2, 110, t6, 150, TS_POOL, USER, 10**6,
+           0xD53276DB, encode_excesses(1))
 
     # ts2: burn 50e9 tsTON, pool pays out immediately
-    u1 = tx("ts2", 1, USER, 200); ext("ts2", u1, 200)
-    u2 = tx("ts2", 2, TS_WALLET, 210)
-    link("ts2", 1, u1, 200, u2, 210, USER, TS_WALLET, TON, JETTON_BURN,
-         encode_jetton_burn(2, 50 * TON, response=USER))
-    u3 = tx("ts2", 3, TS_MINTER, 220)
-    link("ts2", 2, u2, 210, u3, 220, TS_WALLET, TS_MINTER, 10**6,
-         BURN_NOTIFY, None)
-    u4 = tx("ts2", 4, TS_POOL, 230)
-    link("ts2", 3, u3, 220, u4, 230, TS_MINTER, TS_POOL, 10**8,
-         TS_WITHDRAW_REQUEST,
-         encode_tonstakers_withdraw_request(2, 50 * TON))
-    u5 = tx("ts2", 5, USER, 240)
-    link("ts2", 4, u4, 230, u5, 240, TS_POOL, USER, 50 * TON + 10**8,
-         POOL_WITHDRAWAL, None)
+    u1 = b.tx("ts2", 1, USER, 200); b.ext("ts2", u1, 200, USER)
+    u2 = b.tx("ts2", 2, TS_WALLET, 210)
+    b.link("ts2", 1, u1, 200, u2, 210, USER, TS_WALLET, TON, JETTON_BURN,
+           encode_jetton_burn(2, 50 * TON, response=USER))
+    u3 = b.tx("ts2", 3, TS_MINTER, 220)
+    b.link("ts2", 2, u2, 210, u3, 220, TS_WALLET, TS_MINTER, 10**6,
+           BURN_NOTIFY, None)
+    u4 = b.tx("ts2", 4, TS_POOL, 230)
+    b.link("ts2", 3, u3, 220, u4, 230, TS_MINTER, TS_POOL, 10**8,
+           TS_WITHDRAW_REQUEST,
+           encode_tonstakers_withdraw_request(2, 50 * TON))
+    u5 = b.tx("ts2", 5, USER, 240)
+    b.link("ts2", 4, u4, 230, u5, 240, TS_POOL, USER, 50 * TON + 10**8,
+           POOL_WITHDRAWAL, None)
 
     # ts3: burn 70e9 tsTON, pool defers: mints a payout NFT instead
-    v1 = tx("ts3", 1, USER, 300); ext("ts3", v1, 300)
-    v2 = tx("ts3", 2, TS_WALLET, 310)
-    link("ts3", 1, v1, 300, v2, 310, USER, TS_WALLET, TON, JETTON_BURN,
-         encode_jetton_burn(3, 70 * TON, response=USER))
-    v3 = tx("ts3", 3, TS_MINTER, 320)
-    link("ts3", 2, v2, 310, v3, 320, TS_WALLET, TS_MINTER, 10**6,
-         BURN_NOTIFY, None)
-    v4 = tx("ts3", 4, TS_POOL, 330)
-    link("ts3", 3, v3, 320, v4, 330, TS_MINTER, TS_POOL, 10**8,
-         TS_WITHDRAW_REQUEST,
-         encode_tonstakers_withdraw_request(3, 70 * TON))
-    v5 = tx("ts3", 5, TS_COLLECTION, 340)
-    link("ts3", 4, v4, 330, v5, 340, TS_POOL, TS_COLLECTION, 10**7,
-         TS_MINT_TOKENS, None)
-    v6 = tx("ts3", 6, TS_NFT, 350)
-    link("ts3", 5, v5, 340, v6, 350, TS_COLLECTION, TS_NFT, 10**6,
-         TS_INIT_NFT, None)
+    v1 = b.tx("ts3", 1, USER, 300); b.ext("ts3", v1, 300, USER)
+    v2 = b.tx("ts3", 2, TS_WALLET, 310)
+    b.link("ts3", 1, v1, 300, v2, 310, USER, TS_WALLET, TON, JETTON_BURN,
+           encode_jetton_burn(3, 70 * TON, response=USER))
+    v3 = b.tx("ts3", 3, TS_MINTER, 320)
+    b.link("ts3", 2, v2, 310, v3, 320, TS_WALLET, TS_MINTER, 10**6,
+           BURN_NOTIFY, None)
+    v4 = b.tx("ts3", 4, TS_POOL, 330)
+    b.link("ts3", 3, v3, 320, v4, 330, TS_MINTER, TS_POOL, 10**8,
+           TS_WITHDRAW_REQUEST,
+           encode_tonstakers_withdraw_request(3, 70 * TON))
+    v5 = b.tx("ts3", 5, TS_COLLECTION, 340)
+    b.link("ts3", 4, v4, 330, v5, 340, TS_POOL, TS_COLLECTION, 10**7,
+           TS_MINT_TOKENS, None)
+    v6 = b.tx("ts3", 6, TS_NFT, 350)
+    b.link("ts3", 5, v5, 340, v6, 350, TS_COLLECTION, TS_NFT, 10**6,
+           TS_INIT_NFT, None)
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _TONSTAKERS_ORACLE = f"""
@@ -1247,7 +1145,6 @@ def _evaa_fixture(spark: SparkSession):
     protocol comment) and ev2 withdraw (withdraw_master#2 → headered
     withdraw_user#21 → withdraw_collateralized#211 → headered 211a data
     update + TON payout leg)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         EVAA_SUPPLY_MASTER,
         EVAA_SUPPLY_SUCCESS,
@@ -1265,83 +1162,56 @@ def _evaa_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # ev1: supply 500 TON; user contract confirms 500 credited
-    t1 = tx("ev1", 1, USER, 100); ext("ev1", t1, 100)
-    t2 = tx("ev1", 2, EVAA_MASTER, 110)
-    link("ev1", 1, t1, 100, t2, 110, USER, EVAA_MASTER, 500 * 10**9 + 10**9,
-         EVAA_SUPPLY_MASTER,
-         encode_evaa_supply_master(1, 500 * 10**9, recipient=USER))
-    t3 = tx("ev1", 3, EVAA_USER_SC, 120)
+    t1 = b.tx("ev1", 1, USER, 100); b.ext("ev1", t1, 100, USER)
+    t2 = b.tx("ev1", 2, EVAA_MASTER, 110)
+    b.link("ev1", 1, t1, 100, t2, 110, USER, EVAA_MASTER, 500 * 10**9 + 10**9,
+           EVAA_SUPPLY_MASTER,
+           encode_evaa_supply_master(1, 500 * 10**9, recipient=USER))
+    t3 = b.tx("ev1", 3, EVAA_USER_SC, 120)
     # headered body: the raw opcode column carries the header's first 32
     # bits on real data — model that with a junk opcode the matcher must
     # NOT rely on (membership decodes the body)
-    link("ev1", 2, t2, 110, t3, 120, EVAA_MASTER, EVAA_USER_SC, 10**8,
-         0x7E000000,
-         encode_evaa_user_headered(0x11, 1, EVAA_TON_ID,
-                                   amount=500 * 10**9))
-    t4 = tx("ev1", 4, EVAA_MASTER, 130)
-    link("ev1", 3, t3, 120, t4, 130, EVAA_USER_SC, EVAA_MASTER, 10**7,
-         EVAA_SUPPLY_SUCCESS,
-         encode_evaa_supply_success(1, USER, EVAA_TON_ID, 500 * 10**9))
-    t5 = tx("ev1", 5, USER, 140)
-    link("ev1", 4, t4, 130, t5, 140, EVAA_MASTER, USER, 10**6, 0,
-         encode_comment("EVAA supply."))
+    b.link("ev1", 2, t2, 110, t3, 120, EVAA_MASTER, EVAA_USER_SC, 10**8,
+           0x7E000000,
+           encode_evaa_user_headered(0x11, 1, EVAA_TON_ID,
+                                     amount=500 * 10**9))
+    t4 = b.tx("ev1", 4, EVAA_MASTER, 130)
+    b.link("ev1", 3, t3, 120, t4, 130, EVAA_USER_SC, EVAA_MASTER, 10**7,
+           EVAA_SUPPLY_SUCCESS,
+           encode_evaa_supply_success(1, USER, EVAA_TON_ID, 500 * 10**9))
+    t5 = b.tx("ev1", 5, USER, 140)
+    b.link("ev1", 4, t4, 130, t5, 140, EVAA_MASTER, USER, 10**6, 0,
+           encode_comment("EVAA supply."))
 
     # ev2: withdraw 300 TON; collateral check passes, payout + update
-    u1 = tx("ev2", 1, USER, 200); ext("ev2", u1, 200)
-    u2 = tx("ev2", 2, EVAA_MASTER, 210)
-    link("ev2", 1, u1, 200, u2, 210, USER, EVAA_MASTER, 10**9,
-         EVAA_WITHDRAW_MASTER,
-         encode_evaa_withdraw_master(2, EVAA_TON_ID, 300 * 10**9,
-                                     recipient=USER))
-    u3 = tx("ev2", 3, EVAA_USER_SC, 220)
-    link("ev2", 2, u2, 210, u3, 220, EVAA_MASTER, EVAA_USER_SC, 10**8,
-         0x7E000000,
-         encode_evaa_user_headered(0x21, 2, EVAA_TON_ID,
-                                   amount=300 * 10**9, recipient=USER))
-    u4 = tx("ev2", 4, EVAA_MASTER, 230)
-    link("ev2", 3, u3, 220, u4, 230, EVAA_USER_SC, EVAA_MASTER, 10**7,
-         EVAA_WITHDRAW_COLLATERALIZED,
-         encode_evaa_supply_success(2, USER, EVAA_TON_ID, 300 * 10**9,
-                                    op=OP_EVAA_WITHDRAW_COLL))
-    u5 = tx("ev2", 5, EVAA_USER_SC, 240)
-    link("ev2", 4, u4, 230, u5, 240, EVAA_MASTER, EVAA_USER_SC, 10**6,
-         0x7E000000,
-         encode_evaa_user_headered(EVAA_WITHDRAW_SUCCESS, 2, EVAA_TON_ID))
-    u6 = tx("ev2", 6, USER, 250)
-    link("ev2", 5, u4, 230, u6, 250, EVAA_MASTER, USER,
-         300 * 10**9, EVAA_WITHDRAW_SUCCESS, None)
+    u1 = b.tx("ev2", 1, USER, 200); b.ext("ev2", u1, 200, USER)
+    u2 = b.tx("ev2", 2, EVAA_MASTER, 210)
+    b.link("ev2", 1, u1, 200, u2, 210, USER, EVAA_MASTER, 10**9,
+           EVAA_WITHDRAW_MASTER,
+           encode_evaa_withdraw_master(2, EVAA_TON_ID, 300 * 10**9,
+                                       recipient=USER))
+    u3 = b.tx("ev2", 3, EVAA_USER_SC, 220)
+    b.link("ev2", 2, u2, 210, u3, 220, EVAA_MASTER, EVAA_USER_SC, 10**8,
+           0x7E000000,
+           encode_evaa_user_headered(0x21, 2, EVAA_TON_ID,
+                                     amount=300 * 10**9, recipient=USER))
+    u4 = b.tx("ev2", 4, EVAA_MASTER, 230)
+    b.link("ev2", 3, u3, 220, u4, 230, EVAA_USER_SC, EVAA_MASTER, 10**7,
+           EVAA_WITHDRAW_COLLATERALIZED,
+           encode_evaa_supply_success(2, USER, EVAA_TON_ID, 300 * 10**9,
+                                      op=OP_EVAA_WITHDRAW_COLL))
+    u5 = b.tx("ev2", 5, EVAA_USER_SC, 240)
+    b.link("ev2", 4, u4, 230, u5, 240, EVAA_MASTER, EVAA_USER_SC, 10**6,
+           0x7E000000,
+           encode_evaa_user_headered(EVAA_WITHDRAW_SUCCESS, 2, EVAA_TON_ID))
+    u6 = b.tx("ev2", 6, USER, 250)
+    b.link("ev2", 5, u4, 230, u6, 250, EVAA_MASTER, USER,
+           300 * 10**9, EVAA_WITHDRAW_SUCCESS, None)
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _EVAA_ORACLE = f"""
@@ -1404,29 +1274,21 @@ def _dns_fixture(spark: SparkSession):
     DNSSmcAddress record (value ref present), dn2 renews (all-zero key,
     empty record), dn3 deletes a named record (non-zero key, empty
     record)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.functions.boc import encode_change_dns
 
     CHANGE_DNS = 0x4EB1F0F9
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
+    b = _TraceBuilder()
 
     def one(trace, lt, body):
-        r = f"{trace}-tx1"
-        txs.append((r, USER, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        msgs.append((trace, r, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
-        t = f"{trace}-tx2"
-        txs.append((t, DNS_ITEM, lt + 10, 1_700_000_010 + lt, False,
-                    "active", "active", trace))
-        bh = f"bh-{trace}"
-        bodies.append((bh, body))
-        clt = lt + 1
-        msgs.append((trace, r, lt, f"{trace}-m1", "out", USER, DNS_ITEM,
-                     10**8, CHANGE_DNS, clt, bh))
-        msgs.append((trace, t, lt + 10, f"{trace}-m1", "in", USER,
-                     DNS_ITEM, 10**8, CHANGE_DNS, clt, bh))
+        r = b.tx(trace, 1, USER, lt)
+        b.ext(trace, r, lt, USER)
+        t = b.tx(trace, 2, DNS_ITEM, lt + 10)
+        bh = b.body(f"bh-{trace}", body)
+        for tx_hash, tx_lt, direction in ((r, lt, "out"),
+                                          (t, lt + 10, "in")):
+            b.msg(trace, tx_hash, tx_lt, f"{trace}-m1", direction, USER,
+                  DNS_ITEM, 10**8, CHANGE_DNS, lt + 1, bh)
 
     # the sha256-style record key "wallet" is any 32-byte constant here
     wallet_key = bytes.fromhex("e8d44050873dba865aa7c170ab4cce64"
@@ -1437,12 +1299,7 @@ def _dns_fixture(spark: SparkSession):
     one("dn2", 200, encode_change_dns(2, b"\x00" * 32))
     one("dn3", 300, encode_change_dns(3, wallet_key))
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _DNS_ORACLE = f"""
@@ -1505,7 +1362,6 @@ def _fragment_fixture(spark: SparkSession):
     auction with the teleitem_ok ack (reference
     TeleitemStartAuction/TelegramNftPurchase/TeleitemCancelAuction,
     blocks/auction.py + messages/nft.py:7-129)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         AUCTION_FILL_UP,
         TELEITEM_CANCEL_AUCTION,
@@ -1519,65 +1375,37 @@ def _fragment_fixture(spark: SparkSession):
 
     USER, BUYER = ACC[0], ACC[1]
     TON = 10**9
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, who):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, who,
-                     None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # fr1: owner starts the auction (min 10 TON, buy-now 1000 TON)
-    t1 = tx("fr1", 1, USER, 100); ext("fr1", t1, 100, USER)
-    t2 = tx("fr1", 2, TELEITEM, 110)
-    link("fr1", 1, t1, 100, t2, 110, USER, TELEITEM, 10**8,
-         TELEITEM_START_AUCTION,
-         encode_teleitem_start_auction(1, USER, 10 * TON, 1000 * TON))
+    t1 = b.tx("fr1", 1, USER, 100); b.ext("fr1", t1, 100, USER)
+    t2 = b.tx("fr1", 2, TELEITEM, 110)
+    b.link("fr1", 1, t1, 100, t2, 110, USER, TELEITEM, 10**8,
+           TELEITEM_START_AUCTION,
+           encode_teleitem_start_auction(1, USER, 10 * TON, 1000 * TON))
 
     # fr2: buyer wins at 55 TON; ownership_assigned carries bid info
-    u1 = tx("fr2", 1, BUYER, 200); ext("fr2", u1, 200, BUYER)
-    u2 = tx("fr2", 2, TELEITEM, 210)
-    link("fr2", 1, u1, 200, u2, 210, BUYER, TELEITEM, 55 * TON,
-         AUCTION_FILL_UP, None)
-    u3 = tx("fr2", 3, BUYER, 220)
-    link("fr2", 2, u2, 210, u3, 220, TELEITEM, BUYER, 10**6,
-         0x05138D91,
-         encode_nft_ownership_assigned_bid(2, USER, 55 * TON,
-                                           1_700_000_000))
+    u1 = b.tx("fr2", 1, BUYER, 200); b.ext("fr2", u1, 200, BUYER)
+    u2 = b.tx("fr2", 2, TELEITEM, 210)
+    b.link("fr2", 1, u1, 200, u2, 210, BUYER, TELEITEM, 55 * TON,
+           AUCTION_FILL_UP, None)
+    u3 = b.tx("fr2", 3, BUYER, 220)
+    b.link("fr2", 2, u2, 210, u3, 220, TELEITEM, BUYER, 10**6,
+           0x05138D91,
+           encode_nft_ownership_assigned_bid(2, USER, 55 * TON,
+                                             1_700_000_000))
 
     # fr3: owner cancels a running auction; the item acks teleitem_ok
-    v1 = tx("fr3", 1, USER, 300); ext("fr3", v1, 300, USER)
-    v2 = tx("fr3", 2, TELEITEM, 310)
-    link("fr3", 1, v1, 300, v2, 310, USER, TELEITEM, 10**8,
-         TELEITEM_CANCEL_AUCTION, None)
-    v3 = tx("fr3", 3, USER, 320)
-    link("fr3", 2, v2, 310, v3, 320, TELEITEM, USER, 10**6,
-         TELEITEM_OK, None)
+    v1 = b.tx("fr3", 1, USER, 300); b.ext("fr3", v1, 300, USER)
+    v2 = b.tx("fr3", 2, TELEITEM, 310)
+    b.link("fr3", 1, v1, 300, v2, 310, USER, TELEITEM, 10**8,
+           TELEITEM_CANCEL_AUCTION, None)
+    v3 = b.tx("fr3", 3, USER, 320)
+    b.link("fr3", 2, v2, 310, v3, 320, TELEITEM, USER, 10**6,
+           TELEITEM_OK, None)
 
     ni = spark.createDataFrame([(TELEITEM,)], "address string")
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        nft_items=ni,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, nft_items=ni, big_trace_cutoff=20)
 
 
 _FRAGMENT_ORACLE = f"""
@@ -1644,7 +1472,6 @@ def _ethena_fixture(spark: SparkSession):
     amount) and the mint's internal transfer to the user's tsUSDe wallet
     (reference EthenaDepositBlockMatcher, ethena_staking.py:109-160,
     serialized as stake_deposit/provider=ethena)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import JETTON_MINT_OP
     from ton_indexer_spark.functions.boc import (
         encode_jetton_internal,
@@ -1654,60 +1481,37 @@ def _ethena_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
+    b = _TraceBuilder()
 
-    def tx(n, account, lt):
-        h = f"et1-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", "et1"))
-        return h
-
-    def link(n, src_tx, src_lt, dst_tx, dst_lt, source, destination,
-             value, opcode, body):
-        mh, bh = f"et1-m{n}", None
-        if body is not None:
-            bh = f"bh-et1-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append(("et1", src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append(("et1", dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    t1 = tx(1, USER, 100)
-    msgs.append(("et1", t1, 100, "et1-e0", "in", None, USER,
-                 None, None, 98, None))
-    t2 = tx(2, UW_USDE, 110)
-    link(1, t1, 100, t2, 110, USER, UW_USDE, 10**8, JETTON_TRANSFER_OP,
-         encode_jetton_transfer(1, 200_000_000, destination=ETH_POOL))
-    t3 = tx(3, PW_USDE, 120)
-    link(2, t2, 110, t3, 120, UW_USDE, PW_USDE, 10**7, JETTON_INTERNAL_OP,
-         encode_jetton_internal(1, 200_000_000, from_owner=USER))
-    t4 = tx(4, ETH_POOL, 130)
-    link(3, t3, 120, t4, 130, PW_USDE, ETH_POOL, 10**6, JETTON_NOTIFY_OP,
-         encode_jetton_notify(1, 200_000_000, sender=USER))
-    t5 = tx(5, TSUSDE_MINTER, 140)
-    link(4, t4, 130, t5, 140, ETH_POOL, TSUSDE_MINTER, 10**6,
-         JETTON_MINT_OP,
-         encode_jetton_mint(1, to=USER, ton_amount=10**5,
-                            amount=199_000_000))
-    t6 = tx(6, UW_TSUSDE, 150)
-    link(5, t5, 140, t6, 150, TSUSDE_MINTER, UW_TSUSDE, 10**5,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(1, 199_000_000, from_owner=ETH_POOL))
+    t1 = b.tx("et1", 1, USER, 100)
+    b.ext("et1", t1, 100, USER)
+    t2 = b.tx("et1", 2, UW_USDE, 110)
+    b.link("et1", 1, t1, 100, t2, 110, USER, UW_USDE, 10**8,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(1, 200_000_000, destination=ETH_POOL))
+    t3 = b.tx("et1", 3, PW_USDE, 120)
+    b.link("et1", 2, t2, 110, t3, 120, UW_USDE, PW_USDE, 10**7,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(1, 200_000_000, from_owner=USER))
+    t4 = b.tx("et1", 4, ETH_POOL, 130)
+    b.link("et1", 3, t3, 120, t4, 130, PW_USDE, ETH_POOL, 10**6,
+           JETTON_NOTIFY_OP, encode_jetton_notify(1, 200_000_000, sender=USER))
+    t5 = b.tx("et1", 5, TSUSDE_MINTER, 140)
+    b.link("et1", 4, t4, 130, t5, 140, ETH_POOL, TSUSDE_MINTER, 10**6,
+           JETTON_MINT_OP,
+           encode_jetton_mint(1, to=USER, ton_amount=10**5,
+                              amount=199_000_000))
+    t6 = b.tx("et1", 6, UW_TSUSDE, 150)
+    b.link("et1", 5, t5, 140, t6, 150, TSUSDE_MINTER, UW_TSUSDE, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(1, 199_000_000, from_owner=ETH_POOL))
 
     jw = spark.createDataFrame(
         [(UW_USDE, USER, USDE), (PW_USDE, ETH_POOL, USDE),
          (UW_TSUSDE, USER, TSUSDE_MINTER)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _ETHENA_ORACLE = f"""
@@ -1764,7 +1568,6 @@ def _coffee_fixture(spark: SparkSession):
     log, payout_internal (c0ffee21) to the paying vault, and the payout
     jetton chain to the user (reference CoffeeSwapBlockMatcher,
     blocks/swaps.py:1231-1448)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         COFFEE_PAYOUT_INTERNAL,
         COFFEE_SWAP_EVENT,
@@ -1781,67 +1584,41 @@ def _coffee_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
+    b = _TraceBuilder()
 
-    def tx(n, account, lt):
-        h = f"cf1-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", "cf1"))
-        return h
-
-    def link(n, src_tx, src_lt, dst_tx, dst_lt, source, destination,
-             value, opcode, body):
-        mh, bh = f"cf1-m{n}", None
-        if body is not None:
-            bh = f"bh-cf1-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append(("cf1", src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append(("cf1", dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    t1 = tx(1, USER, 100)
-    msgs.append(("cf1", t1, 100, "cf1-e0", "in", None, USER,
-                 None, None, 98, None))
-    t2 = tx(2, CVAULT_TON, 110)
-    link(1, t1, 100, t2, 110, USER, CVAULT_TON, 2 * 10**9,
-         COFFEE_SWAP_NATIVE,
-         encode_coffee_swap_native(1, 10**9, first_pool=CPOOL,
-                                   min_out=450))
-    t3 = tx(3, CPOOL, 120)
-    link(2, t2, 110, t3, 120, CVAULT_TON, CPOOL, 10**6,
-         COFFEE_SWAP_INTERNAL, None)
+    t1 = b.tx("cf1", 1, USER, 100)
+    b.ext("cf1", t1, 100, USER)
+    t2 = b.tx("cf1", 2, CVAULT_TON, 110)
+    b.link("cf1", 1, t1, 100, t2, 110, USER, CVAULT_TON, 2 * 10**9,
+           COFFEE_SWAP_NATIVE,
+           encode_coffee_swap_native(1, 10**9, first_pool=CPOOL,
+                                     min_out=450))
+    t3 = b.tx("cf1", 3, CPOOL, 120)
+    b.link("cf1", 2, t2, 110, t3, 120, CVAULT_TON, CPOOL, 10**6,
+           COFFEE_SWAP_INTERNAL, None)
     # pool success event log (external-out, no consuming tx)
     ev_body = encode_coffee_swap_event(1, "TON", 10**9, 600)
-    bodies.append(("bh-cf1-ev", ev_body))
-    msgs.append(("cf1", t3, 120, "cf1-ev", "out", CPOOL, None,
-                 None, COFFEE_SWAP_EVENT, 121, "bh-cf1-ev"))
-    t4 = tx(4, CVAULT_J, 130)
-    link(3, t3, 120, t4, 130, CPOOL, CVAULT_J, 10**6,
-         COFFEE_PAYOUT_INTERNAL,
-         encode_coffee_payout_internal(1, recipient=USER, amount=600))
-    t5 = tx(5, CVW, 140)
-    link(4, t4, 130, t5, 140, CVAULT_J, CVW, 10**5, JETTON_TRANSFER_OP,
-         encode_jetton_transfer(2, 600, destination=USER))
-    t6 = tx(6, UW_J5, 150)
-    link(5, t5, 140, t6, 150, CVW, UW_J5, 10**4, JETTON_INTERNAL_OP,
-         encode_jetton_internal(2, 600, from_owner=CVAULT_J))
-    t7 = tx(7, USER, 160)
-    link(6, t6, 150, t7, 160, UW_J5, USER, 1, JETTON_NOTIFY_OP,
-         encode_jetton_notify(2, 600, sender=CVAULT_J))
+    b.event("cf1", "ev", t3, 120, CPOOL, COFFEE_SWAP_EVENT, ev_body)
+    t4 = b.tx("cf1", 4, CVAULT_J, 130)
+    b.link("cf1", 3, t3, 120, t4, 130, CPOOL, CVAULT_J, 10**6,
+           COFFEE_PAYOUT_INTERNAL,
+           encode_coffee_payout_internal(1, recipient=USER, amount=600))
+    t5 = b.tx("cf1", 5, CVW, 140)
+    b.link("cf1", 4, t4, 130, t5, 140, CVAULT_J, CVW, 10**5,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(2, 600, destination=USER))
+    t6 = b.tx("cf1", 6, UW_J5, 150)
+    b.link("cf1", 5, t5, 140, t6, 150, CVW, UW_J5, 10**4, JETTON_INTERNAL_OP,
+           encode_jetton_internal(2, 600, from_owner=CVAULT_J))
+    t7 = b.tx("cf1", 7, USER, 160)
+    b.link("cf1", 6, t6, 150, t7, 160, UW_J5, USER, 1, JETTON_NOTIFY_OP,
+           encode_jetton_notify(2, 600, sender=CVAULT_J))
 
     jw = spark.createDataFrame(
         [(CVW, CVAULT_J, J5), (UW_J5, USER, J5)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _COFFEE_ORACLE = f"""
@@ -1912,7 +1689,6 @@ def _stonfi_v2_fixture(spark: SparkSession):
     14 transactions; every decoded body (three full TEP-74 chains and two
     pay_to payloads) is a real BOC.  Reference walk:
     StonfiV2SwapBlockMatcher, blocks/swaps.py:233-477."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         STONFI_V2_EXIT_OK,
         STONFI_V2_PAYOUT,
@@ -1926,25 +1702,7 @@ def _stonfi_v2_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
-
-    def tx(n, account, lt):
-        h = f"sv2-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", "sv2"))
-        return h
-
-    def link(n, src_tx, src_lt, dst_tx, dst_lt, source, destination,
-             value, opcode, body):
-        mh, bh = f"sv2-m{n}", None
-        if body is not None:
-            bh = f"bh-sv2-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append(("sv2", src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append(("sv2", dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
+    b = _TraceBuilder()
 
     def pay_to(q, amount_out, token_wallet):
         return encode_stonfi_v2_pay_to(
@@ -1955,53 +1713,55 @@ def _stonfi_v2_fixture(spark: SparkSession):
             token1_address=None,
         )
 
-    t1 = tx(1, USER, 100)
-    msgs.append(("sv2", t1, 100, "sv2-e0", "in", None, USER,
-                 None, None, 98, None))
+    t1 = b.tx("sv2", 1, USER, 100)
+    b.ext("sv2", t1, 100, USER)
     # input chain: user J_A wallet → router J_A wallet → router notify
-    t2 = tx(2, UW2_A, 110)
-    link(1, t1, 100, t2, 110, USER, UW2_A, 10**8, JETTON_TRANSFER_OP,
-         encode_jetton_transfer(7, 1000, destination=V2ROUTER))
-    t3 = tx(3, RW2_A, 120)
-    link(2, t2, 110, t3, 120, UW2_A, RW2_A, 10**7, JETTON_INTERNAL_OP,
-         encode_jetton_internal(7, 1000, from_owner=USER))
-    t4 = tx(4, V2ROUTER, 130)
-    link(3, t3, 120, t4, 130, RW2_A, V2ROUTER, 10**6, JETTON_NOTIFY_OP,
-         encode_jetton_notify(7, 1000, sender=USER))
+    t2 = b.tx("sv2", 2, UW2_A, 110)
+    b.link("sv2", 1, t1, 100, t2, 110, USER, UW2_A, 10**8, JETTON_TRANSFER_OP,
+           encode_jetton_transfer(7, 1000, destination=V2ROUTER))
+    t3 = b.tx("sv2", 3, RW2_A, 120)
+    b.link("sv2", 2, t2, 110, t3, 120, UW2_A, RW2_A, 10**7, JETTON_INTERNAL_OP,
+           encode_jetton_internal(7, 1000, from_owner=USER))
+    t4 = b.tx("sv2", 4, V2ROUTER, 130)
+    b.link("sv2", 3, t3, 120, t4, 130, RW2_A, V2ROUTER, 10**6,
+           JETTON_NOTIFY_OP, encode_jetton_notify(7, 1000, sender=USER))
     # hop 1: swap at pool 1, pay_to back at the router
-    t5 = tx(5, V2POOL1, 140)
-    link(4, t4, 130, t5, 140, V2ROUTER, V2POOL1, 10**6,
-         STONFI_V2_POOL_SWAP, None)
-    t6 = tx(6, V2ROUTER, 150)
-    link(5, t5, 140, t6, 150, V2POOL1, V2ROUTER, 10**6,
-         STONFI_V2_PAYOUT, pay_to(7, 800, RW2_B))
+    t5 = b.tx("sv2", 5, V2POOL1, 140)
+    b.link("sv2", 4, t4, 130, t5, 140, V2ROUTER, V2POOL1, 10**6,
+           STONFI_V2_POOL_SWAP, None)
+    t6 = b.tx("sv2", 6, V2ROUTER, 150)
+    b.link("sv2", 5, t5, 140, t6, 150, V2POOL1, V2ROUTER, 10**6,
+           STONFI_V2_PAYOUT, pay_to(7, 800, RW2_B))
     # router pays itself J_B and the notify triggers hop 2
-    t7 = tx(7, RW2_B, 160)
-    link(6, t6, 150, t7, 160, V2ROUTER, RW2_B, 10**6, JETTON_TRANSFER_OP,
-         encode_jetton_transfer(8, 800, destination=V2ROUTER))
-    t8 = tx(8, RW2_B2, 170)
-    link(7, t7, 160, t8, 170, RW2_B, RW2_B2, 10**5, JETTON_INTERNAL_OP,
-         encode_jetton_internal(8, 800, from_owner=V2ROUTER))
-    t9 = tx(9, V2ROUTER, 180)
-    link(8, t8, 170, t9, 180, RW2_B2, V2ROUTER, 10**4, JETTON_NOTIFY_OP,
-         encode_jetton_notify(8, 800, sender=V2ROUTER))
-    t10 = tx(10, V2POOL2, 190)
-    link(9, t9, 180, t10, 190, V2ROUTER, V2POOL2, 10**4,
-         STONFI_V2_POOL_SWAP, None)
-    t11 = tx(11, V2ROUTER, 200)
-    link(10, t10, 190, t11, 200, V2POOL2, V2ROUTER, 10**4,
-         STONFI_V2_PAYOUT, pay_to(8, 600, RW2_C))
+    t7 = b.tx("sv2", 7, RW2_B, 160)
+    b.link("sv2", 6, t6, 150, t7, 160, V2ROUTER, RW2_B, 10**6,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(8, 800, destination=V2ROUTER))
+    t8 = b.tx("sv2", 8, RW2_B2, 170)
+    b.link("sv2", 7, t7, 160, t8, 170, RW2_B, RW2_B2, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(8, 800, from_owner=V2ROUTER))
+    t9 = b.tx("sv2", 9, V2ROUTER, 180)
+    b.link("sv2", 8, t8, 170, t9, 180, RW2_B2, V2ROUTER, 10**4,
+           JETTON_NOTIFY_OP, encode_jetton_notify(8, 800, sender=V2ROUTER))
+    t10 = b.tx("sv2", 10, V2POOL2, 190)
+    b.link("sv2", 9, t9, 180, t10, 190, V2ROUTER, V2POOL2, 10**4,
+           STONFI_V2_POOL_SWAP, None)
+    t11 = b.tx("sv2", 11, V2ROUTER, 200)
+    b.link("sv2", 10, t10, 190, t11, 200, V2POOL2, V2ROUTER, 10**4,
+           STONFI_V2_PAYOUT, pay_to(8, 600, RW2_C))
     # payout chain: router J_C wallet → user J_C wallet → user notify
-    t12 = tx(12, RW2_C, 210)
-    link(11, t11, 200, t12, 210, V2ROUTER, RW2_C, 10**4,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(9, 600, destination=USER))
-    t13 = tx(13, UW2_C, 220)
-    link(12, t12, 210, t13, 220, RW2_C, UW2_C, 10**3, JETTON_INTERNAL_OP,
-         encode_jetton_internal(9, 600, from_owner=V2ROUTER))
-    t14 = tx(14, USER, 230)
-    link(13, t13, 220, t14, 230, UW2_C, USER, 1, JETTON_NOTIFY_OP,
-         encode_jetton_notify(9, 600, sender=V2ROUTER))
+    t12 = b.tx("sv2", 12, RW2_C, 210)
+    b.link("sv2", 11, t11, 200, t12, 210, V2ROUTER, RW2_C, 10**4,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(9, 600, destination=USER))
+    t13 = b.tx("sv2", 13, UW2_C, 220)
+    b.link("sv2", 12, t12, 210, t13, 220, RW2_C, UW2_C, 10**3,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(9, 600, from_owner=V2ROUTER))
+    t14 = b.tx("sv2", 14, USER, 230)
+    b.link("sv2", 13, t13, 220, t14, 230, UW2_C, USER, 1, JETTON_NOTIFY_OP,
+           encode_jetton_notify(9, 600, sender=V2ROUTER))
 
     jw = spark.createDataFrame(
         [(UW2_A, USER, J_A), (RW2_A, V2ROUTER, J_A),
@@ -2009,13 +1769,7 @@ def _stonfi_v2_fixture(spark: SparkSession):
          (RW2_C, V2ROUTER, J_C), (UW2_C, USER, J_C)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _STONFI_V2_ORACLE = f"""
@@ -2103,7 +1857,6 @@ def _jvault_fixture(spark: SparkSession):
     Reference: JVaultStakeBlockMatcher (jvault.py:104-183),
     JVaultClaimBlockMatcher (:317-371), JVaultUnstakeBlockMatcher
     (:207-296)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         JVAULT_CLAIM,
         JVAULT_RECEIVE,
@@ -2123,107 +1876,79 @@ def _jvault_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     period_payload = base64.b64encode(serialize_boc(
         Builder().store_uint(0x17, 32).store_uint(JV_PERIOD, 32)
         .end_cell())).decode()
 
     # jv1: stake 1000 JV_J for 90 days
-    t1 = tx("jv1", 1, USER, 100); ext("jv1", t1, 100)
-    t2 = tx("jv1", 2, JV_UW, 110)
-    link("jv1", 1, t1, 100, t2, 110, USER, JV_UW, 10**8,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(11, 1000, destination=JV_POOL,
-                                forward_payload=period_payload))
-    t3 = tx("jv1", 3, JV_PW, 120)
-    link("jv1", 2, t2, 110, t3, 120, JV_UW, JV_PW, 10**7,
-         JETTON_INTERNAL_OP, encode_jetton_internal(11, 1000,
-                                                    from_owner=USER))
-    t4 = tx("jv1", 4, JV_POOL, 130)
-    link("jv1", 3, t3, 120, t4, 130, JV_PW, JV_POOL, 10**6,
-         JETTON_NOTIFY_OP, encode_jetton_notify(11, 1000, sender=USER))
-    t5 = tx("jv1", 5, JV_STAKE_W, 140)
-    link("jv1", 4, t4, 130, t5, 140, JV_POOL, JV_STAKE_W, 10**6,
-         JVAULT_RECEIVE, encode_jvault_receive(11, 1000))
-    t6 = tx("jv1", 6, JV_POOL, 150)
-    link("jv1", 5, t5, 140, t6, 150, JV_STAKE_W, JV_POOL, 10**5,
-         JVAULT_REQUEST_UPDATE, None)
+    t1 = b.tx("jv1", 1, USER, 100); b.ext("jv1", t1, 100, USER)
+    t2 = b.tx("jv1", 2, JV_UW, 110)
+    b.link("jv1", 1, t1, 100, t2, 110, USER, JV_UW, 10**8,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(11, 1000, destination=JV_POOL,
+                                  forward_payload=period_payload))
+    t3 = b.tx("jv1", 3, JV_PW, 120)
+    b.link("jv1", 2, t2, 110, t3, 120, JV_UW, JV_PW, 10**7,
+           JETTON_INTERNAL_OP, encode_jetton_internal(11, 1000,
+                                                      from_owner=USER))
+    t4 = b.tx("jv1", 4, JV_POOL, 130)
+    b.link("jv1", 3, t3, 120, t4, 130, JV_PW, JV_POOL, 10**6,
+           JETTON_NOTIFY_OP, encode_jetton_notify(11, 1000, sender=USER))
+    t5 = b.tx("jv1", 5, JV_STAKE_W, 140)
+    b.link("jv1", 4, t4, 130, t5, 140, JV_POOL, JV_STAKE_W, 10**6,
+           JVAULT_RECEIVE, encode_jvault_receive(11, 1000))
+    t6 = b.tx("jv1", 6, JV_POOL, 150)
+    b.link("jv1", 5, t5, 140, t6, 150, JV_STAKE_W, JV_POOL, 10**5,
+           JVAULT_REQUEST_UPDATE, None)
 
     # jv2: claim rewards — 250 JV_RJ paid out through a full chain
-    u1 = tx("jv2", 1, USER, 200); ext("jv2", u1, 200)
-    u2 = tx("jv2", 2, JV_STAKE_W, 210)
-    link("jv2", 1, u1, 200, u2, 210, USER, JV_STAKE_W, 10**8,
-         JVAULT_CLAIM, encode_jvault_claim(12, [JV_RJ]))
-    u3 = tx("jv2", 3, JV_POOL, 220)
-    link("jv2", 2, u2, 210, u3, 220, JV_STAKE_W, JV_POOL, 10**7,
-         JVAULT_SEND_CLAIMED, None)
-    u4 = tx("jv2", 4, JV_PRW, 230)
-    link("jv2", 3, u3, 220, u4, 230, JV_POOL, JV_PRW, 10**6,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(12, 250, destination=USER))
-    u5 = tx("jv2", 5, JV_URW, 240)
-    link("jv2", 4, u4, 230, u5, 240, JV_PRW, JV_URW, 10**5,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(12, 250, from_owner=JV_POOL))
-    u6 = tx("jv2", 6, USER, 250)
-    link("jv2", 5, u5, 240, u6, 250, JV_URW, USER, 1,
-         JETTON_NOTIFY_OP, encode_jetton_notify(12, 250, sender=JV_POOL))
+    u1 = b.tx("jv2", 1, USER, 200); b.ext("jv2", u1, 200, USER)
+    u2 = b.tx("jv2", 2, JV_STAKE_W, 210)
+    b.link("jv2", 1, u1, 200, u2, 210, USER, JV_STAKE_W, 10**8,
+           JVAULT_CLAIM, encode_jvault_claim(12, [JV_RJ]))
+    u3 = b.tx("jv2", 3, JV_POOL, 220)
+    b.link("jv2", 2, u2, 210, u3, 220, JV_STAKE_W, JV_POOL, 10**7,
+           JVAULT_SEND_CLAIMED, None)
+    u4 = b.tx("jv2", 4, JV_PRW, 230)
+    b.link("jv2", 3, u3, 220, u4, 230, JV_POOL, JV_PRW, 10**6,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(12, 250, destination=USER))
+    u5 = b.tx("jv2", 5, JV_URW, 240)
+    b.link("jv2", 4, u4, 230, u5, 240, JV_PRW, JV_URW, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(12, 250, from_owner=JV_POOL))
+    u6 = b.tx("jv2", 6, USER, 250)
+    b.link("jv2", 5, u5, 240, u6, 250, JV_URW, USER, 1,
+           JETTON_NOTIFY_OP, encode_jetton_notify(12, 250, sender=JV_POOL))
 
     # jv3: unstake 777 — rewards round-trip, jettons returned
-    v1 = tx("jv3", 1, USER, 300); ext("jv3", v1, 300)
-    v2 = tx("jv3", 2, JV_STAKE_W, 310)
-    link("jv3", 1, v1, 300, v2, 310, USER, JV_STAKE_W, 10**8,
-         JVAULT_UNSTAKE, encode_jvault_unstake(13, 777))
-    v3 = tx("jv3", 3, JV_POOL, 320)
-    link("jv3", 2, v2, 310, v3, 320, JV_STAKE_W, JV_POOL, 10**7,
-         JVAULT_REQUEST_UPDATE, None)
-    v4 = tx("jv3", 4, JV_PW, 330)
-    link("jv3", 3, v3, 320, v4, 330, JV_POOL, JV_PW, 10**6,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(13, 777, destination=USER))
-    v5 = tx("jv3", 5, JV_UW, 340)
-    link("jv3", 4, v4, 330, v5, 340, JV_PW, JV_UW, 10**5,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(13, 777, from_owner=JV_POOL))
-    v6 = tx("jv3", 6, USER, 350)
-    link("jv3", 5, v5, 340, v6, 350, JV_UW, USER, 1,
-         JETTON_NOTIFY_OP, encode_jetton_notify(13, 777, sender=JV_POOL))
+    v1 = b.tx("jv3", 1, USER, 300); b.ext("jv3", v1, 300, USER)
+    v2 = b.tx("jv3", 2, JV_STAKE_W, 310)
+    b.link("jv3", 1, v1, 300, v2, 310, USER, JV_STAKE_W, 10**8,
+           JVAULT_UNSTAKE, encode_jvault_unstake(13, 777))
+    v3 = b.tx("jv3", 3, JV_POOL, 320)
+    b.link("jv3", 2, v2, 310, v3, 320, JV_STAKE_W, JV_POOL, 10**7,
+           JVAULT_REQUEST_UPDATE, None)
+    v4 = b.tx("jv3", 4, JV_PW, 330)
+    b.link("jv3", 3, v3, 320, v4, 330, JV_POOL, JV_PW, 10**6,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(13, 777, destination=USER))
+    v5 = b.tx("jv3", 5, JV_UW, 340)
+    b.link("jv3", 4, v4, 330, v5, 340, JV_PW, JV_UW, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(13, 777, from_owner=JV_POOL))
+    v6 = b.tx("jv3", 6, USER, 350)
+    b.link("jv3", 5, v5, 340, v6, 350, JV_UW, USER, 1,
+           JETTON_NOTIFY_OP, encode_jetton_notify(13, 777, sender=JV_POOL))
 
     jw = spark.createDataFrame(
         [(JV_UW, USER, JV_J), (JV_PW, JV_POOL, JV_J),
          (JV_PRW, JV_POOL, JV_RJ), (JV_URW, USER, JV_RJ)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _JVAULT_ORACLE = f"""
@@ -2306,7 +2031,6 @@ def _layerzero_fixture(spark: SparkSession):
     endpoint → channel commit carrying the packet → msglib-connection
     callback).  Reference: LayerZeroSendMatcher (layerzero.py:149-272),
     receive (:338-424), commit (:424-506)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         LZ_CHANNEL_COMMIT_PACKET,
         LZ_CHANNEL_SEND,
@@ -2333,99 +2057,72 @@ def _layerzero_fixture(spark: SparkSession):
 
     packet = encode_lz_packet(LZ_SRC_EID, LZ_SRC_OAPP, LZ_DST_EID,
                               LZ_DST_OAPP, nonce=77, guid=0xCAFE)
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # lz1: send — OApp → endpoint → channel → mconn → uln → cb → OApp cb
-    t1 = tx("lz1", 1, LZO_OAPP, 100); ext("lz1", t1, 100, LZO_OAPP)
-    t2 = tx("lz1", 2, LZO_ENDPOINT, 110)
-    link("lz1", 1, t1, 100, t2, 110, LZO_OAPP, LZO_ENDPOINT, 10**7,
-         LZ_ENDPOINT_SEND, None)
-    t3 = tx("lz1", 3, LZO_CHANNEL, 120)
-    link("lz1", 2, t2, 110, t3, 120, LZO_ENDPOINT, LZO_CHANNEL, 10**6,
-         LZ_CHANNEL_SEND, None)
-    t4 = tx("lz1", 4, LZO_MCONN, 130)
-    link("lz1", 3, t3, 120, t4, 130, LZO_CHANNEL, LZO_MCONN, 10**6,
-         LZ_MCONN_SEND, None)
-    t5 = tx("lz1", 5, LZO_ULN, 140)
-    link("lz1", 4, t4, 130, t5, 140, LZO_MCONN, LZO_ULN, 10**6,
-         LZ_ULN_SEND, None)
-    t6 = tx("lz1", 6, LZO_CHANNEL, 150)
-    link("lz1", 5, t5, 140, t6, 150, LZO_ULN, LZO_CHANNEL, 10**6,
-         LZ_MSGLIB_SEND_CB, None)
-    t7 = tx("lz1", 7, LZO_OAPP, 160)
-    link("lz1", 6, t6, 150, t7, 160, LZO_CHANNEL, LZO_OAPP, 10**6,
-         LZ_OAPP_SEND_CB,
-         encode_lz_send_callback(42, 0x11, 0x22, packet,
-                                 native_fee=5000, zro_fee=3))
+    t1 = b.tx("lz1", 1, LZO_OAPP, 100); b.ext("lz1", t1, 100, LZO_OAPP)
+    t2 = b.tx("lz1", 2, LZO_ENDPOINT, 110)
+    b.link("lz1", 1, t1, 100, t2, 110, LZO_OAPP, LZO_ENDPOINT, 10**7,
+           LZ_ENDPOINT_SEND, None)
+    t3 = b.tx("lz1", 3, LZO_CHANNEL, 120)
+    b.link("lz1", 2, t2, 110, t3, 120, LZO_ENDPOINT, LZO_CHANNEL, 10**6,
+           LZ_CHANNEL_SEND, None)
+    t4 = b.tx("lz1", 4, LZO_MCONN, 130)
+    b.link("lz1", 3, t3, 120, t4, 130, LZO_CHANNEL, LZO_MCONN, 10**6,
+           LZ_MCONN_SEND, None)
+    t5 = b.tx("lz1", 5, LZO_ULN, 140)
+    b.link("lz1", 4, t4, 130, t5, 140, LZO_MCONN, LZO_ULN, 10**6,
+           LZ_ULN_SEND, None)
+    t6 = b.tx("lz1", 6, LZO_CHANNEL, 150)
+    b.link("lz1", 5, t5, 140, t6, 150, LZO_ULN, LZO_CHANNEL, 10**6,
+           LZ_MSGLIB_SEND_CB, None)
+    t7 = b.tx("lz1", 7, LZO_OAPP, 160)
+    b.link("lz1", 6, t6, 150, t7, 160, LZO_CHANNEL, LZO_OAPP, 10**6,
+           LZ_OAPP_SEND_CB,
+           encode_lz_send_callback(42, 0x11, 0x22, packet,
+                                   native_fee=5000, zro_fee=3))
 
     # lz2: receive — executor → channel prepare → OApp prepare → lock →
     # execute (packet) → execute callback
-    u1 = tx("lz2", 1, LZO_EXEC, 200); ext("lz2", u1, 200, LZO_EXEC)
-    u2 = tx("lz2", 2, LZO_CHANNEL, 210)
-    link("lz2", 1, u1, 200, u2, 210, LZO_EXEC, LZO_CHANNEL, 10**7,
-         LZ_RECEIVE_PREPARE, None)
-    u3 = tx("lz2", 3, LZO_OAPP, 220)
-    link("lz2", 2, u2, 210, u3, 220, LZO_CHANNEL, LZO_OAPP, 10**6,
-         LZ_OAPP_RECEIVE_PREPARE, None)
-    u4 = tx("lz2", 4, LZO_CHANNEL, 230)
-    link("lz2", 3, u3, 220, u4, 230, LZO_OAPP, LZO_CHANNEL, 10**6,
-         LZ_RECEIVE_LOCK, None)
-    u5 = tx("lz2", 5, LZO_OAPP, 240)
-    link("lz2", 4, u4, 230, u5, 240, LZO_CHANNEL, LZO_OAPP, 10**6,
-         LZ_RECEIVE_EXECUTE,
-         encode_lz_packet_envelope(LZ_RECEIVE_EXECUTE, packet))
-    u6 = tx("lz2", 6, LZO_CHANNEL, 250)
-    link("lz2", 5, u5, 240, u6, 250, LZO_OAPP, LZO_CHANNEL, 10**6,
-         LZ_OAPP_EXECUTE_CB, None)
+    u1 = b.tx("lz2", 1, LZO_EXEC, 200); b.ext("lz2", u1, 200, LZO_EXEC)
+    u2 = b.tx("lz2", 2, LZO_CHANNEL, 210)
+    b.link("lz2", 1, u1, 200, u2, 210, LZO_EXEC, LZO_CHANNEL, 10**7,
+           LZ_RECEIVE_PREPARE, None)
+    u3 = b.tx("lz2", 3, LZO_OAPP, 220)
+    b.link("lz2", 2, u2, 210, u3, 220, LZO_CHANNEL, LZO_OAPP, 10**6,
+           LZ_OAPP_RECEIVE_PREPARE, None)
+    u4 = b.tx("lz2", 4, LZO_CHANNEL, 230)
+    b.link("lz2", 3, u3, 220, u4, 230, LZO_OAPP, LZO_CHANNEL, 10**6,
+           LZ_RECEIVE_LOCK, None)
+    u5 = b.tx("lz2", 5, LZO_OAPP, 240)
+    b.link("lz2", 4, u4, 230, u5, 240, LZO_CHANNEL, LZO_OAPP, 10**6,
+           LZ_RECEIVE_EXECUTE,
+           encode_lz_packet_envelope(LZ_RECEIVE_EXECUTE, packet))
+    u6 = b.tx("lz2", 6, LZO_CHANNEL, 250)
+    b.link("lz2", 5, u5, 240, u6, 250, LZO_OAPP, LZO_CHANNEL, 10**6,
+           LZ_OAPP_EXECUTE_CB, None)
 
     # lz3: commit — dvn → uln commit → uln-connection → endpoint →
     # channel commit (packet) → msglib-connection callback
-    v1 = tx("lz3", 1, LZO_DVN, 300); ext("lz3", v1, 300, LZO_DVN)
-    v2 = tx("lz3", 2, LZO_ULN, 310)
-    link("lz3", 1, v1, 300, v2, 310, LZO_DVN, LZO_ULN, 10**7,
-         LZ_ULN_COMMIT, None)
-    v3 = tx("lz3", 3, LZO_UCONN, 320)
-    link("lz3", 2, v2, 310, v3, 320, LZO_ULN, LZO_UCONN, 10**6,
-         LZ_ULN_CONN_COMMIT, None)
-    v4 = tx("lz3", 4, LZO_ENDPOINT, 330)
-    link("lz3", 3, v3, 320, v4, 330, LZO_UCONN, LZO_ENDPOINT, 10**6,
-         LZ_ENDPOINT_COMMIT, None)
-    v5 = tx("lz3", 5, LZO_CHANNEL, 340)
-    link("lz3", 4, v4, 330, v5, 340, LZO_ENDPOINT, LZO_CHANNEL, 10**6,
-         LZ_CHANNEL_COMMIT_PACKET,
-         encode_lz_packet_envelope(LZ_CHANNEL_COMMIT_PACKET, packet))
-    v6 = tx("lz3", 6, LZO_MCONN, 350)
-    link("lz3", 5, v5, 340, v6, 350, LZO_CHANNEL, LZO_MCONN, 10**6,
-         LZ_MCONN_COMMIT_CB, None)
+    v1 = b.tx("lz3", 1, LZO_DVN, 300); b.ext("lz3", v1, 300, LZO_DVN)
+    v2 = b.tx("lz3", 2, LZO_ULN, 310)
+    b.link("lz3", 1, v1, 300, v2, 310, LZO_DVN, LZO_ULN, 10**7,
+           LZ_ULN_COMMIT, None)
+    v3 = b.tx("lz3", 3, LZO_UCONN, 320)
+    b.link("lz3", 2, v2, 310, v3, 320, LZO_ULN, LZO_UCONN, 10**6,
+           LZ_ULN_CONN_COMMIT, None)
+    v4 = b.tx("lz3", 4, LZO_ENDPOINT, 330)
+    b.link("lz3", 3, v3, 320, v4, 330, LZO_UCONN, LZO_ENDPOINT, 10**6,
+           LZ_ENDPOINT_COMMIT, None)
+    v5 = b.tx("lz3", 5, LZO_CHANNEL, 340)
+    b.link("lz3", 4, v4, 330, v5, 340, LZO_ENDPOINT, LZO_CHANNEL, 10**6,
+           LZ_CHANNEL_COMMIT_PACKET,
+           encode_lz_packet_envelope(LZ_CHANNEL_COMMIT_PACKET, packet))
+    v6 = b.tx("lz3", 6, LZO_MCONN, 350)
+    b.link("lz3", 5, v5, 340, v6, 350, LZO_CHANNEL, LZO_MCONN, 10**6,
+           LZ_MCONN_COMMIT_CB, None)
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _LAYERZERO_ORACLE = f"""
@@ -2514,7 +2211,6 @@ def _tgbtc_fixture(spark: SparkSession):
     the coordinator call).  Reference: TgBTCMintBlockMatcher
     (tgbtc.py:54-156), TgBTCBurnBlockMatcher (:179-246),
     TgBTCNewKeyBlockMatcher (:270-332)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.base import JETTON_BURN
     from ton_indexer_spark.classifier.protocols import (
         TGBTC_BURN_EVENT,
@@ -2538,89 +2234,55 @@ def _tgbtc_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, None, lt - 2, None))
-
-    def event(trace, n, src_tx, src_lt, source, opcode, body):
-        bh = f"bh-{trace}-ev{n}"
-        bodies.append((bh, body))
-        msgs.append((trace, src_tx, src_lt, f"{trace}-ev{n}", "out",
-                     source, None, None, opcode, src_lt + 1, bh))
+    b = _TraceBuilder()
 
     # tb1: peg-in — mint 100000 sat-nanos of tgBTC to the user
-    t1 = tx("tb1", 1, TB_COORD, 100); ext("tb1", t1, 100, TB_COORD)
-    t2 = tx("tb1", 2, TB_HEAD, 110)
-    link("tb1", 1, t1, 100, t2, 110, TB_COORD, TB_HEAD, 10**7,
-         TGBTC_MINT_HEAD, None)
-    t3 = tx("tb1", 3, TB_TELEPORT, 120)
-    link("tb1", 2, t2, 110, t3, 120, TB_HEAD, TB_TELEPORT, 10**6,
-         TGBTC_MINT_TAIL, None)
-    event("tb1", 1, t3, 120, TB_TELEPORT, TGBTC_MINT_EVENT,
-          encode_tgbtc_mint_event(100000, USER, TB_TXID))
-    t4 = tx("tb1", 4, TB_MINTER, 130)
-    link("tb1", 3, t3, 120, t4, 130, TB_TELEPORT, TB_MINTER, 10**6,
-         0x642B7D07, encode_jetton_mint(31, USER, 10**6, 100000))
-    t5 = tx("tb1", 5, TB_UW, 140)
-    link("tb1", 4, t4, 130, t5, 140, TB_MINTER, TB_UW, 10**5,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(31, 100000, from_owner=TB_TELEPORT))
+    t1 = b.tx("tb1", 1, TB_COORD, 100); b.ext("tb1", t1, 100, TB_COORD)
+    t2 = b.tx("tb1", 2, TB_HEAD, 110)
+    b.link("tb1", 1, t1, 100, t2, 110, TB_COORD, TB_HEAD, 10**7,
+           TGBTC_MINT_HEAD, None)
+    t3 = b.tx("tb1", 3, TB_TELEPORT, 120)
+    b.link("tb1", 2, t2, 110, t3, 120, TB_HEAD, TB_TELEPORT, 10**6,
+           TGBTC_MINT_TAIL, None)
+    b.event("tb1", "ev1", t3, 120, TB_TELEPORT, TGBTC_MINT_EVENT,
+            encode_tgbtc_mint_event(100000, USER, TB_TXID))
+    t4 = b.tx("tb1", 4, TB_MINTER, 130)
+    b.link("tb1", 3, t3, 120, t4, 130, TB_TELEPORT, TB_MINTER, 10**6,
+           0x642B7D07, encode_jetton_mint(31, USER, 10**6, 100000))
+    t5 = b.tx("tb1", 5, TB_UW, 140)
+    b.link("tb1", 4, t4, 130, t5, 140, TB_MINTER, TB_UW, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(31, 100000, from_owner=TB_TELEPORT))
 
     # tb2: peg-out — burn 5000, notify chain to the teleport's event
-    u1 = tx("tb2", 1, USER, 200); ext("tb2", u1, 200, USER)
-    u2 = tx("tb2", 2, TB_UW, 210)
-    link("tb2", 1, u1, 200, u2, 210, USER, TB_UW, 10**8, JETTON_BURN,
-         encode_jetton_burn(32, 5000, response=USER))
-    u3 = tx("tb2", 3, TB_MINTER, 220)
-    link("tb2", 2, u2, 210, u3, 220, TB_UW, TB_MINTER, 10**6,
-         TGBTC_BURN_NOTIFY, None)
-    u4 = tx("tb2", 4, TB_TELEPORT, 230)
-    link("tb2", 3, u3, 220, u4, 230, TB_MINTER, TB_TELEPORT, 10**6,
-         TGBTC_BURN_NOTIFY_ALT, None)
-    event("tb2", 1, u4, 230, TB_TELEPORT, TGBTC_BURN_EVENT,
-          encode_tgbtc_burn_event(5000, USER, TB_PEGOUT))
+    u1 = b.tx("tb2", 1, USER, 200); b.ext("tb2", u1, 200, USER)
+    u2 = b.tx("tb2", 2, TB_UW, 210)
+    b.link("tb2", 1, u1, 200, u2, 210, USER, TB_UW, 10**8, JETTON_BURN,
+           encode_jetton_burn(32, 5000, response=USER))
+    u3 = b.tx("tb2", 3, TB_MINTER, 220)
+    b.link("tb2", 2, u2, 210, u3, 220, TB_UW, TB_MINTER, 10**6,
+           TGBTC_BURN_NOTIFY, None)
+    u4 = b.tx("tb2", 4, TB_TELEPORT, 230)
+    b.link("tb2", 3, u3, 220, u4, 230, TB_MINTER, TB_TELEPORT, 10**6,
+           TGBTC_BURN_NOTIFY_ALT, None)
+    b.event("tb2", "ev1", u4, 230, TB_TELEPORT, TGBTC_BURN_EVENT,
+            encode_tgbtc_burn_event(5000, USER, TB_PEGOUT))
 
     # tb3: DKG new key — dkg log on the teleport, new-key on the call
-    v1 = tx("tb3", 1, TB_TELEPORT, 300); ext("tb3", v1, 300, TB_TELEPORT)
-    event("tb3", 1, v1, 300, TB_TELEPORT, TGBTC_DKG_EVENT,
-          encode_tgbtc_dkg_event(TB_DKG_TS, TB_PUBKEY))
-    v2 = tx("tb3", 2, TB_COORD, 310)
-    link("tb3", 1, v1, 300, v2, 310, TB_TELEPORT, TB_COORD, 10**6,
-         TGBTC_NEW_KEY_CALL, None)
-    event("tb3", 2, v2, 310, TB_COORD, TGBTC_NEW_KEY_EVENT,
-          encode_tgbtc_new_key_event(3000, TB_PUBKEY2, TB_PEGOUT))
+    v1 = b.tx("tb3", 1, TB_TELEPORT, 300); b.ext("tb3", v1, 300, TB_TELEPORT)
+    b.event("tb3", "ev1", v1, 300, TB_TELEPORT, TGBTC_DKG_EVENT,
+            encode_tgbtc_dkg_event(TB_DKG_TS, TB_PUBKEY))
+    v2 = b.tx("tb3", 2, TB_COORD, 310)
+    b.link("tb3", 1, v1, 300, v2, 310, TB_TELEPORT, TB_COORD, 10**6,
+           TGBTC_NEW_KEY_CALL, None)
+    b.event("tb3", "ev2", v2, 310, TB_COORD, TGBTC_NEW_KEY_EVENT,
+            encode_tgbtc_new_key_event(3000, TB_PUBKEY2, TB_PEGOUT))
 
     jw = spark.createDataFrame(
         [(TB_UW, USER, TB_MASTER)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _TGBTC_ORACLE = f"""
@@ -2701,7 +2363,6 @@ def _tonco_fixture(spark: SparkSession, payload_wallet: str | None = None):
     the refund-leg asset must survive as asset2
     (classifier/classify.py deferred lookup, the reference's
     `if target_asset:` guard in swaps.py:1187-1190)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         TONCO_PAY_TO,
         TONCO_SWAP,
@@ -2715,73 +2376,51 @@ def _tonco_fixture(spark: SparkSession, payload_wallet: str | None = None):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     payload = encode_tonco_swap_payload(
         [(payload_wallet or TC_RW_OUT, 450, USER)]
     )
 
     def swap_trace(trace, exit_code, out_amount, refund):
-        t1 = tx(trace, 1, USER, 100); ext(trace, t1, 100)
-        t2 = tx(trace, 2, TC_UW, 110)
-        link(trace, 1, t1, 100, t2, 110, USER, TC_UW, 10**8,
-             JETTON_TRANSFER_OP,
-             encode_jetton_transfer(21, 1000, destination=TC_ROUTER))
-        t3 = tx(trace, 3, TC_RW_IN, 120)
-        link(trace, 2, t2, 110, t3, 120, TC_UW, TC_RW_IN, 10**7,
-             JETTON_INTERNAL_OP,
-             encode_jetton_internal(21, 1000, from_owner=USER))
-        t4 = tx(trace, 4, TC_ROUTER, 130)
-        link(trace, 3, t3, 120, t4, 130, TC_RW_IN, TC_ROUTER, 10**6,
-             JETTON_NOTIFY_OP,
-             encode_jetton_notify(21, 1000, sender=USER,
-                                  forward_payload=payload))
-        t5 = tx(trace, 5, TC_POOL, 140)
-        link(trace, 4, t4, 130, t5, 140, TC_ROUTER, TC_POOL, 10**6,
-             TONCO_SWAP, None)
-        t6 = tx(trace, 6, TC_ROUTER, 150)
+        t1 = b.tx(trace, 1, USER, 100); b.ext(trace, t1, 100, USER)
+        t2 = b.tx(trace, 2, TC_UW, 110)
+        b.link(trace, 1, t1, 100, t2, 110, USER, TC_UW, 10**8,
+               JETTON_TRANSFER_OP,
+               encode_jetton_transfer(21, 1000, destination=TC_ROUTER))
+        t3 = b.tx(trace, 3, TC_RW_IN, 120)
+        b.link(trace, 2, t2, 110, t3, 120, TC_UW, TC_RW_IN, 10**7,
+               JETTON_INTERNAL_OP,
+               encode_jetton_internal(21, 1000, from_owner=USER))
+        t4 = b.tx(trace, 4, TC_ROUTER, 130)
+        b.link(trace, 3, t3, 120, t4, 130, TC_RW_IN, TC_ROUTER, 10**6,
+               JETTON_NOTIFY_OP,
+               encode_jetton_notify(21, 1000, sender=USER,
+                                    forward_payload=payload))
+        t5 = b.tx(trace, 5, TC_POOL, 140)
+        b.link(trace, 4, t4, 130, t5, 140, TC_ROUTER, TC_POOL, 10**6,
+               TONCO_SWAP, None)
+        t6 = b.tx(trace, 6, TC_ROUTER, 150)
         pay_wallet = TC_RW_IN if refund else TC_RW_OUT
-        link(trace, 5, t5, 140, t6, 150, TC_POOL, TC_ROUTER, 10**6,
-             TONCO_PAY_TO,
-             encode_tonco_pay_to(21, USER, None, exit_code,
-                                 amount0=out_amount, jetton0=pay_wallet))
+        b.link(trace, 5, t5, 140, t6, 150, TC_POOL, TC_ROUTER, 10**6,
+               TONCO_PAY_TO,
+               encode_tonco_pay_to(21, USER, None, exit_code,
+                                   amount0=out_amount, jetton0=pay_wallet))
         # payout (or refund) chain back to the user
         recv_w = TC_UW if refund else TC_UW_OUT
-        t7 = tx(trace, 7, pay_wallet, 160)
-        link(trace, 6, t6, 150, t7, 160, TC_ROUTER, pay_wallet, 10**5,
-             JETTON_TRANSFER_OP,
-             encode_jetton_transfer(22, out_amount, destination=USER))
-        t8 = tx(trace, 8, recv_w, 170)
-        link(trace, 7, t7, 160, t8, 170, pay_wallet, recv_w, 10**4,
-             JETTON_INTERNAL_OP,
-             encode_jetton_internal(22, out_amount,
-                                    from_owner=TC_ROUTER))
-        t9 = tx(trace, 9, USER, 180)
-        link(trace, 8, t8, 170, t9, 180, recv_w, USER, 1,
-             JETTON_NOTIFY_OP,
-             encode_jetton_notify(22, out_amount, sender=TC_ROUTER))
+        t7 = b.tx(trace, 7, pay_wallet, 160)
+        b.link(trace, 6, t6, 150, t7, 160, TC_ROUTER, pay_wallet, 10**5,
+               JETTON_TRANSFER_OP,
+               encode_jetton_transfer(22, out_amount, destination=USER))
+        t8 = b.tx(trace, 8, recv_w, 170)
+        b.link(trace, 7, t7, 160, t8, 170, pay_wallet, recv_w, 10**4,
+               JETTON_INTERNAL_OP,
+               encode_jetton_internal(22, out_amount,
+                                      from_owner=TC_ROUTER))
+        t9 = b.tx(trace, 9, USER, 180)
+        b.link(trace, 8, t8, 170, t9, 180, recv_w, USER, 1,
+               JETTON_NOTIFY_OP,
+               encode_jetton_notify(22, out_amount, sender=TC_ROUTER))
 
     swap_trace("tc1", exit_code=200, out_amount=600, refund=False)
     swap_trace("tc2", exit_code=500, out_amount=1000, refund=True)
@@ -2791,13 +2430,7 @@ def _tonco_fixture(spark: SparkSession, payload_wallet: str | None = None):
          (TC_RW_OUT, TC_ROUTER, TC_J_OUT), (TC_UW_OUT, USER, TC_J_OUT)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _TONCO_ORACLE = f"""
@@ -2908,7 +2541,6 @@ def _nominator_fixture(spark: SparkSession):
     (op 0x2 with two value payout legs).  The comment bodies are real
     text-comment BOCs (op 0 + snake string).  Reference:
     blocks/staking.py nominator matchers; messages/staking.py:60."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         NOMINATOR_PROCESS_WITHDRAWS,
     )
@@ -2916,58 +2548,31 @@ def _nominator_fixture(spark: SparkSession):
 
     USER, U1, U2, OWNER = ACC[0], ACC[1], ACC[2], ACC[3]
     TON = 10**9
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # np1: deposit 10 TON with comment 'd'
-    t1 = tx("np1", 1, USER, 100); ext("np1", t1, 100, USER)
-    t2 = tx("np1", 2, NP_POOL, 110)
-    link("np1", 1, t1, 100, t2, 110, USER, NP_POOL, 10 * TON, None,
-         encode_comment("d"))
+    t1 = b.tx("np1", 1, USER, 100); b.ext("np1", t1, 100, USER)
+    t2 = b.tx("np1", 2, NP_POOL, 110)
+    b.link("np1", 1, t1, 100, t2, 110, USER, NP_POOL, 10 * TON, None,
+           encode_comment("d"))
 
     # np2: withdrawal request with comment 'w'
-    u1 = tx("np2", 1, USER, 200); ext("np2", u1, 200, USER)
-    u2 = tx("np2", 2, NP_POOL, 210)
-    link("np2", 1, u1, 200, u2, 210, USER, NP_POOL, TON, None,
-         encode_comment("w"))
+    u1 = b.tx("np2", 1, USER, 200); b.ext("np2", u1, 200, USER)
+    u2 = b.tx("np2", 2, NP_POOL, 210)
+    b.link("np2", 1, u1, 200, u2, 210, USER, NP_POOL, TON, None,
+           encode_comment("w"))
 
     # np3: owner triggers op 0x2 — pool pays two queued withdrawals
-    v1 = tx("np3", 1, OWNER, 300); ext("np3", v1, 300, OWNER)
-    v2 = tx("np3", 2, NP_POOL, 310)
-    link("np3", 1, v1, 300, v2, 310, OWNER, NP_POOL, TON,
-         NOMINATOR_PROCESS_WITHDRAWS, None)
-    v3 = tx("np3", 3, U1, 320)
-    link("np3", 2, v2, 310, v3, 320, NP_POOL, U1, 30 * TON, None, None)
-    v4 = tx("np3", 4, U2, 330)
-    link("np3", 3, v2, 310, v4, 330, NP_POOL, U2, 20 * TON, None, None)
+    v1 = b.tx("np3", 1, OWNER, 300); b.ext("np3", v1, 300, OWNER)
+    v2 = b.tx("np3", 2, NP_POOL, 310)
+    b.link("np3", 1, v1, 300, v2, 310, OWNER, NP_POOL, TON,
+           NOMINATOR_PROCESS_WITHDRAWS, None)
+    v3 = b.tx("np3", 3, U1, 320)
+    b.link("np3", 2, v2, 310, v3, 320, NP_POOL, U1, 30 * TON, None, None)
+    v4 = b.tx("np3", 4, U2, 330)
+    b.link("np3", 3, v2, 310, v4, 330, NP_POOL, U2, 20 * TON, None, None)
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _NOMINATOR_ORACLE = f"""
@@ -3029,7 +2634,6 @@ def _cocoon_fixture(spark: SparkSession):
     excesses), cg1 client registration (OwnerClientRegister#c45f9f3b).
     Reference: blocks/cocoon.py:67-222 (worker payout), :435-508
     (top-up), :670-760 (register)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         COCOON_CLIENT_REQUEST,
         COCOON_EXT_CLIENT_TOPUP,
@@ -3048,81 +2652,50 @@ def _cocoon_fixture(spark: SparkSession):
 
     OWNER = ACC[4]
     TON = 10**9
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account, opcode=None, body=None):
-        bh = None
-        if body is not None:
-            bh = f"bh-{trace}-e0"
-            bodies.append((bh, body))
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, opcode, lt - 2, bh))
+    b = _TraceBuilder()
 
     # cw1: proxy settles 1200 new tokens with the worker; owner paid 7 TON
-    t1 = tx("cw1", 1, CO_PROXY, 100); ext("cw1", t1, 100, CO_PROXY)
-    t2 = tx("cw1", 2, CO_WORKER, 110)
-    link("cw1", 1, t1, 100, t2, 110, CO_PROXY, CO_WORKER, 10**6,
-         COCOON_PAYOUT_PAYLOAD,
-         encode_cocoon_payout_payload(51, 1200, CO_WORKER))
-    t3 = tx("cw1", 3, CO_PROXY, 120)
-    link("cw1", 2, t2, 110, t3, 120, CO_WORKER, CO_PROXY, 10**6,
-         COCOON_WORKER_REQUEST,
-         encode_cocoon_worker_request(51, OWNER, state=1, tokens=1200))
-    t4 = tx("cw1", 4, OWNER, 130)
-    link("cw1", 3, t3, 120, t4, 130, CO_PROXY, OWNER, 7 * TON,
-         COCOON_PAYOUT, None)
-    t5 = tx("cw1", 5, CO_WORKER, 140)
-    link("cw1", 4, t3, 120, t5, 140, CO_PROXY, CO_WORKER, 10**5,
-         COCOON_RETURN_EXCESSES, None)
+    t1 = b.tx("cw1", 1, CO_PROXY, 100); b.ext("cw1", t1, 100, CO_PROXY)
+    t2 = b.tx("cw1", 2, CO_WORKER, 110)
+    b.link("cw1", 1, t1, 100, t2, 110, CO_PROXY, CO_WORKER, 10**6,
+           COCOON_PAYOUT_PAYLOAD,
+           encode_cocoon_payout_payload(51, 1200, CO_WORKER))
+    t3 = b.tx("cw1", 3, CO_PROXY, 120)
+    b.link("cw1", 2, t2, 110, t3, 120, CO_WORKER, CO_PROXY, 10**6,
+           COCOON_WORKER_REQUEST,
+           encode_cocoon_worker_request(51, OWNER, state=1, tokens=1200))
+    t4 = b.tx("cw1", 4, OWNER, 130)
+    b.link("cw1", 3, t3, 120, t4, 130, CO_PROXY, OWNER, 7 * TON,
+           COCOON_PAYOUT, None)
+    t5 = b.tx("cw1", 5, CO_WORKER, 140)
+    b.link("cw1", 4, t3, 120, t5, 140, CO_PROXY, CO_WORKER, 10**5,
+           COCOON_RETURN_EXCESSES, None)
 
     # ct1: external top-up of 5 TON at the client
-    u1 = tx("ct1", 1, CO_CLIENT, 200)
-    ext("ct1", u1, 200, CO_CLIENT, opcode=COCOON_EXT_CLIENT_TOPUP,
-        body=encode_cocoon_client_topup(52, 5 * TON, OWNER))
-    u2 = tx("ct1", 2, CO_PROXY, 210)
-    link("ct1", 1, u1, 200, u2, 210, CO_CLIENT, CO_PROXY, 10**6,
-         COCOON_CLIENT_REQUEST, None)
-    u3 = tx("ct1", 3, OWNER, 220)
-    link("ct1", 2, u2, 210, u3, 220, CO_PROXY, OWNER, 10**5,
-         COCOON_RETURN_EXCESSES, None)
+    u1 = b.tx("ct1", 1, CO_CLIENT, 200)
+    b.ext("ct1", u1, 200, CO_CLIENT, opcode=COCOON_EXT_CLIENT_TOPUP,
+          body=encode_cocoon_client_topup(52, 5 * TON, OWNER))
+    u2 = b.tx("ct1", 2, CO_PROXY, 210)
+    b.link("ct1", 1, u1, 200, u2, 210, CO_CLIENT, CO_PROXY, 10**6,
+           COCOON_CLIENT_REQUEST, None)
+    u3 = b.tx("ct1", 3, OWNER, 220)
+    b.link("ct1", 2, u2, 210, u3, 220, CO_PROXY, OWNER, 10**5,
+           COCOON_RETURN_EXCESSES, None)
 
     # cg1: owner registers the client with nonce 99
-    v1 = tx("cg1", 1, OWNER, 300); ext("cg1", v1, 300, OWNER)
-    v2 = tx("cg1", 2, CO_CLIENT, 310)
-    link("cg1", 1, v1, 300, v2, 310, OWNER, CO_CLIENT, TON,
-         COCOON_OWNER_CLIENT_REGISTER,
-         encode_cocoon_client_register(53, 99, OWNER))
-    v3 = tx("cg1", 3, CO_PROXY, 320)
-    link("cg1", 2, v2, 310, v3, 320, CO_CLIENT, CO_PROXY, 10**6,
-         COCOON_CLIENT_REQUEST, None)
-    v4 = tx("cg1", 4, OWNER, 330)
-    link("cg1", 3, v3, 320, v4, 330, CO_PROXY, OWNER, 10**5,
-         COCOON_RETURN_EXCESSES, None)
+    v1 = b.tx("cg1", 1, OWNER, 300); b.ext("cg1", v1, 300, OWNER)
+    v2 = b.tx("cg1", 2, CO_CLIENT, 310)
+    b.link("cg1", 1, v1, 300, v2, 310, OWNER, CO_CLIENT, TON,
+           COCOON_OWNER_CLIENT_REGISTER,
+           encode_cocoon_client_register(53, 99, OWNER))
+    v3 = b.tx("cg1", 3, CO_PROXY, 320)
+    b.link("cg1", 2, v2, 310, v3, 320, CO_CLIENT, CO_PROXY, 10**6,
+           COCOON_CLIENT_REQUEST, None)
+    v4 = b.tx("cg1", 4, OWNER, 330)
+    b.link("cg1", 3, v3, 320, v4, 330, CO_PROXY, OWNER, 10**5,
+           COCOON_RETURN_EXCESSES, None)
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _COCOON_ORACLE = f"""
@@ -3200,7 +2773,6 @@ def _dedust_liquidity_fixture(spark: SparkSession):
     withdrawal (LP burn → burn notify → two payout legs, TON + jetton).
     Reference: blocks/liquidity.py:297-470 (deposit), the DeDust-shape
     burn matcher (protocols.py match_dedust_withdraw_liquidity)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.base import JETTON_BURN
     from ton_indexer_spark.classifier.protocols import (
         BURN_NOTIFY,
@@ -3222,92 +2794,64 @@ def _dedust_liquidity_fixture(spark: SparkSession):
 
     USER = ACC[0]
     TON = 10**9
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # dl1: deposit 2 TON toward the TON/J pool, 500 LP minted
-    t1 = tx("dl1", 1, USER, 100); ext("dl1", t1, 100)
-    t2 = tx("dl1", 2, DD_TON_VAULT, 110)
-    link("dl1", 1, t1, 100, t2, 110, USER, DD_TON_VAULT, 2 * TON + 10**8,
-         DEDUST_DEPOSIT_TON,
-         encode_dedust_deposit_ton(71, 2 * TON, "TON", DD_J,
-                                   min_lp=1, asset0_target=2 * TON,
-                                   asset1_target=1000))
-    t3 = tx("dl1", 3, DD_DEPOSIT, 120)
-    link("dl1", 2, t2, 110, t3, 120, DD_TON_VAULT, DD_DEPOSIT, 10**6,
-         DEDUST_TOPUP_DEPOSIT, None)
-    t4 = tx("dl1", 4, DD_POOL, 130)
-    link("dl1", 3, t3, 120, t4, 130, DD_DEPOSIT, DD_POOL, 10**6,
-         DEDUST_DEPOSIT_TO_POOL,
-         encode_dedust_deposit_to_pool(71, USER, 1, "TON", 2 * TON,
-                                       DD_J, 1000))
-    t5 = tx("dl1", 5, DD_LPW, 140)
-    link("dl1", 4, t4, 130, t5, 140, DD_POOL, DD_LPW, 10**5,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(71, 500, from_owner=DD_POOL))
-    t6 = tx("dl1", 6, USER, 150)
-    link("dl1", 5, t5, 140, t6, 150, DD_LPW, USER, 1,
-         JETTON_NOTIFY_OP, encode_jetton_notify(71, 500, sender=DD_POOL))
-    t7 = tx("dl1", 7, DD_DEPOSIT, 160)
-    link("dl1", 6, t4, 130, t7, 160, DD_POOL, DD_DEPOSIT, 10**5,
-         DEDUST_DESTROY_DEPOSIT, None)
-    t8 = tx("dl1", 8, DD_TON_VAULT, 170)
-    link("dl1", 7, t7, 160, t8, 170, DD_DEPOSIT, DD_TON_VAULT, 10**5,
-         DEDUST_RETURN_EXCESS, None)
-    t9 = tx("dl1", 9, USER, 180)
-    link("dl1", 8, t8, 170, t9, 180, DD_TON_VAULT, USER, 5 * 10**7,
-         DEDUST_PAYOUT, None)
+    t1 = b.tx("dl1", 1, USER, 100); b.ext("dl1", t1, 100, USER)
+    t2 = b.tx("dl1", 2, DD_TON_VAULT, 110)
+    b.link("dl1", 1, t1, 100, t2, 110, USER, DD_TON_VAULT, 2 * TON + 10**8,
+           DEDUST_DEPOSIT_TON,
+           encode_dedust_deposit_ton(71, 2 * TON, "TON", DD_J,
+                                     min_lp=1, asset0_target=2 * TON,
+                                     asset1_target=1000))
+    t3 = b.tx("dl1", 3, DD_DEPOSIT, 120)
+    b.link("dl1", 2, t2, 110, t3, 120, DD_TON_VAULT, DD_DEPOSIT, 10**6,
+           DEDUST_TOPUP_DEPOSIT, None)
+    t4 = b.tx("dl1", 4, DD_POOL, 130)
+    b.link("dl1", 3, t3, 120, t4, 130, DD_DEPOSIT, DD_POOL, 10**6,
+           DEDUST_DEPOSIT_TO_POOL,
+           encode_dedust_deposit_to_pool(71, USER, 1, "TON", 2 * TON,
+                                         DD_J, 1000))
+    t5 = b.tx("dl1", 5, DD_LPW, 140)
+    b.link("dl1", 4, t4, 130, t5, 140, DD_POOL, DD_LPW, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(71, 500, from_owner=DD_POOL))
+    t6 = b.tx("dl1", 6, USER, 150)
+    b.link("dl1", 5, t5, 140, t6, 150, DD_LPW, USER, 1,
+           JETTON_NOTIFY_OP, encode_jetton_notify(71, 500, sender=DD_POOL))
+    t7 = b.tx("dl1", 7, DD_DEPOSIT, 160)
+    b.link("dl1", 6, t4, 130, t7, 160, DD_POOL, DD_DEPOSIT, 10**5,
+           DEDUST_DESTROY_DEPOSIT, None)
+    t8 = b.tx("dl1", 8, DD_TON_VAULT, 170)
+    b.link("dl1", 7, t7, 160, t8, 170, DD_DEPOSIT, DD_TON_VAULT, 10**5,
+           DEDUST_RETURN_EXCESS, None)
+    t9 = b.tx("dl1", 9, USER, 180)
+    b.link("dl1", 8, t8, 170, t9, 180, DD_TON_VAULT, USER, 5 * 10**7,
+           DEDUST_PAYOUT, None)
 
     # dl2: burn 500 LP, pool pays 2 TON + 1000 jetton back
-    u1 = tx("dl2", 1, USER, 200); ext("dl2", u1, 200)
-    u2 = tx("dl2", 2, DD_LPW, 210)
-    link("dl2", 1, u1, 200, u2, 210, USER, DD_LPW, TON, JETTON_BURN,
-         encode_jetton_burn(72, 500, response=USER))
-    u3 = tx("dl2", 3, DD_POOL, 220)
-    link("dl2", 2, u2, 210, u3, 220, DD_LPW, DD_POOL, 10**6,
-         BURN_NOTIFY, None)
-    u4 = tx("dl2", 4, DD_TON_VAULT, 230)
-    link("dl2", 3, u3, 220, u4, 230, DD_POOL, DD_TON_VAULT, 2 * TON,
-         DEDUST_PAYOUT_FROM_POOL, None)
-    u5 = tx("dl2", 5, DD_VAULT_J, 240)
-    link("dl2", 4, u3, 220, u5, 240, DD_POOL, DD_VAULT_J, 1000,
-         DEDUST_PAYOUT_FROM_POOL, None)
-    u6 = tx("dl2", 6, USER, 250)
-    link("dl2", 5, u4, 230, u6, 250, DD_TON_VAULT, USER, 2 * TON,
-         DEDUST_PAYOUT, None)
+    u1 = b.tx("dl2", 1, USER, 200); b.ext("dl2", u1, 200, USER)
+    u2 = b.tx("dl2", 2, DD_LPW, 210)
+    b.link("dl2", 1, u1, 200, u2, 210, USER, DD_LPW, TON, JETTON_BURN,
+           encode_jetton_burn(72, 500, response=USER))
+    u3 = b.tx("dl2", 3, DD_POOL, 220)
+    b.link("dl2", 2, u2, 210, u3, 220, DD_LPW, DD_POOL, 10**6,
+           BURN_NOTIFY, None)
+    u4 = b.tx("dl2", 4, DD_TON_VAULT, 230)
+    b.link("dl2", 3, u3, 220, u4, 230, DD_POOL, DD_TON_VAULT, 2 * TON,
+           DEDUST_PAYOUT_FROM_POOL, None)
+    u5 = b.tx("dl2", 5, DD_VAULT_J, 240)
+    b.link("dl2", 4, u3, 220, u5, 240, DD_POOL, DD_VAULT_J, 1000,
+           DEDUST_PAYOUT_FROM_POOL, None)
+    u6 = b.tx("dl2", 6, USER, 250)
+    b.link("dl2", 5, u4, 230, u6, 250, DD_TON_VAULT, USER, 2 * TON,
+           DEDUST_PAYOUT, None)
 
     jw = spark.createDataFrame(
         [(DD_LPW, USER, DD_LP_J)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _DEDUST_LIQ_ORACLE = f"""
@@ -3393,7 +2937,6 @@ def _coffee_staking_fixture(spark: SparkSession):
     claim (staking_claim_rewards#b30c7310 → reward jetton chain).
     Reference: CoffeeStakingDeposit/Withdraw/ClaimRewards matchers,
     blocks/staking.py:433-700."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         COFFEE_STAKING_CLAIM,
         COFFEE_STAKING_DEPOSIT,
@@ -3409,111 +2952,83 @@ def _coffee_staking_fixture(spark: SparkSession):
     )
 
     USER, RECV = ACC[0], ACC[5]
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # cs1: stake 1000 CS_J for period 3 — position NFT minted
-    t1 = tx("cs1", 1, USER, 100); ext("cs1", t1, 100, USER)
-    t2 = tx("cs1", 2, CS_UW, 110)
-    link("cs1", 1, t1, 100, t2, 110, USER, CS_UW, 10**8,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(81, 1000, destination=CS_POOL))
-    t3 = tx("cs1", 3, CS_PW, 120)
-    link("cs1", 2, t2, 110, t3, 120, CS_UW, CS_PW, 10**7,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(81, 1000, from_owner=USER))
-    t4 = tx("cs1", 4, CS_POOL, 130)
-    link("cs1", 3, t3, 120, t4, 130, CS_PW, CS_POOL, 10**6,
-         JETTON_NOTIFY_OP, encode_jetton_notify(81, 1000, sender=USER))
-    t5 = tx("cs1", 5, CS_MASTER, 140)
-    link("cs1", 4, t4, 130, t5, 140, CS_POOL, CS_MASTER, 10**6,
-         COFFEE_STAKING_DEPOSIT,
-         encode_coffee_staking_deposit(81, CS_POOL, 1000, USER,
-                                       period_id=3))
-    t6 = tx("cs1", 6, CS_NFT, 150)
-    link("cs1", 5, t5, 140, t6, 150, CS_MASTER, CS_NFT, 10**5,
-         0x1, None)
+    t1 = b.tx("cs1", 1, USER, 100); b.ext("cs1", t1, 100, USER)
+    t2 = b.tx("cs1", 2, CS_UW, 110)
+    b.link("cs1", 1, t1, 100, t2, 110, USER, CS_UW, 10**8,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(81, 1000, destination=CS_POOL))
+    t3 = b.tx("cs1", 3, CS_PW, 120)
+    b.link("cs1", 2, t2, 110, t3, 120, CS_UW, CS_PW, 10**7,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(81, 1000, from_owner=USER))
+    t4 = b.tx("cs1", 4, CS_POOL, 130)
+    b.link("cs1", 3, t3, 120, t4, 130, CS_PW, CS_POOL, 10**6,
+           JETTON_NOTIFY_OP, encode_jetton_notify(81, 1000, sender=USER))
+    t5 = b.tx("cs1", 5, CS_MASTER, 140)
+    b.link("cs1", 4, t4, 130, t5, 140, CS_POOL, CS_MASTER, 10**6,
+           COFFEE_STAKING_DEPOSIT,
+           encode_coffee_staking_deposit(81, CS_POOL, 1000, USER,
+                                         period_id=3))
+    t6 = b.tx("cs1", 6, CS_NFT, 150)
+    b.link("cs1", 5, t5, 140, t6, 150, CS_MASTER, CS_NFT, 10**5,
+           0x1, None)
 
     # cs2: withdraw position 7 — 900 CS_J paid back, 5000 points
-    u1 = tx("cs2", 1, USER, 200); ext("cs2", u1, 200, USER)
-    u2 = tx("cs2", 2, CS_NFT, 210)
-    link("cs2", 1, u1, 200, u2, 210, USER, CS_NFT, 10**8,
-         COFFEE_STAKING_WITHDRAW, encode_coffee_staking_withdraw(82))
-    u3 = tx("cs2", 3, CS_MASTER, 220)
-    link("cs2", 2, u2, 210, u3, 220, CS_NFT, CS_MASTER, 10**7,
-         COFFEE_STAKING_WITHDRAW,
-         encode_coffee_staking_withdraw(82, nft_id=7, owner=USER,
-                                        points=5000,
-                                        jetton_wallet=CS_PW,
-                                        jetton_amount=900))
-    u4 = tx("cs2", 4, CS_POOL, 230)
-    link("cs2", 3, u3, 220, u4, 230, CS_MASTER, CS_POOL, 10**6,
-         COFFEE_STAKING_WITHDRAW,
-         encode_coffee_staking_withdraw(82, jetton_wallet=CS_PW,
-                                        jetton_amount=900, owner=USER))
-    u5 = tx("cs2", 5, CS_PW, 240)
-    link("cs2", 4, u4, 230, u5, 240, CS_POOL, CS_PW, 10**5,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(82, 900, destination=USER))
-    u6 = tx("cs2", 6, CS_UW, 250)
-    link("cs2", 5, u5, 240, u6, 250, CS_PW, CS_UW, 10**4,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(82, 900, from_owner=CS_POOL))
-    u7 = tx("cs2", 7, USER, 260)
-    link("cs2", 6, u6, 250, u7, 260, CS_UW, USER, 1,
-         JETTON_NOTIFY_OP, encode_jetton_notify(82, 900, sender=CS_POOL))
+    u1 = b.tx("cs2", 1, USER, 200); b.ext("cs2", u1, 200, USER)
+    u2 = b.tx("cs2", 2, CS_NFT, 210)
+    b.link("cs2", 1, u1, 200, u2, 210, USER, CS_NFT, 10**8,
+           COFFEE_STAKING_WITHDRAW, encode_coffee_staking_withdraw(82))
+    u3 = b.tx("cs2", 3, CS_MASTER, 220)
+    b.link("cs2", 2, u2, 210, u3, 220, CS_NFT, CS_MASTER, 10**7,
+           COFFEE_STAKING_WITHDRAW,
+           encode_coffee_staking_withdraw(82, nft_id=7, owner=USER,
+                                          points=5000,
+                                          jetton_wallet=CS_PW,
+                                          jetton_amount=900))
+    u4 = b.tx("cs2", 4, CS_POOL, 230)
+    b.link("cs2", 3, u3, 220, u4, 230, CS_MASTER, CS_POOL, 10**6,
+           COFFEE_STAKING_WITHDRAW,
+           encode_coffee_staking_withdraw(82, jetton_wallet=CS_PW,
+                                          jetton_amount=900, owner=USER))
+    u5 = b.tx("cs2", 5, CS_PW, 240)
+    b.link("cs2", 4, u4, 230, u5, 240, CS_POOL, CS_PW, 10**5,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(82, 900, destination=USER))
+    u6 = b.tx("cs2", 6, CS_UW, 250)
+    b.link("cs2", 5, u5, 240, u6, 250, CS_PW, CS_UW, 10**4,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(82, 900, from_owner=CS_POOL))
+    u7 = b.tx("cs2", 7, USER, 260)
+    b.link("cs2", 6, u6, 250, u7, 260, CS_UW, USER, 1,
+           JETTON_NOTIFY_OP, encode_jetton_notify(82, 900, sender=CS_POOL))
 
     # cs3: admin claims 444 CS_J of rewards for RECV
-    v1 = tx("cs3", 1, ACC[3], 300); ext("cs3", v1, 300, ACC[3])
-    v2 = tx("cs3", 2, CS_POOL, 310)
-    link("cs3", 1, v1, 300, v2, 310, ACC[3], CS_POOL, 10**8,
-         COFFEE_STAKING_CLAIM,
-         encode_coffee_staking_claim(83, CS_PW, 444, RECV))
-    v3 = tx("cs3", 3, CS_PW, 320)
-    link("cs3", 2, v2, 310, v3, 320, CS_POOL, CS_PW, 10**6,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(83, 444, destination=RECV))
-    v4 = tx("cs3", 4, CS_RW, 330)
-    link("cs3", 3, v3, 320, v4, 330, CS_PW, CS_RW, 10**5,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(83, 444, from_owner=CS_POOL))
-    v5 = tx("cs3", 5, RECV, 340)
-    link("cs3", 4, v4, 330, v5, 340, CS_RW, RECV, 1,
-         JETTON_NOTIFY_OP, encode_jetton_notify(83, 444, sender=CS_POOL))
+    v1 = b.tx("cs3", 1, ACC[3], 300); b.ext("cs3", v1, 300, ACC[3])
+    v2 = b.tx("cs3", 2, CS_POOL, 310)
+    b.link("cs3", 1, v1, 300, v2, 310, ACC[3], CS_POOL, 10**8,
+           COFFEE_STAKING_CLAIM,
+           encode_coffee_staking_claim(83, CS_PW, 444, RECV))
+    v3 = b.tx("cs3", 3, CS_PW, 320)
+    b.link("cs3", 2, v2, 310, v3, 320, CS_POOL, CS_PW, 10**6,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(83, 444, destination=RECV))
+    v4 = b.tx("cs3", 4, CS_RW, 330)
+    b.link("cs3", 3, v3, 320, v4, 330, CS_PW, CS_RW, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(83, 444, from_owner=CS_POOL))
+    v5 = b.tx("cs3", 5, RECV, 340)
+    b.link("cs3", 4, v4, 330, v5, 340, CS_RW, RECV, 1,
+           JETTON_NOTIFY_OP, encode_jetton_notify(83, 444, sender=CS_POOL))
 
     jw = spark.createDataFrame(
         [(CS_UW, USER, CS_J), (CS_PW, CS_POOL, CS_J),
          (CS_RW, RECV, CS_J)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _COFFEE_STAKING_ORACLE = f"""
@@ -3588,7 +3103,6 @@ def _evaa_liquidate_fixture(spark: SparkSession):
     carries borrower/liquidator/asset/debt and opcode 0x3 is
     shape-discriminated against its generic uses.  Reference:
     blocks/evaa.py liquidate matchers; messages/evaa.py:258-283."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         EVAA_LIQUIDATE_FAIL,
         EVAA_LIQUIDATE_MASTER,
@@ -3601,56 +3115,29 @@ def _evaa_liquidate_fixture(spark: SparkSession):
         encode_evaa_liquidate_master,
     )
 
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     def liq_trace(trace, verdict_op, done_op):
-        t1 = tx(trace, 1, EVL_LIQ, 100); ext(trace, t1, 100, EVL_LIQ)
-        t2 = tx(trace, 2, EVAA_MASTER, 110)
-        link(trace, 1, t1, 100, t2, 110, EVL_LIQ, EVAA_MASTER, 10**8,
-             EVAA_LIQUIDATE_MASTER,
-             encode_evaa_liquidate_master(91, EVL_BORROWER, EVL_LIQ,
-                                          EVL_ASSET_ID, 1, 5000))
-        t3 = tx(trace, 3, EVAA_USER_SC, 120)
-        link(trace, 2, t2, 110, t3, 120, EVAA_MASTER, EVAA_USER_SC,
-             10**7, EVAA_LIQUIDATE_USER, None)
-        t4 = tx(trace, 4, EVAA_MASTER, 130)
-        link(trace, 3, t3, 120, t4, 130, EVAA_USER_SC, EVAA_MASTER,
-             10**6, verdict_op, None)
-        t5 = tx(trace, 5, EVL_LIQ, 140)
-        link(trace, 4, t4, 130, t5, 140, EVAA_MASTER, EVL_LIQ, 10**5,
-             done_op, None)
+        t1 = b.tx(trace, 1, EVL_LIQ, 100); b.ext(trace, t1, 100, EVL_LIQ)
+        t2 = b.tx(trace, 2, EVAA_MASTER, 110)
+        b.link(trace, 1, t1, 100, t2, 110, EVL_LIQ, EVAA_MASTER, 10**8,
+               EVAA_LIQUIDATE_MASTER,
+               encode_evaa_liquidate_master(91, EVL_BORROWER, EVL_LIQ,
+                                            EVL_ASSET_ID, 1, 5000))
+        t3 = b.tx(trace, 3, EVAA_USER_SC, 120)
+        b.link(trace, 2, t2, 110, t3, 120, EVAA_MASTER, EVAA_USER_SC,
+               10**7, EVAA_LIQUIDATE_USER, None)
+        t4 = b.tx(trace, 4, EVAA_MASTER, 130)
+        b.link(trace, 3, t3, 120, t4, 130, EVAA_USER_SC, EVAA_MASTER,
+               10**6, verdict_op, None)
+        t5 = b.tx(trace, 5, EVL_LIQ, 140)
+        b.link(trace, 4, t4, 130, t5, 140, EVAA_MASTER, EVL_LIQ, 10**5,
+               done_op, None)
 
     liq_trace("el1", EVAA_LIQUIDATE_SATISFIED, EVAA_LIQUIDATE_SUCCESS)
     liq_trace("el2", EVAA_LIQUIDATE_UNSATISFIED, EVAA_LIQUIDATE_FAIL)
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _EVAA_LIQ_ORACLE = f"""
@@ -3702,7 +3189,6 @@ def _ethena_withdrawal_fixture(spark: SparkSession):
     position wallet.  Serialized as stake_withdrawal_request /
     provider=ethena.  Reference: EthenaWithdrawalRequestBlockMatcher,
     ethena_staking.py:58-106."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         ETHENA_TSUSDE_TRANSFER,
         JETTON_MINT_OP,
@@ -3716,57 +3202,32 @@ def _ethena_withdrawal_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
+    b = _TraceBuilder()
 
-    def tx(n, account, lt):
-        h = f"ew1-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", "ew1"))
-        return h
-
-    def link(n, src_tx, src_lt, dst_tx, dst_lt, source, destination,
-             value, opcode, body):
-        mh, bh = f"ew1-m{n}", None
-        if body is not None:
-            bh = f"bh-ew1-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append(("ew1", src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append(("ew1", dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    t1 = tx(1, USER, 100)
-    msgs.append(("ew1", t1, 100, "ew1-e0", "in", None, USER,
-                 None, None, 98, None))
-    t2 = tx(2, EW_UW, 110)
-    link(1, t1, 100, t2, 110, USER, EW_UW, 10**8, JETTON_TRANSFER_OP,
-         encode_jetton_transfer(92, 700, destination=ETH_POOL))
-    t3 = tx(3, EW_PW, 120)
-    link(2, t2, 110, t3, 120, EW_UW, EW_PW, 10**7, JETTON_INTERNAL_OP,
-         encode_jetton_internal(92, 700, from_owner=USER))
-    t4 = tx(4, ETH_POOL, 130)
-    link(3, t3, 120, t4, 130, EW_PW, ETH_POOL, 10**6, JETTON_NOTIFY_OP,
-         encode_jetton_notify(92, 700, sender=USER))
-    t5 = tx(5, TSUSDE_MINTER, 140)
-    link(4, t4, 130, t5, 140, ETH_POOL, TSUSDE_MINTER, 10**6,
-         JETTON_MINT_OP, encode_jetton_mint(92, USER, 10**5, 650))
-    t6 = tx(6, EW_TSPOS, 150)
-    link(5, t5, 140, t6, 150, TSUSDE_MINTER, EW_TSPOS, 10**5,
-         ETHENA_TSUSDE_TRANSFER,
-         encode_ethena_tsusde_transfer(92, 650, from_owner=ETH_POOL))
+    t1 = b.tx("ew1", 1, USER, 100)
+    b.ext("ew1", t1, 100, USER)
+    t2 = b.tx("ew1", 2, EW_UW, 110)
+    b.link("ew1", 1, t1, 100, t2, 110, USER, EW_UW, 10**8, JETTON_TRANSFER_OP,
+           encode_jetton_transfer(92, 700, destination=ETH_POOL))
+    t3 = b.tx("ew1", 3, EW_PW, 120)
+    b.link("ew1", 2, t2, 110, t3, 120, EW_UW, EW_PW, 10**7, JETTON_INTERNAL_OP,
+           encode_jetton_internal(92, 700, from_owner=USER))
+    t4 = b.tx("ew1", 4, ETH_POOL, 130)
+    b.link("ew1", 3, t3, 120, t4, 130, EW_PW, ETH_POOL, 10**6,
+           JETTON_NOTIFY_OP, encode_jetton_notify(92, 700, sender=USER))
+    t5 = b.tx("ew1", 5, TSUSDE_MINTER, 140)
+    b.link("ew1", 4, t4, 130, t5, 140, ETH_POOL, TSUSDE_MINTER, 10**6,
+           JETTON_MINT_OP, encode_jetton_mint(92, USER, 10**5, 650))
+    t6 = b.tx("ew1", 6, EW_TSPOS, 150)
+    b.link("ew1", 5, t5, 140, t6, 150, TSUSDE_MINTER, EW_TSPOS, 10**5,
+           ETHENA_TSUSDE_TRANSFER,
+           encode_ethena_tsusde_transfer(92, 650, from_owner=ETH_POOL))
 
     jw = spark.createDataFrame(
         [(EW_UW, USER, EW_USDE), (EW_PW, ETH_POOL, EW_USDE)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _ETHENA_WR_ORACLE = f"""
@@ -3832,7 +3293,6 @@ def _tonco_liquidity_fixture(spark: SparkSession):
     two payout chains, legs ordered by the router coinsinfo).
     Reference: ToncoDepositLiquidity / ToncoWithdrawLiquidity matchers,
     blocks/liquidity.py:289-1505."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         TONCO_ADD_LIQUIDITY,
         TONCO_FUND_ACCOUNT,
@@ -3857,121 +3317,93 @@ def _tonco_liquidity_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # tl1: provide 1000 J_X toward ticks [-60, 60], 777 liquidity minted
     fund_payload = encode_tonco_fund_payload(TQ_RW2, 1000, 0)
-    t1 = tx("tl1", 1, USER, 100); ext("tl1", t1, 100)
-    t2 = tx("tl1", 2, TQ_UW, 110)
-    link("tl1", 1, t1, 100, t2, 110, USER, TQ_UW, 10**8,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(95, 1000, destination=TQ_ROUTER))
-    t3 = tx("tl1", 3, TQ_RW, 120)
-    link("tl1", 2, t2, 110, t3, 120, TQ_UW, TQ_RW, 10**7,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(95, 1000, from_owner=USER))
-    t4 = tx("tl1", 4, TQ_ROUTER, 130)
-    link("tl1", 3, t3, 120, t4, 130, TQ_RW, TQ_ROUTER, 10**6,
-         JETTON_NOTIFY_OP,
-         encode_jetton_notify(95, 1000, sender=USER,
-                              forward_payload=fund_payload))
-    t5 = tx("tl1", 5, TQ_POOL, 140)
-    link("tl1", 4, t4, 130, t5, 140, TQ_ROUTER, TQ_POOL, 10**6,
-         TONCO_FUND_ACCOUNT, None)
-    t6 = tx("tl1", 6, TQ_ACCT, 150)
-    link("tl1", 5, t5, 140, t6, 150, TQ_POOL, TQ_ACCT, 10**6,
-         TONCO_ADD_LIQUIDITY,
-         encode_tonco_add_liquidity(95, 1000, 0, 1000, 2000, 777,
-                                    -60, 60))
-    t7 = tx("tl1", 7, TQ_POOL, 160)
-    link("tl1", 6, t6, 150, t7, 160, TQ_ACCT, TQ_POOL, 10**5,
-         TONCO_MINT_REFUND, None)
-    t8 = tx("tl1", 8, TQ_NFT, 170)
-    link("tl1", 7, t7, 160, t8, 170, TQ_POOL, TQ_NFT, 10**5,
-         TONCO_POSITION_INIT,
-         encode_tonco_position_init(95, USER, 777, -60, 60,
-                                    nft_index=5, jetton0_amount=1000,
-                                    jetton1_amount=2000))
+    t1 = b.tx("tl1", 1, USER, 100); b.ext("tl1", t1, 100, USER)
+    t2 = b.tx("tl1", 2, TQ_UW, 110)
+    b.link("tl1", 1, t1, 100, t2, 110, USER, TQ_UW, 10**8,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(95, 1000, destination=TQ_ROUTER))
+    t3 = b.tx("tl1", 3, TQ_RW, 120)
+    b.link("tl1", 2, t2, 110, t3, 120, TQ_UW, TQ_RW, 10**7,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(95, 1000, from_owner=USER))
+    t4 = b.tx("tl1", 4, TQ_ROUTER, 130)
+    b.link("tl1", 3, t3, 120, t4, 130, TQ_RW, TQ_ROUTER, 10**6,
+           JETTON_NOTIFY_OP,
+           encode_jetton_notify(95, 1000, sender=USER,
+                                forward_payload=fund_payload))
+    t5 = b.tx("tl1", 5, TQ_POOL, 140)
+    b.link("tl1", 4, t4, 130, t5, 140, TQ_ROUTER, TQ_POOL, 10**6,
+           TONCO_FUND_ACCOUNT, None)
+    t6 = b.tx("tl1", 6, TQ_ACCT, 150)
+    b.link("tl1", 5, t5, 140, t6, 150, TQ_POOL, TQ_ACCT, 10**6,
+           TONCO_ADD_LIQUIDITY,
+           encode_tonco_add_liquidity(95, 1000, 0, 1000, 2000, 777,
+                                      -60, 60))
+    t7 = b.tx("tl1", 7, TQ_POOL, 160)
+    b.link("tl1", 6, t6, 150, t7, 160, TQ_ACCT, TQ_POOL, 10**5,
+           TONCO_MINT_REFUND, None)
+    t8 = b.tx("tl1", 8, TQ_NFT, 170)
+    b.link("tl1", 7, t7, 160, t8, 170, TQ_POOL, TQ_NFT, 10**5,
+           TONCO_POSITION_INIT,
+           encode_tonco_position_init(95, USER, 777, -60, 60,
+                                      nft_index=5, jetton0_amount=1000,
+                                      jetton1_amount=2000))
 
     # tl2: burn position 5 — 1000 J_X + 2000 J_Y paid back
-    u1 = tx("tl2", 1, USER, 200); ext("tl2", u1, 200)
-    u2 = tx("tl2", 2, TQ_ROUTER, 210)
-    link("tl2", 1, u1, 200, u2, 210, USER, TQ_ROUTER, 10**8,
-         TONCO_START_BURN,
-         encode_tonco_start_burn(96, 5, 777, -60, 60))
-    u3 = tx("tl2", 3, TQ_NFT, 220)
-    link("tl2", 2, u2, 210, u3, 220, TQ_ROUTER, TQ_NFT, 10**7,
-         TONCO_POSITION_BURN,
-         encode_tonco_position_burn(96, USER, 777, -60, 60))
-    u4 = tx("tl2", 4, TQ_POOL, 230)
-    link("tl2", 3, u3, 220, u4, 230, TQ_NFT, TQ_POOL, 10**6,
-         TONCO_POOL_BURN,
-         encode_tonco_pool_burn(96, USER, 5, 777, -60, 60))
-    u5 = tx("tl2", 5, TQ_ROUTER, 240)
-    link("tl2", 4, u4, 230, u5, 240, TQ_POOL, TQ_ROUTER, 10**6,
-         TONCO_PAY_TO,
-         encode_tonco_pay_to(96, USER, None, 0, amount0=1000,
-                             jetton0=TQ_RW, amount1=2000,
-                             jetton1=TQ_RW2))
-    u6 = tx("tl2", 6, TQ_RW, 250)
-    link("tl2", 5, u5, 240, u6, 250, TQ_ROUTER, TQ_RW, 10**5,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(96, 1000, destination=USER))
-    u7 = tx("tl2", 7, TQ_UW, 260)
-    link("tl2", 6, u6, 250, u7, 260, TQ_RW, TQ_UW, 10**4,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(96, 1000, from_owner=TQ_ROUTER))
-    u8 = tx("tl2", 8, USER, 270)
-    link("tl2", 7, u7, 260, u8, 270, TQ_UW, USER, 1,
-         JETTON_NOTIFY_OP,
-         encode_jetton_notify(96, 1000, sender=TQ_ROUTER))
-    u9 = tx("tl2", 9, TQ_RW2, 280)
-    link("tl2", 8, u5, 240, u9, 280, TQ_ROUTER, TQ_RW2, 10**5,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(97, 2000, destination=USER))
-    u10 = tx("tl2", 10, TQ_UW2, 290)
-    link("tl2", 9, u9, 280, u10, 290, TQ_RW2, TQ_UW2, 10**4,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(97, 2000, from_owner=TQ_ROUTER))
-    u11 = tx("tl2", 11, USER, 300)
-    link("tl2", 10, u10, 290, u11, 300, TQ_UW2, USER, 1,
-         JETTON_NOTIFY_OP,
-         encode_jetton_notify(97, 2000, sender=TQ_ROUTER))
+    u1 = b.tx("tl2", 1, USER, 200); b.ext("tl2", u1, 200, USER)
+    u2 = b.tx("tl2", 2, TQ_ROUTER, 210)
+    b.link("tl2", 1, u1, 200, u2, 210, USER, TQ_ROUTER, 10**8,
+           TONCO_START_BURN,
+           encode_tonco_start_burn(96, 5, 777, -60, 60))
+    u3 = b.tx("tl2", 3, TQ_NFT, 220)
+    b.link("tl2", 2, u2, 210, u3, 220, TQ_ROUTER, TQ_NFT, 10**7,
+           TONCO_POSITION_BURN,
+           encode_tonco_position_burn(96, USER, 777, -60, 60))
+    u4 = b.tx("tl2", 4, TQ_POOL, 230)
+    b.link("tl2", 3, u3, 220, u4, 230, TQ_NFT, TQ_POOL, 10**6,
+           TONCO_POOL_BURN,
+           encode_tonco_pool_burn(96, USER, 5, 777, -60, 60))
+    u5 = b.tx("tl2", 5, TQ_ROUTER, 240)
+    b.link("tl2", 4, u4, 230, u5, 240, TQ_POOL, TQ_ROUTER, 10**6,
+           TONCO_PAY_TO,
+           encode_tonco_pay_to(96, USER, None, 0, amount0=1000,
+                               jetton0=TQ_RW, amount1=2000,
+                               jetton1=TQ_RW2))
+    u6 = b.tx("tl2", 6, TQ_RW, 250)
+    b.link("tl2", 5, u5, 240, u6, 250, TQ_ROUTER, TQ_RW, 10**5,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(96, 1000, destination=USER))
+    u7 = b.tx("tl2", 7, TQ_UW, 260)
+    b.link("tl2", 6, u6, 250, u7, 260, TQ_RW, TQ_UW, 10**4,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(96, 1000, from_owner=TQ_ROUTER))
+    u8 = b.tx("tl2", 8, USER, 270)
+    b.link("tl2", 7, u7, 260, u8, 270, TQ_UW, USER, 1,
+           JETTON_NOTIFY_OP,
+           encode_jetton_notify(96, 1000, sender=TQ_ROUTER))
+    u9 = b.tx("tl2", 9, TQ_RW2, 280)
+    b.link("tl2", 8, u5, 240, u9, 280, TQ_ROUTER, TQ_RW2, 10**5,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(97, 2000, destination=USER))
+    u10 = b.tx("tl2", 10, TQ_UW2, 290)
+    b.link("tl2", 9, u9, 280, u10, 290, TQ_RW2, TQ_UW2, 10**4,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(97, 2000, from_owner=TQ_ROUTER))
+    u11 = b.tx("tl2", 11, USER, 300)
+    b.link("tl2", 10, u10, 290, u11, 300, TQ_UW2, USER, 1,
+           JETTON_NOTIFY_OP,
+           encode_jetton_notify(97, 2000, sender=TQ_ROUTER))
 
     jw = spark.createDataFrame(
         [(TQ_UW, USER, TQ_JX), (TQ_RW, TQ_ROUTER, TQ_JX),
          (TQ_UW2, USER, TQ_JY), (TQ_RW2, TQ_ROUTER, TQ_JY)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=25,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=25)
 
 
 _TONCO_LIQ_ORACLE = f"""
@@ -4064,7 +3496,6 @@ def _stonfi_v2_withdraw_fixture(spark: SparkSession):
     withdraw_liquidity#297437cf at the pool → two pay_to#657b54f5 legs
     at the router, each paying a full jetton chain to the user.
     Reference: StonfiV2WithdrawLiquidityMatcher, liquidity.py:789-880."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.base import JETTON_BURN
     from ton_indexer_spark.classifier.protocols import (
         STONFI_V2_PAYOUT,
@@ -4078,61 +3509,45 @@ def _stonfi_v2_withdraw_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
+    b = _TraceBuilder()
 
-    def tx(n, account, lt):
-        h = f"sv3-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", "sv3"))
-        return h
-
-    def link(n, src_tx, src_lt, dst_tx, dst_lt, source, destination,
-             value, opcode, body):
-        mh, bh = f"sv3-m{n}", None
-        if body is not None:
-            bh = f"bh-sv3-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append(("sv3", src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append(("sv3", dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    t1 = tx(1, USER, 100)
-    msgs.append(("sv3", t1, 100, "sv3-e0", "in", None, USER,
-                 None, None, 98, None))
-    t2 = tx(2, LPW2, 110)
-    link(1, t1, 100, t2, 110, USER, LPW2, 10**8, JETTON_BURN,
-         encode_jetton_burn(55, 250, response=USER))
-    t3 = tx(3, V2POOL1, 120)
-    link(2, t2, 110, t3, 120, LPW2, V2POOL1, 10**6,
-         STONFI_V2_WITHDRAW, None)
+    t1 = b.tx("sv3", 1, USER, 100)
+    b.ext("sv3", t1, 100, USER)
+    t2 = b.tx("sv3", 2, LPW2, 110)
+    b.link("sv3", 1, t1, 100, t2, 110, USER, LPW2, 10**8, JETTON_BURN,
+           encode_jetton_burn(55, 250, response=USER))
+    t3 = b.tx("sv3", 3, V2POOL1, 120)
+    b.link("sv3", 2, t2, 110, t3, 120, LPW2, V2POOL1, 10**6,
+           STONFI_V2_WITHDRAW, None)
     # leg 1: 300 J_B through the router
-    t4 = tx(4, V2ROUTER, 130)
-    link(3, t3, 120, t4, 130, V2POOL1, V2ROUTER, 10**6,
-         STONFI_V2_PAYOUT, None)
-    t5 = tx(5, RW2_B, 140)
-    link(4, t4, 130, t5, 140, V2ROUTER, RW2_B, 10**5, JETTON_TRANSFER_OP,
-         encode_jetton_transfer(55, 300, destination=USER))
-    t6 = tx(6, UW2_B, 150)
-    link(5, t5, 140, t6, 150, RW2_B, UW2_B, 10**4, JETTON_INTERNAL_OP,
-         encode_jetton_internal(55, 300, from_owner=V2ROUTER))
-    t7 = tx(7, USER, 160)
-    link(6, t6, 150, t7, 160, UW2_B, USER, 1, JETTON_NOTIFY_OP,
-         encode_jetton_notify(55, 300, sender=V2ROUTER))
+    t4 = b.tx("sv3", 4, V2ROUTER, 130)
+    b.link("sv3", 3, t3, 120, t4, 130, V2POOL1, V2ROUTER, 10**6,
+           STONFI_V2_PAYOUT, None)
+    t5 = b.tx("sv3", 5, RW2_B, 140)
+    b.link("sv3", 4, t4, 130, t5, 140, V2ROUTER, RW2_B, 10**5,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(55, 300, destination=USER))
+    t6 = b.tx("sv3", 6, UW2_B, 150)
+    b.link("sv3", 5, t5, 140, t6, 150, RW2_B, UW2_B, 10**4, JETTON_INTERNAL_OP,
+           encode_jetton_internal(55, 300, from_owner=V2ROUTER))
+    t7 = b.tx("sv3", 7, USER, 160)
+    b.link("sv3", 6, t6, 150, t7, 160, UW2_B, USER, 1, JETTON_NOTIFY_OP,
+           encode_jetton_notify(55, 300, sender=V2ROUTER))
     # leg 2: 400 J_C through the router
-    t8 = tx(8, V2ROUTER, 170)
-    link(7, t3, 120, t8, 170, V2POOL1, V2ROUTER, 10**6,
-         STONFI_V2_PAYOUT, None)
-    t9 = tx(9, RW2_C, 180)
-    link(8, t8, 170, t9, 180, V2ROUTER, RW2_C, 10**5, JETTON_TRANSFER_OP,
-         encode_jetton_transfer(56, 400, destination=USER))
-    t10 = tx(10, UW2_C, 190)
-    link(9, t9, 180, t10, 190, RW2_C, UW2_C, 10**4, JETTON_INTERNAL_OP,
-         encode_jetton_internal(56, 400, from_owner=V2ROUTER))
-    t11 = tx(11, USER, 200)
-    link(10, t10, 190, t11, 200, UW2_C, USER, 1, JETTON_NOTIFY_OP,
-         encode_jetton_notify(56, 400, sender=V2ROUTER))
+    t8 = b.tx("sv3", 8, V2ROUTER, 170)
+    b.link("sv3", 7, t3, 120, t8, 170, V2POOL1, V2ROUTER, 10**6,
+           STONFI_V2_PAYOUT, None)
+    t9 = b.tx("sv3", 9, RW2_C, 180)
+    b.link("sv3", 8, t8, 170, t9, 180, V2ROUTER, RW2_C, 10**5,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(56, 400, destination=USER))
+    t10 = b.tx("sv3", 10, UW2_C, 190)
+    b.link("sv3", 9, t9, 180, t10, 190, RW2_C, UW2_C, 10**4,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(56, 400, from_owner=V2ROUTER))
+    t11 = b.tx("sv3", 11, USER, 200)
+    b.link("sv3", 10, t10, 190, t11, 200, UW2_C, USER, 1, JETTON_NOTIFY_OP,
+           encode_jetton_notify(56, 400, sender=V2ROUTER))
 
     jw = spark.createDataFrame(
         [(LPW2, USER, LP2_J), (RW2_B, V2ROUTER, J_B),
@@ -4140,13 +3555,7 @@ def _stonfi_v2_withdraw_fixture(spark: SparkSession):
          (UW2_C, USER, J_C)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=25,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=25)
 
 
 _STONFI_V2_WD_ORACLE = f"""
@@ -4205,7 +3614,6 @@ def _lz_send_tokens_fixture(spark: SparkSession):
     channel send callback) — one layerzero_send_tokens action instead
     of transfer + send.  Reference: LayerZeroSendTokensMatcher,
     blocks/layerzero.py:276-330."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         LZ_CHANNEL_SEND,
         LZ_ENDPOINT_SEND,
@@ -4225,70 +3633,46 @@ def _lz_send_tokens_fixture(spark: SparkSession):
     USER = ACC[0]
     packet = encode_lz_packet(LZ_SRC_EID, LZ_SRC_OAPP, LZ_DST_EID,
                               LZ_DST_OAPP, nonce=88, guid=0xFEED)
-    txs, msgs, bodies = [], [], []
+    b = _TraceBuilder()
 
-    def tx(n, account, lt):
-        h = f"lz4-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", "lz4"))
-        return h
-
-    def link(n, src_tx, src_lt, dst_tx, dst_lt, source, destination,
-             value, opcode, body):
-        mh, bh = f"lz4-m{n}", None
-        if body is not None:
-            bh = f"bh-lz4-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append(("lz4", src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append(("lz4", dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    t1 = tx(1, USER, 100)
-    msgs.append(("lz4", t1, 100, "lz4-e0", "in", None, USER,
-                 None, None, 98, None))
-    t2 = tx(2, LZT_UW, 110)
-    link(1, t1, 100, t2, 110, USER, LZT_UW, 10**8, JETTON_TRANSFER_OP,
-         encode_jetton_transfer(66, 5000, destination=LZO_OAPP))
-    t3 = tx(3, LZT_OW, 120)
-    link(2, t2, 110, t3, 120, LZT_UW, LZT_OW, 10**7, JETTON_INTERNAL_OP,
-         encode_jetton_internal(66, 5000, from_owner=USER))
-    t4 = tx(4, LZO_OAPP, 130)
-    link(3, t3, 120, t4, 130, LZT_OW, LZO_OAPP, 10**6, JETTON_NOTIFY_OP,
-         encode_jetton_notify(66, 5000, sender=USER))
-    t5 = tx(5, LZO_ENDPOINT, 140)
-    link(4, t4, 130, t5, 140, LZO_OAPP, LZO_ENDPOINT, 10**6,
-         LZ_ENDPOINT_SEND, None)
-    t6 = tx(6, LZO_CHANNEL, 150)
-    link(5, t5, 140, t6, 150, LZO_ENDPOINT, LZO_CHANNEL, 10**6,
-         LZ_CHANNEL_SEND, None)
-    t7 = tx(7, LZO_MCONN, 160)
-    link(6, t6, 150, t7, 160, LZO_CHANNEL, LZO_MCONN, 10**6,
-         LZ_MCONN_SEND, None)
-    t8 = tx(8, LZO_ULN, 170)
-    link(7, t7, 160, t8, 170, LZO_MCONN, LZO_ULN, 10**6,
-         LZ_ULN_SEND, None)
-    t9 = tx(9, LZO_CHANNEL, 180)
-    link(8, t8, 170, t9, 180, LZO_ULN, LZO_CHANNEL, 10**6,
-         LZ_MSGLIB_SEND_CB, None)
-    t10 = tx(10, LZO_OAPP, 190)
-    link(9, t9, 180, t10, 190, LZO_CHANNEL, LZO_OAPP, 10**6,
-         LZ_OAPP_SEND_CB,
-         encode_lz_send_callback(43, 0x11, 0x22, packet,
-                                 native_fee=7000, zro_fee=0))
+    t1 = b.tx("lz4", 1, USER, 100)
+    b.ext("lz4", t1, 100, USER)
+    t2 = b.tx("lz4", 2, LZT_UW, 110)
+    b.link("lz4", 1, t1, 100, t2, 110, USER, LZT_UW, 10**8, JETTON_TRANSFER_OP,
+           encode_jetton_transfer(66, 5000, destination=LZO_OAPP))
+    t3 = b.tx("lz4", 3, LZT_OW, 120)
+    b.link("lz4", 2, t2, 110, t3, 120, LZT_UW, LZT_OW, 10**7,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(66, 5000, from_owner=USER))
+    t4 = b.tx("lz4", 4, LZO_OAPP, 130)
+    b.link("lz4", 3, t3, 120, t4, 130, LZT_OW, LZO_OAPP, 10**6,
+           JETTON_NOTIFY_OP, encode_jetton_notify(66, 5000, sender=USER))
+    t5 = b.tx("lz4", 5, LZO_ENDPOINT, 140)
+    b.link("lz4", 4, t4, 130, t5, 140, LZO_OAPP, LZO_ENDPOINT, 10**6,
+           LZ_ENDPOINT_SEND, None)
+    t6 = b.tx("lz4", 6, LZO_CHANNEL, 150)
+    b.link("lz4", 5, t5, 140, t6, 150, LZO_ENDPOINT, LZO_CHANNEL, 10**6,
+           LZ_CHANNEL_SEND, None)
+    t7 = b.tx("lz4", 7, LZO_MCONN, 160)
+    b.link("lz4", 6, t6, 150, t7, 160, LZO_CHANNEL, LZO_MCONN, 10**6,
+           LZ_MCONN_SEND, None)
+    t8 = b.tx("lz4", 8, LZO_ULN, 170)
+    b.link("lz4", 7, t7, 160, t8, 170, LZO_MCONN, LZO_ULN, 10**6,
+           LZ_ULN_SEND, None)
+    t9 = b.tx("lz4", 9, LZO_CHANNEL, 180)
+    b.link("lz4", 8, t8, 170, t9, 180, LZO_ULN, LZO_CHANNEL, 10**6,
+           LZ_MSGLIB_SEND_CB, None)
+    t10 = b.tx("lz4", 10, LZO_OAPP, 190)
+    b.link("lz4", 9, t9, 180, t10, 190, LZO_CHANNEL, LZO_OAPP, 10**6,
+           LZ_OAPP_SEND_CB,
+           encode_lz_send_callback(43, 0x11, 0x22, packet,
+                                   native_fee=7000, zro_fee=0))
 
     jw = spark.createDataFrame(
         [(LZT_UW, USER, LZT_J), (LZT_OW, LZO_OAPP, LZT_J)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=25,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=25)
 
 
 LZT_UW, LZT_OW, LZT_J = UP("D", "A"), UP("D", "B"), UP("D", "C")
@@ -4364,7 +3748,6 @@ def _coffee_liquidity_fixture(spark: SparkSession):
     excess via payout_internal), cd2 depository withdrawal
     (withdraw_deposit#c0ffee07 → native payout#c0ffee32).  Reference:
     CoffeeDepositLiquidityMatcher, liquidity.py:1640-1816."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         COFFEE_DEPLOY_OP,
         COFFEE_DEPOSIT_EVENT,
@@ -4385,91 +3768,61 @@ def _coffee_liquidity_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # cd1: deposit 1000 CD_J toward the CD_J/TON pool, 600 LP minted
-    t1 = tx("cd1", 1, USER, 100); ext("cd1", t1, 100)
-    t2 = tx("cd1", 2, CD_UW, 110)
-    link("cd1", 1, t1, 100, t2, 110, USER, CD_UW, 10**8,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(61, 1000, destination=CD_VAULT))
-    t3 = tx("cd1", 3, CD_VW, 120)
-    link("cd1", 2, t2, 110, t3, 120, CD_UW, CD_VW, 10**7,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(61, 1000, from_owner=USER))
-    t4 = tx("cd1", 4, CD_VAULT, 130)
-    link("cd1", 3, t3, 120, t4, 130, CD_VW, CD_VAULT, 10**6,
-         JETTON_NOTIFY_OP, encode_jetton_notify(61, 1000, sender=USER))
-    t5 = tx("cd1", 5, CD_DEP, 140)
-    link("cd1", 4, t4, 130, t5, 140, CD_VAULT, CD_DEP, 10**6,
-         COFFEE_DEPOSITORY_REQUEST,
-         encode_coffee_depository_request(61, 1000, USER, CD_J, "TON"))
-    t6 = tx("cd1", 6, CD_DEPC, 150)
-    link("cd1", 5, t5, 140, t6, 150, CD_DEP, CD_DEPC, 10**6,
-         COFFEE_DEPLOY_OP, None)
-    t7 = tx("cd1", 7, CD_POOL, 160)
-    link("cd1", 6, t6, 150, t7, 160, CD_DEPC, CD_POOL, 10**6,
-         COFFEE_DEPOSIT_INTERNAL, None)
+    t1 = b.tx("cd1", 1, USER, 100); b.ext("cd1", t1, 100, USER)
+    t2 = b.tx("cd1", 2, CD_UW, 110)
+    b.link("cd1", 1, t1, 100, t2, 110, USER, CD_UW, 10**8,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(61, 1000, destination=CD_VAULT))
+    t3 = b.tx("cd1", 3, CD_VW, 120)
+    b.link("cd1", 2, t2, 110, t3, 120, CD_UW, CD_VW, 10**7,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(61, 1000, from_owner=USER))
+    t4 = b.tx("cd1", 4, CD_VAULT, 130)
+    b.link("cd1", 3, t3, 120, t4, 130, CD_VW, CD_VAULT, 10**6,
+           JETTON_NOTIFY_OP, encode_jetton_notify(61, 1000, sender=USER))
+    t5 = b.tx("cd1", 5, CD_DEP, 140)
+    b.link("cd1", 4, t4, 130, t5, 140, CD_VAULT, CD_DEP, 10**6,
+           COFFEE_DEPOSITORY_REQUEST,
+           encode_coffee_depository_request(61, 1000, USER, CD_J, "TON"))
+    t6 = b.tx("cd1", 6, CD_DEPC, 150)
+    b.link("cd1", 5, t5, 140, t6, 150, CD_DEP, CD_DEPC, 10**6,
+           COFFEE_DEPLOY_OP, None)
+    t7 = b.tx("cd1", 7, CD_POOL, 160)
+    b.link("cd1", 6, t6, 150, t7, 160, CD_DEPC, CD_POOL, 10**6,
+           COFFEE_DEPOSIT_INTERNAL, None)
     ev_body = encode_coffee_deposit_event(61, 1000, 2000, 600)
-    bodies.append(("bh-cd1-ev", ev_body))
-    msgs.append(("cd1", t7, 160, "cd1-ev", "out", CD_POOL, None,
-                 None, COFFEE_DEPOSIT_EVENT, 161, "bh-cd1-ev"))
-    t8 = tx("cd1", 8, CD_LPW, 170)
-    link("cd1", 7, t7, 160, t8, 170, CD_POOL, CD_LPW, 10**5,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(61, 600, from_owner=CD_POOL))
-    t9 = tx("cd1", 9, CD_VAULT, 180)
-    link("cd1", 8, t7, 160, t9, 180, CD_POOL, CD_VAULT, 10**5,
-         COFFEE_PAYOUT_INTERNAL,
-         encode_coffee_payout_internal(61, recipient=USER,
-                                       amount=5 * 10**7))
-    t10 = tx("cd1", 10, USER, 190)
-    link("cd1", 9, t9, 180, t10, 190, CD_VAULT, USER, 5 * 10**7,
-         COFFEE_PAYOUT, None)
+    b.event("cd1", "ev", t7, 160, CD_POOL, COFFEE_DEPOSIT_EVENT, ev_body)
+    t8 = b.tx("cd1", 8, CD_LPW, 170)
+    b.link("cd1", 7, t7, 160, t8, 170, CD_POOL, CD_LPW, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(61, 600, from_owner=CD_POOL))
+    t9 = b.tx("cd1", 9, CD_VAULT, 180)
+    b.link("cd1", 8, t7, 160, t9, 180, CD_POOL, CD_VAULT, 10**5,
+           COFFEE_PAYOUT_INTERNAL,
+           encode_coffee_payout_internal(61, recipient=USER,
+                                         amount=5 * 10**7))
+    t10 = b.tx("cd1", 10, USER, 190)
+    b.link("cd1", 9, t9, 180, t10, 190, CD_VAULT, USER, 5 * 10**7,
+           COFFEE_PAYOUT, None)
 
     # cd2: withdraw the pending depository — native payout back
-    u1 = tx("cd2", 1, USER, 200); ext("cd2", u1, 200)
-    u2 = tx("cd2", 2, CD_DEPC, 210)
-    link("cd2", 1, u1, 200, u2, 210, USER, CD_DEPC, 10**7,
-         COFFEE_WITHDRAW_DEPOSIT, encode_coffee_withdraw_deposit(62))
-    u3 = tx("cd2", 3, USER, 220)
-    link("cd2", 2, u2, 210, u3, 220, CD_DEPC, USER, 10**9,
-         COFFEE_PAYOUT, None)
+    u1 = b.tx("cd2", 1, USER, 200); b.ext("cd2", u1, 200, USER)
+    u2 = b.tx("cd2", 2, CD_DEPC, 210)
+    b.link("cd2", 1, u1, 200, u2, 210, USER, CD_DEPC, 10**7,
+           COFFEE_WITHDRAW_DEPOSIT, encode_coffee_withdraw_deposit(62))
+    u3 = b.tx("cd2", 3, USER, 220)
+    b.link("cd2", 2, u2, 210, u3, 220, CD_DEPC, USER, 10**9,
+           COFFEE_PAYOUT, None)
 
     jw = spark.createDataFrame(
         [(CD_UW, USER, CD_J), (CD_VW, CD_VAULT, CD_J),
          (CD_LPW, USER, UP("1", "B"))],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=25,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=25)
 
 
 _COFFEE_LIQ_ORACLE = f"""
@@ -4551,7 +3904,6 @@ def _vesting_fixture(spark: SparkSession):
     message BOC decoded for destination + value, ack leg claimed, the
     forwarded transfer left to classify on its own) and vt2
     add_whitelist#7258a69b with a three-address ref chain."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.base import (
         VESTING_ADD_WHITELIST,
         VESTING_ADD_WHITELIST_RESP,
@@ -4564,58 +3916,31 @@ def _vesting_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # vt1: owner sends through the vesting wallet; ack leg claimed
-    t1 = tx("vt1", 1, USER, 100); ext("vt1", t1, 100)
-    t2 = tx("vt1", 2, VS_WALLET, 110)
-    link("vt1", 1, t1, 100, t2, 110, USER, VS_WALLET, 10**8,
-         VESTING_SEND,
-         encode_vesting_send_message(31, VS_D1, 12345, src=VS_WALLET))
-    t3 = tx("vt1", 3, USER, 120)
-    link("vt1", 2, t2, 110, t3, 120, VS_WALLET, USER, 10**5,
-         VESTING_SEND_RESP, None)
-    t4 = tx("vt1", 4, VS_D1, 130)
-    link("vt1", 3, t2, 110, t4, 130, VS_WALLET, VS_D1, 12345, None, None)
+    t1 = b.tx("vt1", 1, USER, 100); b.ext("vt1", t1, 100, USER)
+    t2 = b.tx("vt1", 2, VS_WALLET, 110)
+    b.link("vt1", 1, t1, 100, t2, 110, USER, VS_WALLET, 10**8,
+           VESTING_SEND,
+           encode_vesting_send_message(31, VS_D1, 12345, src=VS_WALLET))
+    t3 = b.tx("vt1", 3, USER, 120)
+    b.link("vt1", 2, t2, 110, t3, 120, VS_WALLET, USER, 10**5,
+           VESTING_SEND_RESP, None)
+    t4 = b.tx("vt1", 4, VS_D1, 130)
+    b.link("vt1", 3, t2, 110, t4, 130, VS_WALLET, VS_D1, 12345, None, None)
 
     # vt2: whitelist three destinations in one ref-chained body
-    u1 = tx("vt2", 1, USER, 200); ext("vt2", u1, 200)
-    u2 = tx("vt2", 2, VS_WALLET, 210)
-    link("vt2", 1, u1, 200, u2, 210, USER, VS_WALLET, 10**8,
-         VESTING_ADD_WHITELIST,
-         encode_vesting_add_whitelist(32, [VS_D1, VS_D2, VS_D3]))
-    u3 = tx("vt2", 3, USER, 220)
-    link("vt2", 2, u2, 210, u3, 220, VS_WALLET, USER, 10**5,
-         VESTING_ADD_WHITELIST_RESP, None)
+    u1 = b.tx("vt2", 1, USER, 200); b.ext("vt2", u1, 200, USER)
+    u2 = b.tx("vt2", 2, VS_WALLET, 210)
+    b.link("vt2", 1, u1, 200, u2, 210, USER, VS_WALLET, 10**8,
+           VESTING_ADD_WHITELIST,
+           encode_vesting_add_whitelist(32, [VS_D1, VS_D2, VS_D3]))
+    u3 = b.tx("vt2", 3, USER, 220)
+    b.link("vt2", 2, u2, 210, u3, 220, VS_WALLET, USER, 10**5,
+           VESTING_ADD_WHITELIST_RESP, None)
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _VESTING_ORACLE = f"""
@@ -4685,7 +4010,6 @@ def _singles_fixture(spark: SparkSession):
     ownership-assigned leg).  References: PTonTransferMatcher
     (blocks/jettons.py), AuctionOutbidMatcher (blocks/nft.py),
     DnsPurchaseMatcher (auction.py:545-585)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.base import OWNERSHIP_ASSIGNED
     from ton_indexer_spark.classifier.protocols import (
         AUCTION_FILL_UP,
@@ -4698,63 +4022,39 @@ def _singles_fixture(spark: SparkSession):
 
     USER = ACC[0]
     TON = 10**9
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # pt1: proxy-TON transfer of 999 with a comment, one value child
-    t1 = tx("pt1", 1, USER, 100); ext("pt1", t1, 100, USER)
-    t2 = tx("pt1", 2, PT_WALLET, 110)
-    link("pt1", 1, t1, 100, t2, 110, USER, PT_WALLET, TON,
-         PTON_TRANSFER, encode_pton_transfer(21, 999, comment="gm"))
-    t3 = tx("pt1", 3, ACC[2], 120)
-    link("pt1", 2, t2, 110, t3, 120, PT_WALLET, ACC[2], 999, None, None)
+    t1 = b.tx("pt1", 1, USER, 100); b.ext("pt1", t1, 100, USER)
+    t2 = b.tx("pt1", 2, PT_WALLET, 110)
+    b.link("pt1", 1, t1, 100, t2, 110, USER, PT_WALLET, TON,
+           PTON_TRANSFER, encode_pton_transfer(21, 999, comment="gm"))
+    t3 = b.tx("pt1", 3, ACC[2], 120)
+    b.link("pt1", 2, t2, 110, t3, 120, PT_WALLET, ACC[2], 999, None, None)
 
     # ao1: USER bids 5 TON; the auction bounces 4 TON back to BIDDER1
-    u1 = tx("ao1", 1, USER, 200); ext("ao1", u1, 200, USER)
-    u2 = tx("ao1", 2, AO_AUCTION, 210)
-    link("ao1", 1, u1, 200, u2, 210, USER, AO_AUCTION, 5 * TON,
-         None, None)
-    u3 = tx("ao1", 3, AO_BIDDER1, 220)
-    link("ao1", 2, u2, 210, u3, 220, AO_AUCTION, AO_BIDDER1, 4 * TON,
-         None, None)
+    u1 = b.tx("ao1", 1, USER, 200); b.ext("ao1", u1, 200, USER)
+    u2 = b.tx("ao1", 2, AO_AUCTION, 210)
+    b.link("ao1", 1, u1, 200, u2, 210, USER, AO_AUCTION, 5 * TON,
+           None, None)
+    u3 = b.tx("ao1", 3, AO_BIDDER1, 220)
+    b.link("ao1", 2, u2, 210, u3, 220, AO_AUCTION, AO_BIDDER1, 4 * TON,
+           None, None)
 
     # dp1: fill-up at the .ton item; ownership assigned back to the buyer
-    v1 = tx("dp1", 1, USER, 300); ext("dp1", v1, 300, USER)
-    v2 = tx("dp1", 2, DP_ITEM, 310)
-    link("dp1", 1, v1, 300, v2, 310, USER, DP_ITEM, 7 * TON,
-         AUCTION_FILL_UP, None)
-    v3 = tx("dp1", 3, USER, 320)
-    link("dp1", 2, v2, 310, v3, 320, DP_ITEM, USER, 10**6,
-         OWNERSHIP_ASSIGNED,
-         encode_nft_ownership_assigned(22, prev_owner=None))
+    v1 = b.tx("dp1", 1, USER, 300); b.ext("dp1", v1, 300, USER)
+    v2 = b.tx("dp1", 2, DP_ITEM, 310)
+    b.link("dp1", 1, v1, 300, v2, 310, USER, DP_ITEM, 7 * TON,
+           AUCTION_FILL_UP, None)
+    v3 = b.tx("dp1", 3, USER, 320)
+    b.link("dp1", 2, v2, 310, v3, 320, DP_ITEM, USER, 10**6,
+           OWNERSHIP_ASSIGNED,
+           encode_nft_ownership_assigned(22, prev_owner=None))
 
     dns = spark.createDataFrame([(DP_ITEM,)], "address string")
     auctions = spark.createDataFrame([(AO_AUCTION,)], "address string")
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
+    return b.classify(
+        spark,
         dns_items=dns,
         auctions=auctions,
         big_trace_cutoff=20,
@@ -4832,7 +4132,6 @@ def _deploy_verify_fixture(spark: SparkSession):
     nonce+status in the VerificationStatus cell).  References:
     ToncoDeployPoolBlockMatcher (liquidity.py:1535-1620),
     LayerZeroDvnVerifyMatcher (layerzero.py:508-560)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         LZ_DVN_VERIFY,
         LZ_PROXY_CALL,
@@ -4848,69 +4147,42 @@ def _deploy_verify_fixture(spark: SparkSession):
         encode_tonco_pool_init,
     )
 
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # td1: deploy the TQ_JX/TQ_JY pool at tick spacing 60
-    t1 = tx("td1", 1, TDP_DEPLOYER, 100); ext("td1", t1, 100, TDP_DEPLOYER)
-    t2 = tx("td1", 2, TQ_ROUTER, 110)
-    link("td1", 1, t1, 100, t2, 110, TDP_DEPLOYER, TQ_ROUTER, 10**8,
-         TONCO_CREATE_POOL,
-         encode_tonco_create_pool(41, TQ_RW, TQ_RW2, 60, 2**96, 30,
-                                  100, 100, TQ_JX, TQ_JY))
-    t3 = tx("td1", 3, TQ_POOL, 120)
-    link("td1", 2, t2, 110, t3, 120, TQ_ROUTER, TQ_POOL, 10**7,
-         TONCO_POOL_INIT,
-         encode_tonco_pool_init(41, 60, 2**96, pool_active=True,
-                                protocol_fee=30, lp_fee_base=100,
-                                lp_fee_current=100))
+    t1 = b.tx("td1", 1, TDP_DEPLOYER, 100); b.ext("td1", t1, 100, TDP_DEPLOYER)
+    t2 = b.tx("td1", 2, TQ_ROUTER, 110)
+    b.link("td1", 1, t1, 100, t2, 110, TDP_DEPLOYER, TQ_ROUTER, 10**8,
+           TONCO_CREATE_POOL,
+           encode_tonco_create_pool(41, TQ_RW, TQ_RW2, 60, 2**96, 30,
+                                    100, 100, TQ_JX, TQ_JY))
+    t3 = b.tx("td1", 3, TQ_POOL, 120)
+    b.link("td1", 2, t2, 110, t3, 120, TQ_ROUTER, TQ_POOL, 10**7,
+           TONCO_POOL_INIT,
+           encode_tonco_pool_init(41, 60, 2**96, pool_active=True,
+                                  protocol_fee=30, lp_fee_base=100,
+                                  lp_fee_current=100))
 
     # lv1: DVN verify chain with the status callback
-    u1 = tx("lv1", 1, LZV_DVN2, 200); ext("lv1", u1, 200, LZV_DVN2)
-    u2 = tx("lv1", 2, LZV_DVN2, 210)
-    link("lv1", 1, u1, 200, u2, 210, LZV_DVN2, LZV_DVN2, 10**7,
-         LZ_DVN_VERIFY, None)
-    u3 = tx("lv1", 3, LZV_PROXY, 220)
-    link("lv1", 2, u2, 210, u3, 220, LZV_DVN2, LZV_PROXY, 10**6,
-         LZ_PROXY_CALL, None)
-    u4 = tx("lv1", 4, LZO_ULN, 230)
-    link("lv1", 3, u3, 220, u4, 230, LZV_PROXY, LZO_ULN, 10**6,
-         LZ_ULN_VERIFY, None)
-    u5 = tx("lv1", 5, LZO_UCONN, 240)
-    link("lv1", 4, u4, 230, u5, 240, LZO_ULN, LZO_UCONN, 10**6,
-         LZ_ULN_CONN_VERIFY, None)
-    u6 = tx("lv1", 6, LZO_CHANNEL, 250)
-    link("lv1", 5, u5, 240, u6, 250, LZO_UCONN, LZO_CHANNEL, 10**5,
-         LZ_ULN_VERIFY_CB,
-         encode_lz_verify_callback(99, 0x3BBC306B))
+    u1 = b.tx("lv1", 1, LZV_DVN2, 200); b.ext("lv1", u1, 200, LZV_DVN2)
+    u2 = b.tx("lv1", 2, LZV_DVN2, 210)
+    b.link("lv1", 1, u1, 200, u2, 210, LZV_DVN2, LZV_DVN2, 10**7,
+           LZ_DVN_VERIFY, None)
+    u3 = b.tx("lv1", 3, LZV_PROXY, 220)
+    b.link("lv1", 2, u2, 210, u3, 220, LZV_DVN2, LZV_PROXY, 10**6,
+           LZ_PROXY_CALL, None)
+    u4 = b.tx("lv1", 4, LZO_ULN, 230)
+    b.link("lv1", 3, u3, 220, u4, 230, LZV_PROXY, LZO_ULN, 10**6,
+           LZ_ULN_VERIFY, None)
+    u5 = b.tx("lv1", 5, LZO_UCONN, 240)
+    b.link("lv1", 4, u4, 230, u5, 240, LZO_ULN, LZO_UCONN, 10**6,
+           LZ_ULN_CONN_VERIFY, None)
+    u6 = b.tx("lv1", 6, LZO_CHANNEL, 250)
+    b.link("lv1", 5, u5, 240, u6, 250, LZO_UCONN, LZO_CHANNEL, 10**5,
+           LZ_ULN_VERIFY_CB,
+           encode_lz_verify_callback(99, 0x3BBC306B))
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _DEPLOY_VERIFY_ORACLE = f"""
@@ -4985,7 +4257,6 @@ def _cocoon_extras_fixture(spark: SparkSession):
     WRAPPED in the owner-wallet send (0x9c69f376 → 0xfafa6cc1).
     Reference: blocks/cocoon.py:241-314, :336-414, :1104-1219,
     :834-960."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         COCOON_CHARGE_PAYLOAD,
         COCOON_CLIENT_REQUEST,
@@ -5000,95 +4271,64 @@ def _cocoon_extras_fixture(spark: SparkSession):
 
     OWNER = ACC[4]
     TON = 10**9
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account, opcode=None, body=None):
-        bh = None
-        if body is not None:
-            bh = f"bh-{trace}-e0"
-            bodies.append((bh, body))
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, opcode, lt - 2, bh))
+    b = _TraceBuilder()
 
     # cp1: external payout request at the proxy
-    t1 = tx("cp1", 1, CO_PROXY, 100)
-    ext("cp1", t1, 100, CO_PROXY, opcode=COCOON_EXT_PROXY_PAYOUT,
-        body=encode_cocoon_simple(COCOON_EXT_PROXY_PAYOUT, 71,
-                                  address=OWNER))
-    t2 = tx("cp1", 2, OWNER, 110)
-    link("cp1", 1, t1, 100, t2, 110, CO_PROXY, OWNER, 3 * TON,
-         COCOON_PAYOUT, None)
-    t3 = tx("cp1", 3, OWNER, 120)
-    link("cp1", 2, t1, 100, t3, 120, CO_PROXY, OWNER, 10**5,
-         COCOON_RETURN_EXCESSES, None)
+    t1 = b.tx("cp1", 1, CO_PROXY, 100)
+    b.ext("cp1", t1, 100, CO_PROXY, opcode=COCOON_EXT_PROXY_PAYOUT,
+          body=encode_cocoon_simple(COCOON_EXT_PROXY_PAYOUT, 71,
+                                    address=OWNER))
+    t2 = b.tx("cp1", 2, OWNER, 110)
+    b.link("cp1", 1, t1, 100, t2, 110, CO_PROXY, OWNER, 3 * TON,
+           COCOON_PAYOUT, None)
+    t3 = b.tx("cp1", 3, OWNER, 120)
+    b.link("cp1", 2, t1, 100, t3, 120, CO_PROXY, OWNER, 10**5,
+           COCOON_RETURN_EXCESSES, None)
 
     # cc1: charge payload at the proxy → client request
-    u1 = tx("cc1", 1, CO_PROXY, 200)
-    ext("cc1", u1, 200, CO_PROXY, opcode=COCOON_CHARGE_PAYLOAD,
-        body=encode_cocoon_simple(COCOON_CHARGE_PAYLOAD, 72, tokens=700,
-                                  address=CO_CLIENT))
-    u2 = tx("cc1", 2, CO_CLIENT, 210)
-    link("cc1", 1, u1, 200, u2, 210, CO_PROXY, CO_CLIENT, 10**6,
-         COCOON_CLIENT_REQUEST, None)
-    u3 = tx("cc1", 3, CO_PROXY, 220)
-    link("cc1", 2, u2, 210, u3, 220, CO_CLIENT, CO_PROXY, 10**5,
-         COCOON_RETURN_EXCESSES, None)
+    u1 = b.tx("cc1", 1, CO_PROXY, 200)
+    b.ext("cc1", u1, 200, CO_PROXY, opcode=COCOON_CHARGE_PAYLOAD,
+          body=encode_cocoon_simple(COCOON_CHARGE_PAYLOAD, 72, tokens=700,
+                                    address=CO_CLIENT))
+    u2 = b.tx("cc1", 2, CO_CLIENT, 210)
+    b.link("cc1", 1, u1, 200, u2, 210, CO_PROXY, CO_CLIENT, 10**6,
+           COCOON_CLIENT_REQUEST, None)
+    u3 = b.tx("cc1", 3, CO_PROXY, 220)
+    b.link("cc1", 2, u2, 210, u3, 220, CO_CLIENT, CO_PROXY, 10**5,
+           COCOON_RETURN_EXCESSES, None)
 
     # cg2: refund grant — proxy → client → request → payout to owner
-    v1 = tx("cg2", 1, CO_PROXY, 300); ext("cg2", v1, 300, CO_PROXY)
-    v2 = tx("cg2", 2, CO_CLIENT, 310)
-    link("cg2", 1, v1, 300, v2, 310, CO_PROXY, CO_CLIENT, 10**7,
-         COCOON_GRANT_REFUND_PAYLOAD,
-         encode_cocoon_simple(COCOON_GRANT_REFUND_PAYLOAD, 73,
-                              tokens=800, address=CO_CLIENT))
-    v3 = tx("cg2", 3, CO_PROXY, 320)
-    link("cg2", 2, v2, 310, v3, 320, CO_CLIENT, CO_PROXY, 10**6,
-         COCOON_CLIENT_REQUEST, None)
-    v4 = tx("cg2", 4, OWNER, 330)
-    link("cg2", 3, v3, 320, v4, 330, CO_PROXY, OWNER, 2 * TON,
-         COCOON_PAYOUT, None)
+    v1 = b.tx("cg2", 1, CO_PROXY, 300); b.ext("cg2", v1, 300, CO_PROXY)
+    v2 = b.tx("cg2", 2, CO_CLIENT, 310)
+    b.link("cg2", 1, v1, 300, v2, 310, CO_PROXY, CO_CLIENT, 10**7,
+           COCOON_GRANT_REFUND_PAYLOAD,
+           encode_cocoon_simple(COCOON_GRANT_REFUND_PAYLOAD, 73,
+                                tokens=800, address=CO_CLIENT))
+    v3 = b.tx("cg2", 3, CO_PROXY, 320)
+    b.link("cg2", 2, v2, 310, v3, 320, CO_CLIENT, CO_PROXY, 10**6,
+           COCOON_CLIENT_REQUEST, None)
+    v4 = b.tx("cg2", 4, OWNER, 330)
+    b.link("cg2", 3, v3, 320, v4, 330, CO_PROXY, OWNER, 2 * TON,
+           COCOON_PAYOUT, None)
 
     # cr2: refund request wrapped in the owner-wallet send
-    w1 = tx("cr2", 1, OWNER, 400); ext("cr2", w1, 400, OWNER)
-    w2 = tx("cr2", 2, CX_WALLETC, 410)
-    link("cr2", 1, w1, 400, w2, 410, OWNER, CX_WALLETC, 10**7,
-         COCOON_WALLET_SEND,
-         encode_cocoon_simple(COCOON_WALLET_SEND, 74))
-    w3 = tx("cr2", 3, CO_CLIENT, 420)
-    link("cr2", 2, w2, 410, w3, 420, CX_WALLETC, CO_CLIENT, 10**6,
-         COCOON_REQUEST_REFUND,
-         encode_cocoon_simple(COCOON_REQUEST_REFUND, 74, address=OWNER))
-    w4 = tx("cr2", 4, CO_PROXY, 430)
-    link("cr2", 3, w3, 420, w4, 430, CO_CLIENT, CO_PROXY, 10**5,
-         COCOON_CLIENT_REQUEST, None)
-    w5 = tx("cr2", 5, OWNER, 440)
-    link("cr2", 4, w4, 430, w5, 440, CO_PROXY, OWNER, TON,
-         COCOON_PAYOUT, None)
+    w1 = b.tx("cr2", 1, OWNER, 400); b.ext("cr2", w1, 400, OWNER)
+    w2 = b.tx("cr2", 2, CX_WALLETC, 410)
+    b.link("cr2", 1, w1, 400, w2, 410, OWNER, CX_WALLETC, 10**7,
+           COCOON_WALLET_SEND,
+           encode_cocoon_simple(COCOON_WALLET_SEND, 74))
+    w3 = b.tx("cr2", 3, CO_CLIENT, 420)
+    b.link("cr2", 2, w2, 410, w3, 420, CX_WALLETC, CO_CLIENT, 10**6,
+           COCOON_REQUEST_REFUND,
+           encode_cocoon_simple(COCOON_REQUEST_REFUND, 74, address=OWNER))
+    w4 = b.tx("cr2", 4, CO_PROXY, 430)
+    b.link("cr2", 3, w3, 420, w4, 430, CO_CLIENT, CO_PROXY, 10**5,
+           COCOON_CLIENT_REQUEST, None)
+    w5 = b.tx("cr2", 5, OWNER, 440)
+    b.link("cr2", 4, w4, 430, w5, 440, CO_PROXY, OWNER, TON,
+           COCOON_PAYOUT, None)
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _COCOON_EXTRAS_ORACLE = f"""
@@ -5172,7 +4412,6 @@ def _coffee_factory_fixture(spark: SparkSession):
     pool deploy emitting the #c0ffee33 event and minting 500 LP).
     Reference: CoffeeCreateVaultMatcher (liquidity.py:1991-2027),
     CoffeeCreatePoolMatcher (:2157-2280)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         COFFEE_CREATE_POOL_NATIVE,
         COFFEE_CREATE_VAULT,
@@ -5191,74 +4430,45 @@ def _coffee_factory_fixture(spark: SparkSession):
 
     USER = ACC[0]
     TON = 10**9
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # cv1: create the CV_J vault
-    t1 = tx("cv1", 1, USER, 100); ext("cv1", t1, 100)
-    t2 = tx("cv1", 2, CV_FACTORY, 110)
-    link("cv1", 1, t1, 100, t2, 110, USER, CV_FACTORY, TON,
-         COFFEE_CREATE_VAULT, encode_coffee_create_vault(51, CV_J))
-    t3 = tx("cv1", 3, CV_VAULT, 120)
-    link("cv1", 2, t2, 110, t3, 120, CV_FACTORY, CV_VAULT, 10**7,
-         COFFEE_DEPLOY_OP, None)
+    t1 = b.tx("cv1", 1, USER, 100); b.ext("cv1", t1, 100, USER)
+    t2 = b.tx("cv1", 2, CV_FACTORY, 110)
+    b.link("cv1", 1, t1, 100, t2, 110, USER, CV_FACTORY, TON,
+           COFFEE_CREATE_VAULT, encode_coffee_create_vault(51, CV_J))
+    t3 = b.tx("cv1", 3, CV_VAULT, 120)
+    b.link("cv1", 2, t2, 110, t3, 120, CV_FACTORY, CV_VAULT, 10**7,
+           COFFEE_DEPLOY_OP, None)
 
     # cp2: create the TON/CV_J pool — native completing leg
-    u1 = tx("cp2", 1, USER, 200); ext("cp2", u1, 200)
-    u2 = tx("cp2", 2, CP_VAULT_TON, 210)
-    link("cp2", 1, u1, 200, u2, 210, USER, CP_VAULT_TON, 3 * TON + 10**8,
-         COFFEE_CREATE_POOL_NATIVE,
-         encode_coffee_create_pool_native(52, 3 * TON, "TON", CV_J,
-                                          USER))
-    u3 = tx("cp2", 3, CP_CREATOR, 220)
-    link("cp2", 2, u2, 210, u3, 220, CP_VAULT_TON, CP_CREATOR, 10**6,
-         COFFEE_POOL_CREATOR_REQUEST, None)
-    u4 = tx("cp2", 4, CP_DEPLOY, 230)
-    link("cp2", 3, u3, 220, u4, 230, CP_CREATOR, CP_DEPLOY, 10**6,
-         COFFEE_DEPLOY_OP, None)
-    u5 = tx("cp2", 5, CP_POOLREQ, 240)
-    link("cp2", 4, u4, 230, u5, 240, CP_DEPLOY, CP_POOLREQ, 10**6,
-         COFFEE_POOL_REQUEST,
-         encode_coffee_pool_request(52, 3 * TON, 7000, ACC[1]))
-    u6 = tx("cp2", 6, CP_POOL, 250)
-    link("cp2", 5, u5, 240, u6, 250, CP_POOLREQ, CP_POOL, 10**6,
-         COFFEE_DEPLOY_OP, None)
+    u1 = b.tx("cp2", 1, USER, 200); b.ext("cp2", u1, 200, USER)
+    u2 = b.tx("cp2", 2, CP_VAULT_TON, 210)
+    b.link("cp2", 1, u1, 200, u2, 210, USER, CP_VAULT_TON, 3 * TON + 10**8,
+           COFFEE_CREATE_POOL_NATIVE,
+           encode_coffee_create_pool_native(52, 3 * TON, "TON", CV_J,
+                                            USER))
+    u3 = b.tx("cp2", 3, CP_CREATOR, 220)
+    b.link("cp2", 2, u2, 210, u3, 220, CP_VAULT_TON, CP_CREATOR, 10**6,
+           COFFEE_POOL_CREATOR_REQUEST, None)
+    u4 = b.tx("cp2", 4, CP_DEPLOY, 230)
+    b.link("cp2", 3, u3, 220, u4, 230, CP_CREATOR, CP_DEPLOY, 10**6,
+           COFFEE_DEPLOY_OP, None)
+    u5 = b.tx("cp2", 5, CP_POOLREQ, 240)
+    b.link("cp2", 4, u4, 230, u5, 240, CP_DEPLOY, CP_POOLREQ, 10**6,
+           COFFEE_POOL_REQUEST,
+           encode_coffee_pool_request(52, 3 * TON, 7000, ACC[1]))
+    u6 = b.tx("cp2", 6, CP_POOL, 250)
+    b.link("cp2", 5, u5, 240, u6, 250, CP_POOLREQ, CP_POOL, 10**6,
+           COFFEE_DEPLOY_OP, None)
     ev = encode_coffee_deposit_event(52, 3 * TON, 7000, 500)
-    bodies.append(("bh-cp2-ev", ev))
-    msgs.append(("cp2", u6, 250, "cp2-ev", "out", CP_POOL, None,
-                 None, COFFEE_DEPOSIT_EVENT, 251, "bh-cp2-ev"))
-    u7 = tx("cp2", 7, CP_LPW, 260)
-    link("cp2", 6, u6, 250, u7, 260, CP_POOL, CP_LPW, 10**5,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(52, 500, from_owner=CP_POOL))
+    b.event("cp2", "ev", u6, 250, CP_POOL, COFFEE_DEPOSIT_EVENT, ev)
+    u7 = b.tx("cp2", 7, CP_LPW, 260)
+    b.link("cp2", 6, u6, 250, u7, 260, CP_POOL, CP_LPW, 10**5,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(52, 500, from_owner=CP_POOL))
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _COFFEE_FACTORY_ORACLE = f"""
@@ -5329,7 +4539,6 @@ def _stonfi_v2_provide_fixture(spark: SparkSession):
     0x06ecd527 → 300 LP minted to the user) and sp2 refunded (the cb's
     second 0x50c6a654 leg = failed arm).  Reference:
     StonfiV2ProvideLiquidityMatcher, liquidity.py:687-785."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         STONFI_V2_ACCOUNT_ADD,
         STONFI_V2_CB_ADD,
@@ -5344,29 +4553,7 @@ def _stonfi_v2_provide_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     def provide_body(q, amount1, amount2, from_user):
         # provide_liquidity#37c096df query_id from_user amount1 amount2
@@ -5376,41 +4563,41 @@ def _stonfi_v2_provide_fixture(spark: SparkSession):
         return base64.b64encode(serialize_boc(cell)).decode()
 
     def trace(tid, success):
-        t1 = tx(tid, 1, USER, 100); ext(tid, t1, 100)
-        t2 = tx(tid, 2, UW2_A, 110)
-        link(tid, 1, t1, 100, t2, 110, USER, UW2_A, 10**8,
-             JETTON_TRANSFER_OP,
-             encode_jetton_transfer(57, 1200, destination=V2ROUTER))
-        t3 = tx(tid, 3, RW2_A, 120)
-        link(tid, 2, t2, 110, t3, 120, UW2_A, RW2_A, 10**7,
-             JETTON_INTERNAL_OP,
-             encode_jetton_internal(57, 1200, from_owner=USER))
-        t4 = tx(tid, 4, V2ROUTER, 130)
-        link(tid, 3, t3, 120, t4, 130, RW2_A, V2ROUTER, 10**6,
-             JETTON_NOTIFY_OP, encode_jetton_notify(57, 1200, sender=USER))
-        t5 = tx(tid, 5, SVP_POOL, 140)
-        link(tid, 4, t4, 130, t5, 140, V2ROUTER, SVP_POOL, 10**6,
-             STONFI_V2_PROVIDE_LIQUIDITY,
-             provide_body(57, 1200, 0, USER))
-        t6 = tx(tid, 6, SVP_ACC, 150)
-        link(tid, 5, t5, 140, t6, 150, SVP_POOL, SVP_ACC, 10**5,
-             STONFI_V2_ACCOUNT_ADD, None)
-        t7 = tx(tid, 7, SVP_POOL, 160)
-        link(tid, 6, t6, 150, t7, 160, SVP_ACC, SVP_POOL, 10**5,
-             STONFI_V2_CB_ADD, None)
+        t1 = b.tx(tid, 1, USER, 100); b.ext(tid, t1, 100, USER)
+        t2 = b.tx(tid, 2, UW2_A, 110)
+        b.link(tid, 1, t1, 100, t2, 110, USER, UW2_A, 10**8,
+               JETTON_TRANSFER_OP,
+               encode_jetton_transfer(57, 1200, destination=V2ROUTER))
+        t3 = b.tx(tid, 3, RW2_A, 120)
+        b.link(tid, 2, t2, 110, t3, 120, UW2_A, RW2_A, 10**7,
+               JETTON_INTERNAL_OP,
+               encode_jetton_internal(57, 1200, from_owner=USER))
+        t4 = b.tx(tid, 4, V2ROUTER, 130)
+        b.link(tid, 3, t3, 120, t4, 130, RW2_A, V2ROUTER, 10**6,
+               JETTON_NOTIFY_OP, encode_jetton_notify(57, 1200, sender=USER))
+        t5 = b.tx(tid, 5, SVP_POOL, 140)
+        b.link(tid, 4, t4, 130, t5, 140, V2ROUTER, SVP_POOL, 10**6,
+               STONFI_V2_PROVIDE_LIQUIDITY,
+               provide_body(57, 1200, 0, USER))
+        t6 = b.tx(tid, 6, SVP_ACC, 150)
+        b.link(tid, 5, t5, 140, t6, 150, SVP_POOL, SVP_ACC, 10**5,
+               STONFI_V2_ACCOUNT_ADD, None)
+        t7 = b.tx(tid, 7, SVP_POOL, 160)
+        b.link(tid, 6, t6, 150, t7, 160, SVP_ACC, SVP_POOL, 10**5,
+               STONFI_V2_CB_ADD, None)
         if success:
-            t8 = tx(tid, 8, SVP_LPW, 170)
-            link(tid, 7, t7, 160, t8, 170, SVP_POOL, SVP_LPW, 10**4,
-                 JETTON_INTERNAL_OP,
-                 encode_jetton_internal(57, 300, from_owner=SVP_POOL))
-            t9 = tx(tid, 9, USER, 180)
-            link(tid, 8, t8, 170, t9, 180, SVP_LPW, USER, 1,
-                 JETTON_NOTIFY_OP,
-                 encode_jetton_notify(57, 300, sender=SVP_POOL))
+            t8 = b.tx(tid, 8, SVP_LPW, 170)
+            b.link(tid, 7, t7, 160, t8, 170, SVP_POOL, SVP_LPW, 10**4,
+                   JETTON_INTERNAL_OP,
+                   encode_jetton_internal(57, 300, from_owner=SVP_POOL))
+            t9 = b.tx(tid, 9, USER, 180)
+            b.link(tid, 8, t8, 170, t9, 180, SVP_LPW, USER, 1,
+                   JETTON_NOTIFY_OP,
+                   encode_jetton_notify(57, 300, sender=SVP_POOL))
         else:
-            t8 = tx(tid, 8, SVP_ACC, 170)
-            link(tid, 7, t7, 160, t8, 170, SVP_POOL, SVP_ACC, 10**4,
-                 STONFI_V2_ACCOUNT_ADD, None)
+            t8 = b.tx(tid, 8, SVP_ACC, 170)
+            b.link(tid, 7, t7, 160, t8, 170, SVP_POOL, SVP_ACC, 10**4,
+                   STONFI_V2_ACCOUNT_ADD, None)
 
     trace("sp1", success=True)
     trace("sp2", success=False)
@@ -5420,13 +4607,7 @@ def _stonfi_v2_provide_fixture(spark: SparkSession):
          (SVP_LPW, USER, UP("E", "0"))],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _STONFI_V2_PROVIDE_ORACLE = f"""
@@ -5490,7 +4671,6 @@ def _remaining_arms_fixture(spark: SparkSession):
     tf2 tgBTC burn fallback (lone burn event log).  References:
     liquidity.py:2281-2384, blocks/jvault.py:207-296,
     tgbtc.py:335-390."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         COFFEE_MEV_FAILED_SWAP,
         COFFEE_MEV_HOLD_FUNDS,
@@ -5512,77 +4692,44 @@ def _remaining_arms_fixture(spark: SparkSession):
 
     USER = ACC[0]
     TON = 10**9
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, None, lt - 2, None))
-
-    def event(trace, n, src_tx, src_lt, source, opcode, body):
-        bh = f"bh-{trace}-ev{n}"
-        bodies.append((bh, body))
-        msgs.append((trace, src_tx, src_lt, f"{trace}-ev{n}", "out",
-                     source, None, None, opcode, src_lt + 1, bh))
+    b = _TraceBuilder()
 
     # mv1: 4 TON held in the MEV escrow, service fee leg claimed
-    t1 = tx("mv1", 1, USER, 100); ext("mv1", t1, 100, USER)
-    t2 = tx("mv1", 2, MEV_ESCROW, 110)
-    link("mv1", 1, t1, 100, t2, 110, USER, MEV_ESCROW, 4 * TON,
-         COFFEE_MEV_HOLD_FUNDS, None)
-    t3 = tx("mv1", 3, ACC[3], 120)
-    link("mv1", 2, t2, 110, t3, 120, MEV_ESCROW, ACC[3], 10**7,
-         COFFEE_SERVICE_FEE, None)
+    t1 = b.tx("mv1", 1, USER, 100); b.ext("mv1", t1, 100, USER)
+    t2 = b.tx("mv1", 2, MEV_ESCROW, 110)
+    b.link("mv1", 1, t1, 100, t2, 110, USER, MEV_ESCROW, 4 * TON,
+           COFFEE_MEV_HOLD_FUNDS, None)
+    t3 = b.tx("mv1", 3, ACC[3], 120)
+    b.link("mv1", 2, t2, 110, t3, 120, MEV_ESCROW, ACC[3], 10**7,
+           COFFEE_SERVICE_FEE, None)
 
     # mv2: failed protected swap — refund with the recipient in the body
     fs = (Builder().store_uint(COFFEE_MEV_FAILED_SWAP, 32)
           .store_uint(58, 64).store_address(USER).end_cell())
-    u1 = tx("mv2", 1, MEV_ESCROW, 200); ext("mv2", u1, 200, MEV_ESCROW)
-    u2 = tx("mv2", 2, USER, 210)
-    link("mv2", 1, u1, 200, u2, 210, MEV_ESCROW, USER, 4 * TON,
-         COFFEE_MEV_FAILED_SWAP,
-         base64.b64encode(serialize_boc(fs)).decode())
+    u1 = b.tx("mv2", 1, MEV_ESCROW, 200); b.ext("mv2", u1, 200, MEV_ESCROW)
+    u2 = b.tx("mv2", 2, USER, 210)
+    b.link("mv2", 1, u1, 200, u2, 210, MEV_ESCROW, USER, 4 * TON,
+           COFFEE_MEV_FAILED_SWAP,
+           base64.b64encode(serialize_boc(fs)).decode())
 
     # jr1: unstake REQUEST — rewards round-trip only, no payout chain
-    v1 = tx("jr1", 1, USER, 300); ext("jr1", v1, 300, USER)
-    v2 = tx("jr1", 2, JV_STAKE_W, 310)
-    link("jr1", 1, v1, 300, v2, 310, USER, JV_STAKE_W, 10**8, JV_UR,
-         encode_jvault_unstake(59, 333, request_only=True))
-    v3 = tx("jr1", 3, JV_POOL, 320)
-    link("jr1", 2, v2, 310, v3, 320, JV_STAKE_W, JV_POOL, 10**7,
-         JVAULT_REQUEST_UPDATE, None)
+    v1 = b.tx("jr1", 1, USER, 300); b.ext("jr1", v1, 300, USER)
+    v2 = b.tx("jr1", 2, JV_STAKE_W, 310)
+    b.link("jr1", 1, v1, 300, v2, 310, USER, JV_STAKE_W, 10**8, JV_UR,
+           encode_jvault_unstake(59, 333, request_only=True))
+    v3 = b.tx("jr1", 3, JV_POOL, 320)
+    b.link("jr1", 2, v2, 310, v3, 320, JV_STAKE_W, JV_POOL, 10**7,
+           JVAULT_REQUEST_UPDATE, None)
 
     # tf1/tf2: crippled traces — only the event log survives
-    w1 = tx("tf1", 1, TB_TELEPORT, 400); ext("tf1", w1, 400, TB_TELEPORT)
-    event("tf1", 1, w1, 400, TB_TELEPORT, TGBTC_MINT_EVENT,
-          encode_tgbtc_mint_event(2500, ACC[2], TB_TXID))
-    x1 = tx("tf2", 1, TB_TELEPORT, 500); ext("tf2", x1, 500, TB_TELEPORT)
-    event("tf2", 1, x1, 500, TB_TELEPORT, TGBTC_BURN_EVENT,
-          encode_tgbtc_burn_event(1700, ACC[2], TB_PEGOUT))
+    w1 = b.tx("tf1", 1, TB_TELEPORT, 400); b.ext("tf1", w1, 400, TB_TELEPORT)
+    b.event("tf1", "ev1", w1, 400, TB_TELEPORT, TGBTC_MINT_EVENT,
+            encode_tgbtc_mint_event(2500, ACC[2], TB_TXID))
+    x1 = b.tx("tf2", 1, TB_TELEPORT, 500); b.ext("tf2", x1, 500, TB_TELEPORT)
+    b.event("tf2", "ev1", x1, 500, TB_TELEPORT, TGBTC_BURN_EVENT,
+            encode_tgbtc_burn_event(1700, ACC[2], TB_PEGOUT))
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _REMAINING_ARMS_ORACLE = f"""
@@ -5649,7 +4796,6 @@ def _cocoon_admin_fixture(spark: SparkSession):
     withdraw (amount decoded from the request payload's RefundGranted
     coins).  Reference: blocks/cocoon.py:527-648, :965-1100 and the
     owner-client matchers."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.protocols import (
         COCOON_CHANGE_SECRET_HASH,
         COCOON_CLIENT_REQUEST,
@@ -5668,84 +4814,57 @@ def _cocoon_admin_fixture(spark: SparkSession):
     )
 
     OWNER = ACC[4]
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # ca1: register a proxy (+excess back)
-    t1 = tx("ca1", 1, OWNER, 100); ext("ca1", t1, 100, OWNER)
-    t2 = tx("ca1", 2, CO_PROXY, 110)
-    link("ca1", 1, t1, 100, t2, 110, OWNER, CO_PROXY, 10**8,
-         COCOON_REGISTER_PROXY,
-         encode_cocoon_simple(COCOON_REGISTER_PROXY, 81))
-    t3 = tx("ca1", 3, OWNER, 120)
-    link("ca1", 2, t2, 110, t3, 120, CO_PROXY, OWNER, 10**5,
-         COCOON_RETURN_EXCESSES, None)
+    t1 = b.tx("ca1", 1, OWNER, 100); b.ext("ca1", t1, 100, OWNER)
+    t2 = b.tx("ca1", 2, CO_PROXY, 110)
+    b.link("ca1", 1, t1, 100, t2, 110, OWNER, CO_PROXY, 10**8,
+           COCOON_REGISTER_PROXY,
+           encode_cocoon_simple(COCOON_REGISTER_PROXY, 81))
+    t3 = b.tx("ca1", 3, OWNER, 120)
+    b.link("ca1", 2, t2, 110, t3, 120, CO_PROXY, OWNER, 10**5,
+           COCOON_RETURN_EXCESSES, None)
 
     # ca2: unregister with seqno 42
-    u1 = tx("ca2", 1, OWNER, 200); ext("ca2", u1, 200, OWNER)
-    u2 = tx("ca2", 2, CO_PROXY, 210)
-    link("ca2", 1, u1, 200, u2, 210, OWNER, CO_PROXY, 10**8,
-         COCOON_UNREGISTER_PROXY, encode_cocoon_unregister_proxy(82, 42))
+    u1 = b.tx("ca2", 1, OWNER, 200); b.ext("ca2", u1, 200, OWNER)
+    u2 = b.tx("ca2", 2, CO_PROXY, 210)
+    b.link("ca2", 1, u1, 200, u2, 210, OWNER, CO_PROXY, 10**8,
+           COCOON_UNREGISTER_PROXY, encode_cocoon_unregister_proxy(82, 42))
 
     # ca3: rotate the client's secret hash
-    v1 = tx("ca3", 1, OWNER, 300); ext("ca3", v1, 300, OWNER)
-    v2 = tx("ca3", 2, CO_CLIENT, 310)
-    link("ca3", 1, v1, 300, v2, 310, OWNER, CO_CLIENT, 10**7,
-         COCOON_CHANGE_SECRET_HASH,
-         encode_cocoon_change_secret_hash(83, 0xABCD, OWNER))
-    v3 = tx("ca3", 3, CO_PROXY, 320)
-    link("ca3", 2, v2, 310, v3, 320, CO_CLIENT, CO_PROXY, 10**6,
-         COCOON_CLIENT_REQUEST, None)
+    v1 = b.tx("ca3", 1, OWNER, 300); b.ext("ca3", v1, 300, OWNER)
+    v2 = b.tx("ca3", 2, CO_CLIENT, 310)
+    b.link("ca3", 1, v1, 300, v2, 310, OWNER, CO_CLIENT, 10**7,
+           COCOON_CHANGE_SECRET_HASH,
+           encode_cocoon_change_secret_hash(83, 0xABCD, OWNER))
+    v3 = b.tx("ca3", 3, CO_PROXY, 320)
+    b.link("ca3", 2, v2, 310, v3, 320, CO_CLIENT, CO_PROXY, 10**6,
+           COCOON_CLIENT_REQUEST, None)
 
     # ca4: increase the client's stake by 9 TON
-    w1 = tx("ca4", 1, OWNER, 400); ext("ca4", w1, 400, OWNER)
-    w2 = tx("ca4", 2, CO_CLIENT, 410)
-    link("ca4", 1, w1, 400, w2, 410, OWNER, CO_CLIENT, 10 * 10**9,
-         COCOON_INCREASE_STAKE,
-         encode_cocoon_increase_stake(84, 9 * 10**9, OWNER))
-    w3 = tx("ca4", 3, CO_PROXY, 420)
-    link("ca4", 2, w2, 410, w3, 420, CO_CLIENT, CO_PROXY, 10**6,
-         COCOON_CLIENT_REQUEST, None)
+    w1 = b.tx("ca4", 1, OWNER, 400); b.ext("ca4", w1, 400, OWNER)
+    w2 = b.tx("ca4", 2, CO_CLIENT, 410)
+    b.link("ca4", 1, w1, 400, w2, 410, OWNER, CO_CLIENT, 10 * 10**9,
+           COCOON_INCREASE_STAKE,
+           encode_cocoon_increase_stake(84, 9 * 10**9, OWNER))
+    w3 = b.tx("ca4", 3, CO_PROXY, 420)
+    b.link("ca4", 2, w2, 410, w3, 420, CO_CLIENT, CO_PROXY, 10**6,
+           COCOON_CLIENT_REQUEST, None)
 
     # ca5: withdraw — 5 TON refunded through the request payload
-    x1 = tx("ca5", 1, OWNER, 500); ext("ca5", x1, 500, OWNER)
-    x2 = tx("ca5", 2, CO_CLIENT, 510)
-    link("ca5", 1, x1, 500, x2, 510, OWNER, CO_CLIENT, 10**7,
-         COCOON_CLIENT_WITHDRAW_OP,
-         encode_cocoon_simple(COCOON_CLIENT_WITHDRAW_OP, 85,
-                              address=OWNER))
-    x3 = tx("ca5", 3, CO_PROXY, 520)
-    link("ca5", 2, x2, 510, x3, 520, CO_CLIENT, CO_PROXY, 10**6,
-         COCOON_CLIENT_REQUEST,
-         encode_cocoon_client_request(85, OWNER, 0xC68EBC7B, 5 * 10**9))
+    x1 = b.tx("ca5", 1, OWNER, 500); b.ext("ca5", x1, 500, OWNER)
+    x2 = b.tx("ca5", 2, CO_CLIENT, 510)
+    b.link("ca5", 1, x1, 500, x2, 510, OWNER, CO_CLIENT, 10**7,
+           COCOON_CLIENT_WITHDRAW_OP,
+           encode_cocoon_simple(COCOON_CLIENT_WITHDRAW_OP, 85,
+                                address=OWNER))
+    x3 = b.tx("ca5", 3, CO_PROXY, 520)
+    b.link("ca5", 2, x2, 510, x3, 520, CO_CLIENT, CO_PROXY, 10**6,
+           COCOON_CLIENT_REQUEST,
+           encode_cocoon_client_request(85, OWNER, 0xC68EBC7B, 5 * 10**9))
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _COCOON_ADMIN_ORACLE = f"""
@@ -5823,7 +4942,6 @@ def _final_arms_fixture(spark: SparkSession):
     leg (no pool request), fd1 dns_release, fn1 nft_update_sale.
     Reference: liquidity.py:1838-1968, :2055-2123; messages/dns.py,
     getgems sale update."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.base import JETTON_BURN
     from ton_indexer_spark.classifier.protocols import (
         BURN_NOTIFY,
@@ -5848,105 +4966,71 @@ def _final_arms_fixture(spark: SparkSession):
 
     USER = ACC[0]
     TON = 10**9
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None, USER,
-                     None, None, lt - 2, None))
-
-    def event(trace, n, src_tx, src_lt, source, opcode, body):
-        bh = f"bh-{trace}-ev{n}"
-        bodies.append((bh, body))
-        msgs.append((trace, src_tx, src_lt, f"{trace}-ev{n}", "out",
-                     source, None, None, opcode, src_lt + 1, bh))
+    b = _TraceBuilder()
 
     # fw1: burn 400 LP → 1000 CD_J + 2 TON paid out
-    t1 = tx("fw1", 1, USER, 100); ext("fw1", t1, 100)
-    t2 = tx("fw1", 2, CD_LPW, 110)
-    link("fw1", 1, t1, 100, t2, 110, USER, CD_LPW, TON, JETTON_BURN,
-         encode_jetton_burn(91, 400, response=USER))
-    t3 = tx("fw1", 3, CD_POOL, 120)
-    link("fw1", 2, t2, 110, t3, 120, CD_LPW, CD_POOL, 10**6,
-         BURN_NOTIFY, None)
-    event("fw1", 1, t3, 120, CD_POOL, COFFEE_WITHDRAW_EVENT,
-          encode_coffee_withdraw_event(91, 1000, 2 * TON))
-    t4 = tx("fw1", 4, CD_VAULT, 130)
-    link("fw1", 3, t3, 120, t4, 130, CD_POOL, CD_VAULT, 10**5,
-         COFFEE_PAYOUT_INTERNAL,
-         encode_coffee_payout_internal(91, recipient=USER, amount=1000))
-    t5 = tx("fw1", 5, CD_VW, 140)
-    link("fw1", 4, t4, 130, t5, 140, CD_VAULT, CD_VW, 10**4,
-         JETTON_TRANSFER_OP,
-         encode_jetton_transfer(91, 1000, destination=USER))
-    t6 = tx("fw1", 6, CD_UW, 150)
-    link("fw1", 5, t5, 140, t6, 150, CD_VW, CD_UW, 10**3,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(91, 1000, from_owner=CD_VAULT))
-    t7 = tx("fw1", 7, USER, 160)
-    link("fw1", 6, t6, 150, t7, 160, CD_UW, USER, 1, JETTON_NOTIFY_OP,
-         encode_jetton_notify(91, 1000, sender=CD_VAULT))
-    t8 = tx("fw1", 8, CP_VAULT_TON, 170)
-    link("fw1", 7, t3, 120, t8, 170, CD_POOL, CP_VAULT_TON, 10**5,
-         COFFEE_PAYOUT_INTERNAL,
-         encode_coffee_payout_internal(91, recipient=USER,
-                                       amount=2 * TON))
-    t9 = tx("fw1", 9, USER, 180)
-    link("fw1", 8, t8, 170, t9, 180, CP_VAULT_TON, USER, 2 * TON,
-         COFFEE_PAYOUT, None)
+    t1 = b.tx("fw1", 1, USER, 100); b.ext("fw1", t1, 100, USER)
+    t2 = b.tx("fw1", 2, CD_LPW, 110)
+    b.link("fw1", 1, t1, 100, t2, 110, USER, CD_LPW, TON, JETTON_BURN,
+           encode_jetton_burn(91, 400, response=USER))
+    t3 = b.tx("fw1", 3, CD_POOL, 120)
+    b.link("fw1", 2, t2, 110, t3, 120, CD_LPW, CD_POOL, 10**6,
+           BURN_NOTIFY, None)
+    b.event("fw1", "ev1", t3, 120, CD_POOL, COFFEE_WITHDRAW_EVENT,
+            encode_coffee_withdraw_event(91, 1000, 2 * TON))
+    t4 = b.tx("fw1", 4, CD_VAULT, 130)
+    b.link("fw1", 3, t3, 120, t4, 130, CD_POOL, CD_VAULT, 10**5,
+           COFFEE_PAYOUT_INTERNAL,
+           encode_coffee_payout_internal(91, recipient=USER, amount=1000))
+    t5 = b.tx("fw1", 5, CD_VW, 140)
+    b.link("fw1", 4, t4, 130, t5, 140, CD_VAULT, CD_VW, 10**4,
+           JETTON_TRANSFER_OP,
+           encode_jetton_transfer(91, 1000, destination=USER))
+    t6 = b.tx("fw1", 6, CD_UW, 150)
+    b.link("fw1", 5, t5, 140, t6, 150, CD_VW, CD_UW, 10**3,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(91, 1000, from_owner=CD_VAULT))
+    t7 = b.tx("fw1", 7, USER, 160)
+    b.link("fw1", 6, t6, 150, t7, 160, CD_UW, USER, 1, JETTON_NOTIFY_OP,
+           encode_jetton_notify(91, 1000, sender=CD_VAULT))
+    t8 = b.tx("fw1", 8, CP_VAULT_TON, 170)
+    b.link("fw1", 7, t3, 120, t8, 170, CD_POOL, CP_VAULT_TON, 10**5,
+           COFFEE_PAYOUT_INTERNAL,
+           encode_coffee_payout_internal(91, recipient=USER,
+                                         amount=2 * TON))
+    t9 = b.tx("fw1", 9, USER, 180)
+    b.link("fw1", 8, t8, 170, t9, 180, CP_VAULT_TON, USER, 2 * TON,
+           COFFEE_PAYOUT, None)
 
     # fc1: first pool-creation leg — creator deployed, no pool request
-    u1 = tx("fc1", 1, USER, 200); ext("fc1", u1, 200)
-    u2 = tx("fc1", 2, CP_VAULT_TON, 210)
-    link("fc1", 1, u1, 200, u2, 210, USER, CP_VAULT_TON, 2 * TON,
-         COFFEE_CREATE_POOL_NATIVE,
-         encode_coffee_create_pool_native(92, TON, "TON", CV_J, USER))
-    u3 = tx("fc1", 3, CP_CREATOR, 220)
-    link("fc1", 2, u2, 210, u3, 220, CP_VAULT_TON, CP_CREATOR, 10**6,
-         COFFEE_POOL_CREATOR_REQUEST, None)
-    u4 = tx("fc1", 4, CP_DEPLOY, 230)
-    link("fc1", 3, u3, 220, u4, 230, CP_CREATOR, CP_DEPLOY, 10**6,
-         COFFEE_DEPLOY_OP, None)
+    u1 = b.tx("fc1", 1, USER, 200); b.ext("fc1", u1, 200, USER)
+    u2 = b.tx("fc1", 2, CP_VAULT_TON, 210)
+    b.link("fc1", 1, u1, 200, u2, 210, USER, CP_VAULT_TON, 2 * TON,
+           COFFEE_CREATE_POOL_NATIVE,
+           encode_coffee_create_pool_native(92, TON, "TON", CV_J, USER))
+    u3 = b.tx("fc1", 3, CP_CREATOR, 220)
+    b.link("fc1", 2, u2, 210, u3, 220, CP_VAULT_TON, CP_CREATOR, 10**6,
+           COFFEE_POOL_CREATOR_REQUEST, None)
+    u4 = b.tx("fc1", 4, CP_DEPLOY, 230)
+    b.link("fc1", 3, u3, 220, u4, 230, CP_CREATOR, CP_DEPLOY, 10**6,
+           COFFEE_DEPLOY_OP, None)
 
     # fd1 / fn1: simple single-op shapes
-    v1 = tx("fd1", 1, USER, 300); ext("fd1", v1, 300)
-    v2 = tx("fd1", 2, DNS_ITEM, 310)
-    link("fd1", 1, v1, 300, v2, 310, USER, DNS_ITEM, 10**7,
-         DNS_RELEASE, None)
-    w1 = tx("fn1", 1, USER, 400); ext("fn1", w1, 400)
-    w2 = tx("fn1", 2, SALE, 410)
-    link("fn1", 1, w1, 400, w2, 410, USER, SALE, 10**7,
-         NFT_SALE_UPDATE, None)
+    v1 = b.tx("fd1", 1, USER, 300); b.ext("fd1", v1, 300, USER)
+    v2 = b.tx("fd1", 2, DNS_ITEM, 310)
+    b.link("fd1", 1, v1, 300, v2, 310, USER, DNS_ITEM, 10**7,
+           DNS_RELEASE, None)
+    w1 = b.tx("fn1", 1, USER, 400); b.ext("fn1", w1, 400, USER)
+    w2 = b.tx("fn1", 2, SALE, 410)
+    b.link("fn1", 1, w1, 400, w2, 410, USER, SALE, 10**7,
+           NFT_SALE_UPDATE, None)
 
     jw = spark.createDataFrame(
         [(CD_LPW, USER, UP("1", "B")), (CD_VW, CD_VAULT, CD_J),
          (CD_UW, USER, CD_J)],
         "address string, owner string, jetton string",
     )
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw,
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, jetton_wallets=jw, big_trace_cutoff=20)
 
 
 _FINAL_ARMS_ORACLE = f"""
@@ -6024,7 +5108,6 @@ def _subscription_fixture(spark: SparkSession):
     payment to the beneficiary) and sb2 unsubscribe ('dstr' destruct at
     the subscription).  Reference: messages/subscriptions.py:6-24 and
     the subscribe/unsubscribe fills."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.base import (
         SUBSCRIPTION_PAY_INTERNAL,
         SUBSCRIPTION_PAY_RESPONSE,
@@ -6037,54 +5120,27 @@ def _subscription_fixture(spark: SparkSession):
 
     USER = ACC[0]
     TON = 10**9
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    "active", "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # sb1: subscription charges 2 TON — request → response → 'subs' leg
-    t1 = tx("sb1", 1, SB_SUB, 100); ext("sb1", t1, 100, SB_SUB)
-    t2 = tx("sb1", 2, USER, 110)
-    link("sb1", 1, t1, 100, t2, 110, SB_SUB, USER, 10**6,
-         SUBSCRIPTION_PAYMENT, encode_subscription_payment(61, 2 * TON))
-    t3 = tx("sb1", 3, SB_SUB, 120)
-    link("sb1", 2, t2, 110, t3, 120, USER, SB_SUB, 2 * TON + 10**6,
-         SUBSCRIPTION_PAY_RESPONSE, None)
-    t4 = tx("sb1", 4, SB_BENEF, 130)
-    link("sb1", 3, t3, 120, t4, 130, SB_SUB, SB_BENEF, 2 * TON,
-         SUBSCRIPTION_PAY_INTERNAL, None)
+    t1 = b.tx("sb1", 1, SB_SUB, 100); b.ext("sb1", t1, 100, SB_SUB)
+    t2 = b.tx("sb1", 2, USER, 110)
+    b.link("sb1", 1, t1, 100, t2, 110, SB_SUB, USER, 10**6,
+           SUBSCRIPTION_PAYMENT, encode_subscription_payment(61, 2 * TON))
+    t3 = b.tx("sb1", 3, SB_SUB, 120)
+    b.link("sb1", 2, t2, 110, t3, 120, USER, SB_SUB, 2 * TON + 10**6,
+           SUBSCRIPTION_PAY_RESPONSE, None)
+    t4 = b.tx("sb1", 4, SB_BENEF, 130)
+    b.link("sb1", 3, t3, 120, t4, 130, SB_SUB, SB_BENEF, 2 * TON,
+           SUBSCRIPTION_PAY_INTERNAL, None)
 
     # sb2: destruct the plugin
-    u1 = tx("sb2", 1, USER, 200); ext("sb2", u1, 200, USER)
-    u2 = tx("sb2", 2, SB_SUB, 210)
-    link("sb2", 1, u1, 200, u2, 210, USER, SB_SUB, 10**7,
-         UNSUBSCRIBE_OP, None)
+    u1 = b.tx("sb2", 1, USER, 200); b.ext("sb2", u1, 200, USER)
+    u2 = b.tx("sb2", 2, SB_SUB, 210)
+    b.link("sb2", 1, u1, 200, u2, 210, USER, SB_SUB, 10**7,
+           UNSUBSCRIBE_OP, None)
 
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        big_trace_cutoff=20,
-    )
+    return b.classify(spark, big_trace_cutoff=20)
 
 
 _SUBSCRIPTION_ORACLE = f"""
@@ -6143,7 +5199,6 @@ def _base_types_fixture(spark: SparkSession):
     the master), bt3 NFT mint (deploy of a known item), bt4 put-on-sale
     (deploy of a known sale contract, getgems default), bt5 multisig v2
     order creation (new_order#f718510f with seqno/creator/expiry)."""
-    from ton_indexer_spark.classifier import classify_traces
     from ton_indexer_spark.classifier.base import (
         JETTON_BURN,
         MULTISIG_NEW_ORDER,
@@ -6156,62 +5211,40 @@ def _base_types_fixture(spark: SparkSession):
     )
 
     USER = ACC[0]
-    txs, msgs, bodies = [], [], []
-
-    def tx(trace, n, account, lt, orig="active"):
-        h = f"{trace}-tx{n}"
-        txs.append((h, account, lt, 1_700_000_000 + lt, False,
-                    orig, "active", trace))
-        return h
-
-    def link(trace, n, src_tx, src_lt, dst_tx, dst_lt, source,
-             destination, value, opcode, body):
-        mh, bh = f"{trace}-m{n}", None
-        if body is not None:
-            bh = f"bh-{trace}-m{n}"
-            bodies.append((bh, body))
-        clt = src_lt + 1
-        msgs.append((trace, src_tx, src_lt, mh, "out", source,
-                     destination, value, opcode, clt, bh))
-        msgs.append((trace, dst_tx, dst_lt, mh, "in", source,
-                     destination, value, opcode, clt, bh))
-
-    def ext(trace, root_tx, lt, account):
-        msgs.append((trace, root_tx, lt, f"{trace}-e0", "in", None,
-                     account, None, None, lt - 2, None))
+    b = _TraceBuilder()
 
     # bt1: burn 800 at the user's wallet
-    t1 = tx("bt1", 1, USER, 100); ext("bt1", t1, 100, USER)
-    t2 = tx("bt1", 2, BT_BW, 110)
-    link("bt1", 1, t1, 100, t2, 110, USER, BT_BW, 10**8, JETTON_BURN,
-         encode_jetton_burn(95, 800, response=USER))
+    t1 = b.tx("bt1", 1, USER, 100); b.ext("bt1", t1, 100, USER)
+    t2 = b.tx("bt1", 2, BT_BW, 110)
+    b.link("bt1", 1, t1, 100, t2, 110, USER, BT_BW, 10**8, JETTON_BURN,
+           encode_jetton_burn(95, 800, response=USER))
 
     # bt2: mint — internal transfer straight from the master
-    u1 = tx("bt2", 1, BT_MJ, 200); ext("bt2", u1, 200, BT_MJ)
-    u2 = tx("bt2", 2, BT_MW, 210)
-    link("bt2", 1, u1, 200, u2, 210, BT_MJ, BT_MW, 10**6,
-         JETTON_INTERNAL_OP,
-         encode_jetton_internal(96, 1234, from_owner=BT_MJ))
-    u3 = tx("bt2", 3, USER, 220)
-    link("bt2", 2, u2, 210, u3, 220, BT_MW, USER, 1, JETTON_NOTIFY_OP,
-         encode_jetton_notify(96, 1234, sender=BT_MJ))
+    u1 = b.tx("bt2", 1, BT_MJ, 200); b.ext("bt2", u1, 200, BT_MJ)
+    u2 = b.tx("bt2", 2, BT_MW, 210)
+    b.link("bt2", 1, u1, 200, u2, 210, BT_MJ, BT_MW, 10**6,
+           JETTON_INTERNAL_OP,
+           encode_jetton_internal(96, 1234, from_owner=BT_MJ))
+    u3 = b.tx("bt2", 3, USER, 220)
+    b.link("bt2", 2, u2, 210, u3, 220, BT_MW, USER, 1, JETTON_NOTIFY_OP,
+           encode_jetton_notify(96, 1234, sender=BT_MJ))
 
     # bt3: NFT item deployed by its collection = mint
-    v1 = tx("bt3", 1, BT_COLL, 300); ext("bt3", v1, 300, BT_COLL)
-    v2 = tx("bt3", 2, BT_NFT, 310, orig="nonexist")
-    link("bt3", 1, v1, 300, v2, 310, BT_COLL, BT_NFT, 10**7, 0x1, None)
+    v1 = b.tx("bt3", 1, BT_COLL, 300); b.ext("bt3", v1, 300, BT_COLL)
+    v2 = b.tx("bt3", 2, BT_NFT, 310, orig_status="nonexist")
+    b.link("bt3", 1, v1, 300, v2, 310, BT_COLL, BT_NFT, 10**7, 0x1, None)
 
     # bt4: sale contract deployed = put on sale (getgems default)
-    w1 = tx("bt4", 1, USER, 400); ext("bt4", w1, 400, USER)
-    w2 = tx("bt4", 2, BT_SALE2, 410, orig="nonexist")
-    link("bt4", 1, w1, 400, w2, 410, USER, BT_SALE2, 10**7, None, None)
+    w1 = b.tx("bt4", 1, USER, 400); b.ext("bt4", w1, 400, USER)
+    w2 = b.tx("bt4", 2, BT_SALE2, 410, orig_status="nonexist")
+    b.link("bt4", 1, w1, 400, w2, 410, USER, BT_SALE2, 10**7, None, None)
 
     # bt5: multisig v2 order creation
-    x1 = tx("bt5", 1, USER, 500); ext("bt5", x1, 500, USER)
-    x2 = tx("bt5", 2, BT_MS, 510)
-    link("bt5", 1, x1, 500, x2, 510, USER, BT_MS, 10**8,
-         MULTISIG_NEW_ORDER,
-         encode_multisig_new_order(97, 7, True, 2, 1_800_000_000))
+    x1 = b.tx("bt5", 1, USER, 500); b.ext("bt5", x1, 500, USER)
+    x2 = b.tx("bt5", 2, BT_MS, 510)
+    b.link("bt5", 1, x1, 500, x2, 510, USER, BT_MS, 10**8,
+           MULTISIG_NEW_ORDER,
+           encode_multisig_new_order(97, 7, True, 2, 1_800_000_000))
 
     jw = spark.createDataFrame(
         [(BT_BW, USER, BT_BJ), (BT_MW, USER, BT_MJ)],
@@ -6221,11 +5254,12 @@ def _base_types_fixture(spark: SparkSession):
     ms = spark.createDataFrame([(BT_MS,)], "address string")
     ns = spark.createDataFrame([(BT_SALE2, BT_NFT2)],
                                "address string, nft_address string")
-    return classify_traces(
-        spark.createDataFrame(txs, _TX_SCHEMA),
-        spark.createDataFrame(msgs, _MSG_SCHEMA),
-        spark.createDataFrame(bodies, "hash string, body string"),
-        jetton_wallets=jw, nft_items=ni, multisig=ms, nft_sales=ns,
+    return b.classify(
+        spark,
+        jetton_wallets=jw,
+        nft_items=ni,
+        multisig=ms,
+        nft_sales=ns,
         big_trace_cutoff=20,
     )
 

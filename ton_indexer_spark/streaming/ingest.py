@@ -248,18 +248,20 @@ class IngestPipeline:
         has_bucket = "seq_bucket" in msgs_all.columns
 
         def handle(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.head(1):
-                return
             # driver sees only TWO scalars per batch (min/max seqno) —
             # never a per-seqno list, so a backfill batch spanning 10⁶
-            # seqnos costs the driver nothing.  The range prunes the
-            # seq_bucket partition column; exact seqno membership is a
-            # distributed semi-join against the batch's own seqnos (AQE
-            # broadcasts the tiny aggregate at block cadence, shuffles it
-            # on a huge backfill batch — both correct).
+            # seqnos costs the driver nothing.  The same job is the
+            # empty-batch probe: min is null when the batch has no rows.
+            # The range prunes the seq_bucket partition column; exact
+            # seqno membership is a distributed semi-join against the
+            # batch's own seqnos (AQE broadcasts the tiny aggregate at
+            # block cadence, shuffles it on a huge backfill batch — both
+            # correct).
             lo, hi = batch_df.agg(
                 F.min("mc_block_seqno"), F.max("mc_block_seqno")
             ).first()
+            if lo is None:
+                return
             pruned = msgs_all
             if has_bucket:
                 pruned = pruned.filter(

@@ -17,7 +17,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # event types mirror server.go:116-121; v2 distinguishes the commit tier
 # a transaction has reached (SubscribeToConfirmedTransactions vs
@@ -68,9 +67,3 @@ def publish_batch(
         emit(EV_ACCOUNT_STATES, account_states, "finalized")
     return published
 
-
-def with_finality(df: DataFrame, finality: str) -> DataFrame:
-    """T6 discriminator column — the reference hardcodes ``2 as finality``
-    for finalized rows (crud_transactions.go:36) and overlays pending
-    (emulated) data with lower finality."""
-    return df.withColumn("finality", F.lit(finality))

@@ -68,8 +68,8 @@ class BatchResult:
 
 class IncrementalTraceAssembler:
     """``pending_ttl_mc_seqnos`` bounds state: a pending trace whose last
-    activity is older than the TTL (in masterchain seqnos behind the batch
-    maximum) is emitted as final-pending and evicted — the Spark analog of
+    activity is the TTL or more masterchain seqnos behind the batch maximum
+    is emitted as final-pending and evicted — the Spark analog of
     the reference's ton-trace-ttl-tracker service (SURVEY.md T6).  Batches
     must arrive in mc_seqno order (the reference's T1 in-order scheduler
     contract); within a batch order is irrelevant.
@@ -266,13 +266,15 @@ class IncrementalTraceAssembler:
 
         # a trace can gain members only through a pending out-edge, so it
         # is final once it has none (TraceAssembler.cpp:350-366) — broken
-        # traces included — or once its TTL expires
+        # traces included — or once its TTL expires: its last activity is
+        # the TTL or more behind the batch maximum, so a TTL of 0 keeps no
+        # trace open past its batch
         closed = F.col("pending_edges_") == 0
         if self.pending_ttl_mc_seqnos is not None:
             horizon = assembled.members.agg(F.max("mc_block_seqno")).first()[0]
             if horizon is not None:
                 cutoff = horizon - self.pending_ttl_mc_seqnos
-                closed = closed | (F.col("mc_seqno_end") < cutoff)
+                closed = closed | (F.col("mc_seqno_end") <= cutoff)
         # a trace without mc_seqno stays open rather than vanish from both
         closed = F.coalesce(closed, F.lit(False))
 
