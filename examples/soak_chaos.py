@@ -7,11 +7,11 @@ a snapshot restore in a fresh process.  The restored run must converge to
 EXACTLY the uninterrupted run's output: the comparison hashes the full
 finalized-trace set and the per-trace action multiset.
 
-Recovery contract exercised end-to-end (trace_assembler.py:73-109):
-restart resumes from the last persisted snapshot; the driver re-delivers
-every batch after it; the batch-keyed output dirs act as the idempotent
-T8 sink (replayed batch ids REPLACE their directory, so duplicates are
-structurally impossible).
+Recovery contract exercised end-to-end
+(``IncrementalTraceAssembler.process_batch``): restart resumes from the
+last persisted snapshot; the driver re-delivers every batch after it; the
+batch-keyed output dirs act as the idempotent T8 sink (replayed batch ids
+REPLACE their directory, so duplicates are structurally impossible).
 
 Round-9 extensions (verdict ask #8): multiple kill/restore CYCLES
 (``kill1,kill2`` — child A dies at kill1, child B restores and dies at
@@ -119,20 +119,20 @@ def run_incremental(spark, work: str, fixture: str,
         os.path.join(fixture, "message_contents.parquet")
     )
     state_dir = os.path.join(work, "state")
-    asm = IncrementalTraceAssembler(spark, state_dir=state_dir,
-                                    snapshot_every=1)
+    asm = IncrementalTraceAssembler(spark, state_dir=state_dir)
     out_dir = os.path.join(work, "out")
     os.makedirs(out_dir, exist_ok=True)
-    # Restart protocol (the driver contract, trace_assembler.py:84-88):
-    # the assembler restores from its last committed snapshot, and the
-    # DRIVER re-delivers every batch after its own checkpoint — which in
-    # a real pipeline commits only after the foreachBatch body (sinks
-    # included) completes.  The harness's stand-in for that checkpoint
-    # is the batch-keyed sink itself: a batch counts as delivered only
-    # when BOTH its output dirs are committed.  Resuming from the
-    # snapshot id alone loses the batch whose state persisted but whose
-    # sink write was cut by the crash (caught by the two-cycle chaos run
-    # — the assembler rewinds on redelivery, so re-delivering is safe).
+    # Restart protocol (the driver contract of
+    # IncrementalTraceAssembler.process_batch): the assembler restores
+    # from its last committed snapshot, and the DRIVER re-delivers every
+    # batch after its own checkpoint — which in a real pipeline commits
+    # only after the foreachBatch body (sinks included) completes.  The
+    # harness's stand-in for that checkpoint is the batch-keyed sink
+    # itself: a batch counts as delivered only when BOTH its output dirs
+    # are committed.  Resuming from the snapshot id alone loses the batch
+    # whose state persisted but whose sink write was cut by the crash
+    # (caught by the two-cycle chaos run — the assembler rewinds on
+    # redelivery, so re-delivering is safe).
     snaps = asm._snap_ids()
     start = (snaps[-1] + 1) if snaps else 0
     delivered = 0

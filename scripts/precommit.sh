@@ -11,6 +11,8 @@ cd "$(git rev-parse --show-toplevel)"
 # surfaces at driver time
 # + opcode-indexed dispatch ≡ full scan, so a wrong @opcodes declaration
 # fails the commit
-exec python -m pytest tests/test_classifier_smoke.py \
+# + every package attribute the ingest benchmark wraps by name still
+# exists, so an ingest refactor cannot silently blind traced runs
+exec python -m pytest tests/test_classifier_smoke.py tests/test_bench_hooks.py \
   tests/test_registry_sanity.py tests/test_dispatch_parity.py \
   -q -x --no-header -p no:cacheprovider

@@ -73,6 +73,34 @@ def _node(opcode=None, source=ACC[0], value=10**9, children=0,
     return n
 
 
+def _subscription_flow():
+    """A wallet-plugin payment (subscriptions.py:28-59): the subscription
+    asks the wallet to pay (SUBSCRIPTION_PAYMENT), the wallet's response
+    returns to it (SUBSCRIPTION_PAY_RESPONSE) and it pays the beneficiary
+    (SUBSCRIPTION_PAY_INTERNAL).  Returns the request and response nodes:
+    each roots a ``match_subscription`` arm, so a declaration missing
+    either opcode fails the drift guard below."""
+    nodes = []
+    hops = [(ACC[0], ACC[1], M.SUBSCRIPTION_PAYMENT),
+            (ACC[1], ACC[0], M.SUBSCRIPTION_PAY_RESPONSE),
+            (ACC[0], ACC[3], M.SUBSCRIPTION_PAY_INTERNAL)]
+    for i, (src, dst, op) in enumerate(hops):
+        n = Node(
+            tx_hash=f"s{i}", tx_lt=200 + 10 * i, tx_now=2000 + i,
+            account=dst, aborted=False, orig_status="active",
+            end_status="active",
+        )
+        n.in_msg = Msg(
+            msg_hash=f"sm{i}", direction="in", source=src, destination=dst,
+            value=10**8, opcode=op, created_lt=199 + 10 * i,
+        )
+        if nodes:
+            n.parent = nodes[-1]
+            nodes[-1].children.append(n)
+        nodes.append(n)
+    return nodes[:2]
+
+
 # every 32-bit opcode constant the matcher library names
 OPCODES = sorted({
     v for mod in (base, M, protocols) for k, v in vars(mod).items()
@@ -89,6 +117,7 @@ SHAPES = [
     _node(opcode=0x0BADC0DE, children=2, out_opcode=0x0BADC0D1),
     _node(opcode=0x0BADC0DE, aborted=True),
     *(_node(opcode=op, children=2, out_opcode=0x0BADC0D1) for op in OPCODES),
+    *_subscription_flow(),
 ]
 
 

@@ -109,13 +109,14 @@ def test_transactions_plan_pushdown(spark, tmp_path_factory):
 
 
 def test_partition_pruning_on_written_facts(spark, fixture_dir, tmp_path):
-    """write_facts partitions by mc_bucket; a seqno-range query must prune
-    partition directories (the 100 TB access-path contract)."""
-    from ton_indexer_spark.sources.writer import write_facts
+    """write_facts_batch partitions by mc_bucket; a seqno-range query must
+    prune partition directories (the 100 TB access-path contract)."""
+    from ton_indexer_spark.sources.writer import write_facts_batch
 
     txs = spark.read.parquet(f"{fixture_dir}/transactions.parquet")
     path = str(tmp_path / "facts")
-    write_facts(txs, path, sort_cols=["lt", "account", "hash"], bucket_size=1)
+    write_facts_batch(txs, path, sort_cols=["lt", "account", "hash"],
+                      batch_id=0, bucket_size=1)
 
     full = spark.read.parquet(path)
     buckets = sorted(r[0] for r in full.select("mc_bucket").distinct().collect())

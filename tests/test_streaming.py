@@ -29,12 +29,12 @@ def test_incremental_matches_batch(spark, fixture_dir, tmp_path):
 
     asm = IncrementalTraceAssembler(spark, state_dir=str(tmp_path / "state"))
     emitted: dict[str, dict] = {}
-    for sl in slices:
+    for i, sl in enumerate(slices):
         if not sl:
             continue
         bt = txs.filter(F.col("mc_block_seqno").isin(list(sl))).drop("trace_id")
         bm = msgs.filter(F.col("mc_seqno").isin(list(sl)))
-        res = asm.process_batch(bt, bm)
+        res = asm.process_batch(bt, bm, batch_id=i)
         for r in res.final_traces.collect():
             assert r["trace_id"] not in emitted, "trace finalized twice"
             emitted[r["trace_id"]] = r.asDict()
@@ -117,15 +117,18 @@ def test_state_restart_resumes(spark, fixture_dir, tmp_path):
     a1.process_batch(
         txs.filter(F.col("mc_block_seqno") <= mid).drop("trace_id"),
         msgs.filter(F.col("mc_seqno") <= mid),
+        batch_id=0,
     )
     n_open = a1.open_trace_count()
 
-    # new instance restores persisted state (the reference's .tastate restore)
+    # new instance restores the snap=0 snapshot (the reference's .tastate
+    # restore)
     a2 = IncrementalTraceAssembler(spark, state_dir=state)
     assert a2.open_trace_count() == n_open
     res = a2.process_batch(
         txs.filter(F.col("mc_block_seqno") > mid).drop("trace_id"),
         msgs.filter(F.col("mc_seqno") > mid),
+        batch_id=1,
     )
     assert res.final_traces.count() > 0
 
@@ -138,7 +141,7 @@ def test_pending_ttl_evicts(spark, fixture_dir, tmp_path):
     asm = IncrementalTraceAssembler(
         spark, state_dir=str(tmp_path / "state"), pending_ttl_mc_seqnos=0
     )
-    res = asm.process_batch(txs.drop("trace_id"), msgs)
+    res = asm.process_batch(txs.drop("trace_id"), msgs, batch_id=0)
     # ttl=0 → every pending trace with an mc_seqno is evicted as final; only
     # a trace without one may stay open
     states = {r["state"] for r in res.final_traces.collect()}
@@ -339,64 +342,6 @@ def test_file_stream_end_to_end(spark, fixture_dir, tmp_path):
     assert traces.count() == n_final_truth
     assert flushed.select("trace_id").distinct().count() == n_final_truth
     assert latest.groupBy("account").count().agg(F.max("count")).collect()[0][0] == 1
-
-
-def test_amortized_snapshots_match_and_recover(spark, fixture_dir, tmp_path):
-    """snapshot_every=K: (a) amortized mode emits the same finalized
-    traces as per-batch persistence; (b) after a crash, a new instance
-    resumes from the last PERSISTED snapshot and replaying the batches
-    after it (the reference's backtrack contract) converges to the same
-    final set."""
-    from ton_indexer_spark.streaming import IncrementalTraceAssembler
-
-    txs = spark.read.parquet(f"{fixture_dir}/transactions.parquet")
-    msgs = spark.read.parquet(f"{fixture_dir}/messages.parquet")
-    seqnos = sorted(r[0] for r in txs.select("mc_block_seqno").distinct().collect())
-    k = len(seqnos) // 4 + 1
-    slices = [seqnos[i * k: (i + 1) * k] for i in range(4) if seqnos[i * k: (i + 1) * k]]
-
-    def batch(i):
-        sl = slices[i]
-        return (txs.filter(F.col("mc_block_seqno").isin(sl)).drop("trace_id"),
-                msgs.filter(F.col("mc_seqno").isin(sl)))
-
-    # reference run: durable snapshot every batch
-    ref = IncrementalTraceAssembler(spark, state_dir=str(tmp_path / "s1"))
-    want: set[str] = set()
-    for i in range(len(slices)):
-        want |= {r["trace_id"]
-                 for r in ref.process_batch(*batch(i), batch_id=i).final_traces.collect()}
-
-    # amortized run: durable snapshot only on batch ids divisible by 3
-    amort_state = str(tmp_path / "s2")
-    am = IncrementalTraceAssembler(spark, state_dir=amort_state, snapshot_every=3)
-    got: set[str] = set()
-    for i in range(len(slices)):
-        got |= {r["trace_id"]
-                for r in am.process_batch(*batch(i), batch_id=i).final_traces.collect()}
-    assert got == want
-
-    # crash after batch 3 (snapshots exist only for ids 0 and 3): a new
-    # instance resumes from snap=3 and replays nothing → same open count
-    am2 = IncrementalTraceAssembler(spark, state_dir=amort_state, snapshot_every=3)
-    assert am2.open_trace_count() == am.open_trace_count()
-
-    # crash mid-window: run a fresh pipeline, stop after batch 1 (no
-    # snapshot for id=1 — only id=0 persisted), restart and replay 1..3
-    st = str(tmp_path / "s3")
-    b1 = IncrementalTraceAssembler(spark, state_dir=st, snapshot_every=3)
-    emitted: set[str] = set()
-    for i in (0, 1):
-        emitted |= {r["trace_id"]
-                    for r in b1.process_batch(*batch(i), batch_id=i).final_traces.collect()}
-    b2 = IncrementalTraceAssembler(spark, state_dir=st, snapshot_every=3)
-    replay: set[str] = set()
-    for i in (1, 2, 3):  # driver re-delivers everything after snap=0
-        replay |= {r["trace_id"]
-                   for r in b2.process_batch(*batch(i), batch_id=i).final_traces.collect()}
-    # batch-keyed sinks make duplicates converge; the union must equal
-    # the continuous run's final set
-    assert emitted | replay == want
 
 
 def test_replace_by_key_pins_bucket_count(spark, tmp_path):

@@ -37,10 +37,12 @@ def test_pipeline_with_classification_and_push(spark, fixture_dir, tmp_path):
     pipe.process_batch(
         txs.filter(F.col("mc_block_seqno") <= mid),
         msgs.filter(F.col("mc_seqno") <= mid),
+        batch_id=0,
     )
     pipe.process_batch(
         txs.filter(F.col("mc_block_seqno") > mid),
         msgs.filter(F.col("mc_seqno") > mid),
+        batch_id=1,
     )
 
     actions = spark.read.parquet(os.path.join(out, "actions"))
@@ -171,7 +173,7 @@ def test_reclassification_replaces_per_trace(spark, fixture_dir, tmp_path):
 
     actions = spark.read.parquet(f"{fixture_dir}/actions.parquet")
     path = str(tmp_path / "actions")
-    actions.write.parquet(path)
+    replace_by_key(spark, path, actions, key=["trace_id"])
 
     victims = [r[0] for r in actions.select("trace_id").distinct().limit(3).collect()]
     # one replacement action per victim trace (the reclassifier's output)
@@ -382,6 +384,7 @@ def test_push_confirmed_vs_finalized_tiers(spark, fixture_dir, tmp_path):
     pipe.process_batch(
         txs.filter(F.col("mc_block_seqno") <= mid),
         msgs.filter(F.col("mc_seqno") <= mid),
+        batch_id=0,
     )
 
     confirmed = {p["hash"] for p in channels.get("confirmed_transactions", [])}

@@ -77,16 +77,19 @@ def test_blocks_query(spark, fixture_dir):
 
 def test_compaction_preserves_data(spark, fixture_dir, tmp_path):
     from ton_indexer_spark.sources.compact import compact_facts
-    from ton_indexer_spark.sources.writer import write_facts
+    from ton_indexer_spark.sources.writer import with_mc_bucket
 
     txs = spark.read.parquet(f"{fixture_dir}/transactions.parquet")
     path = str(tmp_path / "facts")
-    # simulate many small streaming appends
+    # simulate many small appends into each mc_bucket partition
     for i in range(12):
-        write_facts(
-            txs.filter(F.col("lt") % 12 == i),
-            path,
-            sort_cols=["lt", "account", "hash"],
+        (
+            with_mc_bucket(txs.filter(F.col("lt") % 12 == i))
+            .repartition("mc_bucket")
+            .sortWithinPartitions("lt", "account", "hash")
+            .write.mode("append")
+            .partitionBy("mc_bucket")
+            .parquet(path)
         )
     # collect BEFORE compaction — the lazy plan would re-read swapped files
     before_hashes = sorted(

@@ -73,18 +73,12 @@ class AssembledTraces:
 def assemble_traces(
     transactions: DataFrame,
     messages: DataFrame,
-    forest_local_threshold: int | None = None,
 ) -> AssembledTraces:
     """Reproduce trace_id / state / counters from transactions+messages alone.
 
     Any pre-existing ``trace_id`` column on the input is dropped — this
     operator is the assigner of trace ids (ingest-time semantics,
     IndexScheduler.cpp:306 stage `assemble_traces`).
-
-    ``forest_local_threshold`` passes through to
-    ``forest_roots(local_threshold=...)`` — 0 forces the distributed
-    pointer-doubling root finder (the backfill/100 TB path) regardless of
-    edge count; None keeps the operator's size-gated default.
     """
     txs = transactions.drop("trace_id")
     # hash leads, as it does in any frame joined on it
@@ -124,15 +118,10 @@ def assemble_traces(
     # 3. each tx consumes exactly ONE in-message → producer→consumer edges
     # form a forest; root-finding = forest_roots instead of generic
     # connected components (operators/graph.py)
-    fr_kwargs = (
-        {} if forest_local_threshold is None
-        else {"local_threshold": forest_local_threshold}
-    )
     comp = forest_roots(
         per_tx.filter(F.col("parent_").isNotNull()).select(
             F.col("hash").alias("child"), F.col("parent_").alias("parent")
-        ),
-        **fr_kwargs,
+        )
     ).withColumnRenamed("node", "hash")
 
     # 4. one pass keyed by trace_id (one shuffle): every trace field on

@@ -1,14 +1,16 @@
 """Parquet writers implementing the reference's two write disciplines
 (SURVEY.md §2.1 S3/S4).
 
-1. **Fact append** (blocks/transactions/messages/traces/actions): the
-   reference bulk-COPYs per seqno into Postgres and mirrors into ClickHouse
-   with explicit ORDER BY sort keys (InsertManagerClickhouse.cpp:186,219).
-   Spark analog: append-mode parquet partitioned by a coarse time bucket
-   (``mc_bucket = mc_seqno div bucket_size``) with rows pre-sorted *within
-   partitions* by the query-path sort key — parquet row-group min/max then
-   prunes both by partition (time) and by sort column (lt/hash point
-   lookups), replacing the reference's 40 btree indexes.
+1. **Batch-keyed facts** (transactions/traces/actions): the reference
+   bulk-COPYs per seqno into Postgres and mirrors into ClickHouse with
+   explicit ORDER BY sort keys (InsertManagerClickhouse.cpp:186,219).
+   Spark analog: every micro-batch carries an id (``foreachBatch``
+   supplies it) and lands in its own ``batch=<id>`` directory, partitioned
+   by a coarse time bucket (``mc_bucket = mc_seqno div bucket_size``) with
+   rows pre-sorted *within partitions* by the query-path sort key —
+   parquet row-group min/max then prunes both by partition (time) and by
+   sort column (lt/hash point lookups), replacing the reference's 40 btree
+   indexes.  A redelivered batch replaces its directory.
 
 2. **Dimension last-writer-wins merge** (latest_account_states, jetton
    wallets, NFT items, …): the reference upserts keeping max
@@ -17,6 +19,11 @@
    window-latest per key → atomic directory swap.  Idempotent (re-running a
    batch converges to the same table state — the reference's ON CONFLICT
    fallback, :1746-1748).
+
+Every replacement goes through ``_swap_dir``: the new directory is written
+under a dot-prefixed temp name and renamed in, the old one renamed aside
+to a dot-prefixed name and removed, so partition discovery never lists a
+temp or aside directory.
 """
 
 from __future__ import annotations
@@ -39,22 +46,24 @@ def with_mc_bucket(df: DataFrame, seqno_col: str = "mc_block_seqno",
     return df.withColumn("mc_bucket", F.expr(f"`{seqno_col}` div {bucket_size}"))
 
 
-def write_facts(
-    df: DataFrame,
-    path: str,
-    sort_cols: Sequence[str],
-    seqno_col: str = "mc_block_seqno",
-    bucket_size: int = DEFAULT_BUCKET,
-) -> None:
-    """Append facts partitioned by mc_bucket, sorted within partitions."""
-    out = with_mc_bucket(df, seqno_col, bucket_size)
-    (
-        out.repartition("mc_bucket")
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("append")
-        .partitionBy("mc_bucket")
-        .parquet(path)
-    )
+def _hidden(dest: str, tag: str) -> str:
+    """A fresh dot-prefixed sibling of ``dest``: partition discovery skips
+    names starting with a dot, so readers of the table never list it."""
+    head, name = os.path.split(dest)
+    return os.path.join(head, f".{tag}-{name}-{uuid.uuid4().hex[:8]}")
+
+
+def _swap_dir(src: str, dest: str) -> None:
+    """Move the finished directory ``src`` to ``dest``, replacing whatever
+    is there: the old directory is renamed aside to a hidden sibling, the
+    new one renamed in, then the old one removed.  Readers see the old or
+    the new directory, never a half-written one (single writer)."""
+    old = _hidden(dest, "old")
+    if os.path.exists(dest):
+        os.rename(dest, old)
+    os.rename(src, dest)
+    if os.path.exists(old):
+        shutil.rmtree(old)
 
 
 DIM_BUCKETS = 64  # key-hash partitions per dimension table
@@ -87,8 +96,7 @@ def write_facts_batch(
     batch and mc_bucket as columns and prunes both."""
     out = with_mc_bucket(df, seqno_col, bucket_size)
     dest = os.path.join(path, f"batch={batch_id}")
-    # dot-prefixed temp: invisible to concurrent partition discovery
-    tmp = os.path.join(path, f".tmp-batch-{batch_id}-{uuid.uuid4().hex[:8]}")
+    tmp = _hidden(dest, "tmp")
     (
         out.repartition("mc_bucket")
         .sortWithinPartitions(*sort_cols)
@@ -96,14 +104,7 @@ def write_facts_batch(
         .partitionBy("mc_bucket")
         .parquet(tmp)
     )
-    old = os.path.join(
-        path, f".old-batch-{batch_id}-{uuid.uuid4().hex[:8]}"
-    )
-    if os.path.exists(dest):
-        os.rename(dest, old)
-    os.rename(tmp, dest)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    _swap_dir(tmp, dest)
 
 
 def _resolve_n_buckets(path: str, n_buckets: int) -> tuple[int, str]:
@@ -130,11 +131,16 @@ def merge_dimension(
     The dimension is laid out as ``kb=<hash(key) % n_buckets>`` partitions;
     a merge touches ONLY the buckets containing delta keys: read those
     buckets (partition-pruned scan) ∪ delta → window-latest → swap just
-    those bucket directories.  Per-batch I/O is O(delta keys / n_buckets ·
-    table), not O(table) — at hundreds of millions of dimension rows and
-    ~1 s chain cadence this is the difference between a viable incremental
-    merge and rewriting the world (the scale analog of the reference's
-    keyed upsert, InsertManagerPostgres.cpp:1019-1460).
+    those bucket directories (the scale analog of the reference's keyed
+    upsert, InsertManagerPostgres.cpp:1019-1460).
+
+    Per-batch I/O grows with the number of buckets the delta's keys touch,
+    not with the delta: each touched bucket is read and rewritten whole.
+    ``k`` distinct keys touch about ``n_buckets · (1 − (1 − 1/n_buckets)^k)``
+    buckets, so once ``k`` nears ``n_buckets`` a merge rewrites nearly the
+    whole table — an ``ingest`` drop of ~200 accounts touches 61 of the 64
+    ``latest_account_states`` buckets.  Only batches with few keys per
+    bucket count stay O(delta).
 
     Idempotent (re-running a batch converges — the reference's ON CONFLICT
     fallback, :1746-1748); per-bucket swaps are atomic under the
@@ -174,18 +180,12 @@ def _write_and_swap_buckets(
     ``affected`` bucket directories into ``path``.  Untouched bucket files
     are never opened or rewritten; each bucket swap is atomic under the
     single-writer assumption."""
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    tmp = _hidden(path, "tmp")
     df.write.mode("overwrite").partitionBy("kb").parquet(tmp)
     for kb in affected:
-        src, dst = os.path.join(tmp, f"kb={kb}"), os.path.join(path, f"kb={kb}")
-        if not os.path.exists(src):
-            continue  # bucket produced no rows — nothing new for it
-        old = f"{dst}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        os.rename(src, dst)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        src = os.path.join(tmp, f"kb={kb}")
+        if os.path.exists(src):  # a bucket without rows has nothing new
+            _swap_dir(src, os.path.join(path, f"kb={kb}"))
     shutil.rmtree(tmp)
 
 
@@ -203,15 +203,13 @@ def replace_by_key(
 
     Scale path: the table is laid out as ``kb=<hash(key) % n_buckets>``
     partitions (same discipline as ``merge_dimension``), and a
-    reclassification batch rewrites ONLY the buckets containing delta keys
-    — per-batch I/O is O(delta keys / n_buckets · table), not O(table).
-    At a billions-of-rows actions table this is the difference between a
-    viable micro-batch reclassifier and rewriting the world.  Readers see
-    either the old or the new classification of a trace, never a mix
-    (per-bucket atomic swap; the key hash pins every key to one bucket).
-
-    A table written in the legacy unbucketed layout is migrated to the
-    ``kb=`` layout on first call (one full rewrite, then pruned forever).
+    reclassification batch rewrites ONLY the buckets containing delta keys.
+    Per-batch I/O therefore grows with the number of buckets those keys
+    touch, each rewritten whole: a delta with about as many keys as
+    buckets rewrites nearly the whole table (see ``merge_dimension``).
+    Readers see either the old or the new classification of a trace, never
+    a mix (per-bucket atomic swap; the key hash pins every key to one
+    bucket).
 
     The bucket count is persisted in a ``_n_buckets`` marker at table
     creation and takes precedence over the parameter on later calls: a
@@ -229,23 +227,10 @@ def replace_by_key(
     if not os.path.exists(marker):
         with open(marker, "w") as fh:  # adopt pre-marker tables as-is
             fh.write(str(n_buckets))
-    current_all = spark.read.parquet(path)
-    if "kb" not in current_all.columns:
-        # one-time migration: rebucket the existing table in place
-        migrated = _with_key_bucket(current_all, key, n_buckets)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        migrated.write.mode("overwrite").partitionBy("kb").parquet(tmp)
-        old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-        with open(marker, "w") as fh:  # the swap replaced the directory
-            fh.write(str(n_buckets))
-        current_all = spark.read.parquet(path)
     affected = sorted(
         r[0] for r in delta_b.select("kb").distinct().collect()
     )
-    current = current_all.filter(F.col("kb").isin(affected))
+    current = spark.read.parquet(path).filter(F.col("kb").isin(affected))
     keep = current.join(delta_b.select(*key).distinct(), list(key), "left_anti")
     merged = keep.unionByName(delta_b, allowMissingColumns=True)
     _write_and_swap_buckets(merged, path, affected)
@@ -256,21 +241,6 @@ def atomic_replace(df: DataFrame, path: str) -> None:
     swap directories.  Needed whenever a table is rebuilt from itself —
     a plain overwrite deletes the input files before the lazy plan reads
     them.  Readers never observe a half-written table."""
-    atomic_replace_many([(df, path)])
-
-
-def atomic_replace_many(pairs: Sequence[tuple[DataFrame, str]]) -> None:
-    """atomic_replace for several tables whose plans may read EACH OTHER's
-    current files: all temp writes execute before any directory is swapped."""
-    staged = []
-    for df, path in pairs:
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
-        staged.append((tmp, path))
-    for tmp, path in staged:
-        old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+    tmp = _hidden(path, "tmp")
+    df.write.mode("overwrite").parquet(tmp)
+    _swap_dir(tmp, path)

@@ -8,14 +8,19 @@ Spark shape — one foreachBatch, no queues, no triggers:
 
     readStream (file source over per-seqno-bucket parquet drops,
                 maxFilesPerTrigger = the reference's --max-active-tasks)
-      → foreachBatch:
+      → foreachBatch(batch_df, batch_id):
             1. IncrementalTraceAssembler.process_batch   (T2 state op)
             2. classify final and still-open traces once  (T5, optional)
-            3. write_facts(txs, traces, actions)          (T8 idempotent sink)
+            3. write_facts_batch(txs, traces, actions)    (T8 idempotent sink)
                + replace pending_actions with the open
                  traces' actions from step 2              (T6 overlay)
             4. merge_dimension(latest account states)     (W2 LWW)
             5. publish_batch(...)                         (T7, optional)
+
+Every micro-batch carries the id ``foreachBatch`` supplies: the assembler
+persists its state once per batch as a ``snap=<id>`` snapshot and each
+fact table gets a ``batch=<id>`` directory, so a redelivered batch
+replaces its outputs instead of duplicating them.
 
 ``run_available_now`` processes everything currently in the source dir and
 stops — used by tests and backfills; a production deployment passes a
@@ -28,16 +33,33 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
-from ton_indexer_spark.sources.writer import (
-    merge_dimension,
-    write_facts,
-    write_facts_batch,
-)
+from ton_indexer_spark.sources.writer import merge_dimension, write_facts_batch
 from ton_indexer_spark.streaming.push import Publisher, publish_batch
 from ton_indexer_spark.streaming.trace_assembler import IncrementalTraceAssembler
 
 MSG_DROP_BUCKET = 100  # masterchain seqnos per message-drop partition
+
+
+def _run_file_stream(spark: SparkSession, source_dir: str,
+                     checkpoint_dir: str, handle) -> StreamingQuery:
+    """Drive ``handle(batch_df, batch_id)`` through ``foreachBatch`` over
+    the parquet files now in ``source_dir``, one file per micro-batch
+    (maxFilesPerTrigger = the reference's --max-active-tasks), and return
+    the query once every file is processed."""
+    schema = spark.read.parquet(source_dir).schema
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(source_dir)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
 
 
 def write_message_drops(msgs: DataFrame, path: str,
@@ -91,18 +113,15 @@ class IngestPipeline:
         self.audit_findings: dict[int, int] = {}
 
     def process_batch(self, txs: DataFrame, msgs: DataFrame,
-                      batch_id: int | None = None,
+                      batch_id: int,
                       message_contents: DataFrame | None = None) -> None:
         if message_contents is None:
             message_contents = self.message_contents
+
         def sink(df: DataFrame, table: str, sort_cols: list[str]) -> None:
-            # T8: with a batch_id the sink is idempotent (batch-keyed dir
-            # replace); without one (direct driving) it appends
-            path = os.path.join(self.out_dir, table)
-            if batch_id is not None:
-                write_facts_batch(df, path, sort_cols, batch_id)
-            else:
-                write_facts(df, path, sort_cols)
+            # T8: the batch-keyed dir is replaced on redelivery
+            write_facts_batch(df, os.path.join(self.out_dir, table),
+                              sort_cols, batch_id)
 
         res = self.assembler.process_batch(txs, msgs, batch_id=batch_id)
         flushed = res.final_transactions
@@ -177,7 +196,6 @@ class IngestPipeline:
 
         if (
             self.audit_every is not None
-            and batch_id is not None
             and batch_id % self.audit_every == 0
             and has_final
         ):
@@ -243,7 +261,6 @@ class IngestPipeline:
         partition column first — the scan PRUNES to the batch's buckets
         instead of re-reading the whole message history every micro-batch
         (the O(table)-per-batch trap at backfill scale)."""
-        tx_schema = self.spark.read.parquet(tx_source_dir).schema
         msgs_all = self.spark.read.parquet(msg_source_dir)
         has_bucket = "seq_bucket" in msgs_all.columns
 
@@ -279,19 +296,8 @@ class IngestPipeline:
             )
             self.process_batch(batch_df, batch_msgs, batch_id=batch_id)
 
-        stream = (
-            self.spark.readStream.schema(tx_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tx_source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return q
+        return _run_file_stream(self.spark, tx_source_dir, checkpoint_dir,
+                                handle)
 
 
 class RawBocIngest:
@@ -322,7 +328,6 @@ class RawBocIngest:
         )
 
         spark = self.pipeline.spark
-        schema = spark.read.parquet(boc_source_dir).schema
 
         def handle(batch_df: DataFrame, batch_id: int) -> None:
             if not batch_df.head(1):
@@ -362,16 +367,4 @@ class RawBocIngest:
                 txs, msgs, batch_id=batch_id, message_contents=contents
             )
 
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(boc_source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return q
+        return _run_file_stream(spark, boc_source_dir, checkpoint_dir, handle)

@@ -19,13 +19,17 @@ traces with pending edges.
         0 pending edges or TTL → emit (final)     [T4: broken preserved]
         pending edges          → keep in state    [T6: pending overlay]
 
-State is persisted as parquet per batch (atomic dir swap) — the analog of
-the reference's ``<seqno>.tastate`` snapshots (T3); on restart the assembler
-resumes from the last persisted state, and a from-scratch batch rebuild
+Every micro-batch carries an id (``foreachBatch`` supplies it), and the
+state is persisted once per batch as one batch-keyed parquet snapshot,
+``state_dir/snap=<id>/{txs,msgs}``, committed with one directory rename —
+the analog of the reference's ``<seqno>.tastate`` snapshots (T3).  On
+restart the assembler resumes from the last committed snapshot; a
+redelivered batch rewinds to the snapshot before it, so the replay derives
+the same outputs.  A from-scratch batch rebuild
 (operators/trace_assembly.py) covers the reference's backtrack path.
 
-Wire it either from ``foreachBatch`` of a Structured Streaming source
-(see streaming/ingest.py) or drive ``process_batch`` directly.
+Wire it from ``foreachBatch`` of a Structured Streaming source (see
+streaming/ingest.py), or drive ``process_batch`` with in-order ids.
 
 Scale: state size ∝ open traces only (the reference's own bound); each
 batch costs, over |batch| + |open| rows and independent of table history
@@ -38,6 +42,8 @@ tx_hash join that labels the messages, and the two snapshot writes.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,44 +78,24 @@ class IncrementalTraceAssembler:
     is emitted as final-pending and evicted — the Spark analog of
     the reference's ton-trace-ttl-tracker service (SURVEY.md T6).  Batches
     must arrive in mc_seqno order (the reference's T1 in-order scheduler
-    contract); within a batch order is irrelevant.
+    contract); within a batch order is irrelevant.  ``state_dir`` holds
+    the ``snap=<id>`` snapshots; a new instance resumes from the last one.
     """
 
     def __init__(
         self,
         spark: SparkSession,
-        state_dir: str | None = None,
+        state_dir: str,
         pending_ttl_mc_seqnos: int | None = None,
-        snapshot_every: int = 1,
     ):
-        """``snapshot_every=K`` persists the durable parquet snapshot only
-        on every K-th batch id, amortizing the per-batch fixed cost (2
-        parquet writes + swap + reread) that dominates small micro-batches
-        — the reference checkpoints on a 10 s timer, not per block
-        (TraceAssembler.cpp:104-123).  Between snapshots, state continues
-        in-memory (localCheckpoint).  Recovery contract under K>1: restart
-        resumes from the LAST PERSISTED snapshot and the driver must
-        re-deliver every batch after it (the reference's backtrack path,
-        :90-212); the batch-keyed idempotent sinks (T8) make the replay
-        converge.  K=1 (default) keeps the strict per-batch durability the
-        Structured Streaming wiring expects."""
         self.spark = spark
         self.state_dir = state_dir
         self.pending_ttl_mc_seqnos = pending_ttl_mc_seqnos
-        self.snapshot_every = max(1, snapshot_every)
         self._open_txs: DataFrame | None = None
         self._open_msgs: DataFrame | None = None
-        if state_dir:
-            snaps = self._snap_ids()
-            if snaps:
-                self._load_snap(snaps[-1])
-            elif os.path.exists(os.path.join(state_dir, "txs")):
-                self._open_txs = spark.read.parquet(
-                    os.path.join(state_dir, "txs")
-                )
-                self._open_msgs = spark.read.parquet(
-                    os.path.join(state_dir, "msgs")
-                )
+        snaps = self._snap_ids()
+        if snaps:
+            self._load_snap(snaps[-1])
 
     # -- batch-id-keyed snapshots (T3/T8 replay coordination) ----------------
     def _snap_ids(self) -> list[int]:
@@ -118,7 +104,7 @@ class IncrementalTraceAssembler:
         a .staging-* dir (never listed) or, for older layouts, a partial
         snap dir — both must be invisible to recovery (the soak/chaos test
         kills the process mid-write and restores; examples/soak_chaos.py)."""
-        if not self.state_dir or not os.path.isdir(self.state_dir):
+        if not os.path.isdir(self.state_dir):
             return []
         out = []
         for d in os.listdir(self.state_dir):
@@ -160,104 +146,69 @@ class IncrementalTraceAssembler:
         return self._open_txs, open_msgs
 
     def _persist_state(self, txs: DataFrame, msgs: DataFrame,
-                       batch_id: int | None = None) -> None:
-        # keep state materialized so the next batch doesn't re-derive a
-        # growing lineage; parquet swap doubles as the restart snapshot (T3)
-        if (
-            self.state_dir
-            and batch_id is not None
-            and self.snapshot_every > 1
-            and batch_id % self.snapshot_every != 0
-        ):
-            # amortized mode: carry state in memory between durable
-            # snapshots (every K-th batch persists)
-            self._open_txs = txs.localCheckpoint(eager=True)
-            self._open_msgs = msgs.localCheckpoint(eager=True)
-            return
-        if self.state_dir and batch_id is not None:
-            # batch-keyed snapshot: state AFTER batch_id.  Replay of the
-            # same batch reloads the previous snapshot first, so the rerun
-            # derives identical outputs — the sink side (batch-keyed fact
-            # dirs) then replaces rather than duplicates (T8).
-            #
-            # CRASH ATOMICITY: both tables are written into a .staging-*
-            # dir (invisible to _snap_ids) and the WHOLE snapshot appears
-            # with one directory rename.  A per-table swap is not enough —
-            # a SIGKILL between the two table writes/renames left a
-            # half-snapshot that recovery trusted (caught by the chaos
-            # test, examples/soak_chaos.py).  If the process dies between
-            # rmtree and rename below, the previous snapshot (always
-            # retained) is the rewind target and the driver re-delivers
-            # this batch.
-            import shutil
-            import uuid
+                       batch_id: int) -> None:
+        # batch-keyed snapshot: state AFTER batch_id, reread from disk so
+        # the next batch does not re-derive a growing lineage.  Replay of
+        # the same batch reloads the previous snapshot first, so the rerun
+        # derives identical outputs — the sink side (batch-keyed fact
+        # dirs) then replaces rather than duplicates (T8).
+        #
+        # CRASH ATOMICITY: both tables are written into a .staging-* dir
+        # (invisible to _snap_ids) and the WHOLE snapshot appears with one
+        # directory rename.  A per-table swap is not enough — a SIGKILL
+        # between the two table writes/renames left a half-snapshot that
+        # recovery trusted (caught by the chaos test,
+        # examples/soak_chaos.py).  If the process dies between rmtree and
+        # rename below, the previous snapshot (always retained) is the
+        # rewind target and the driver re-delivers this batch.
+        staging = os.path.join(
+            self.state_dir, f".staging-{batch_id}-{uuid.uuid4().hex[:8]}"
+        )
+        txs.write.mode("overwrite").parquet(os.path.join(staging, "txs"))
+        msgs.write.mode("overwrite").parquet(os.path.join(staging, "msgs"))
+        base = os.path.join(self.state_dir, f"snap={batch_id}")
+        if os.path.exists(base):  # redelivered batch: replace
+            shutil.rmtree(base)
+        os.rename(staging, base)
+        self._load_snap(batch_id)
 
-            staging = os.path.join(
-                self.state_dir, f".staging-{batch_id}-{uuid.uuid4().hex[:8]}"
-            )
-            txs.write.mode("overwrite").parquet(
-                os.path.join(staging, "txs")
-            )
-            msgs.write.mode("overwrite").parquet(
-                os.path.join(staging, "msgs")
-            )
-            base = os.path.join(self.state_dir, f"snap={batch_id}")
-            if os.path.exists(base):  # redelivered batch: replace
-                shutil.rmtree(base)
-            os.rename(staging, base)
-            self._load_snap(batch_id)
-
-            # retain the current snapshot plus the latest one BEFORE it
-            # (the rewind target for a redelivered batch — correct for any
-            # snapshot_every spacing); drop everything else, including
-            # snaps with ids AFTER the current batch, which are stale
-            # leftovers of a previous run after a fresh-checkpoint restart
-            snaps = self._snap_ids()
-            prevs = [s for s in snaps if s < batch_id]
-            keep = {batch_id} | ({prevs[-1]} if prevs else set())
-            for sid in snaps:
-                if sid not in keep:
-                    shutil.rmtree(
-                        os.path.join(self.state_dir, f"snap={sid}")
-                    )
-            # sweep leftovers of crashed persists: uncommitted snaps and
-            # orphaned staging dirs are garbage once a newer commit exists
-            for d in os.listdir(self.state_dir):
-                p = os.path.join(self.state_dir, d)
-                if d.startswith(".staging-") or (
-                    d.startswith("snap=")
-                    and int(d.split("=", 1)[1]) not in snaps
-                ):
-                    shutil.rmtree(p, ignore_errors=True)
-        elif self.state_dir:
-            from ton_indexer_spark.sources.writer import atomic_replace_many
-
-            atomic_replace_many(
-                [
-                    (txs, os.path.join(self.state_dir, "txs")),
-                    (msgs, os.path.join(self.state_dir, "msgs")),
-                ]
-            )
-            self._open_txs = self.spark.read.parquet(os.path.join(self.state_dir, "txs"))
-            self._open_msgs = self.spark.read.parquet(os.path.join(self.state_dir, "msgs"))
-        else:
-            self._open_txs = txs.localCheckpoint(eager=True)
-            self._open_msgs = msgs.localCheckpoint(eager=True)
+        # retain the current snapshot plus the latest one BEFORE it (the
+        # rewind target for a redelivered batch); drop everything else,
+        # including snaps with ids AFTER the current batch, which are
+        # stale leftovers of a previous run after a fresh-checkpoint
+        # restart
+        snaps = self._snap_ids()
+        prevs = [s for s in snaps if s < batch_id]
+        keep = {batch_id} | ({prevs[-1]} if prevs else set())
+        for sid in snaps:
+            if sid not in keep:
+                shutil.rmtree(os.path.join(self.state_dir, f"snap={sid}"))
+        # sweep leftovers of crashed persists: uncommitted snaps and
+        # orphaned staging dirs are garbage once a newer commit exists
+        for d in os.listdir(self.state_dir):
+            p = os.path.join(self.state_dir, d)
+            if d.startswith(".staging-") or (
+                d.startswith("snap=")
+                and int(d.split("=", 1)[1]) not in snaps
+            ):
+                shutil.rmtree(p, ignore_errors=True)
 
     # -- the operator -------------------------------------------------------
     def process_batch(self, batch_txs: DataFrame, batch_msgs: DataFrame,
-                      batch_id: int | None = None) -> BatchResult:
-        if batch_id is not None and self.state_dir:
-            snaps = self._snap_ids()
-            if snaps and snaps[-1] >= batch_id:
-                # redelivered batch (crash after state persist, before the
-                # streaming checkpoint committed): rewind to the snapshot
-                # preceding this batch so the rerun is deterministic
-                prev = [s for s in snaps if s < batch_id]
-                if prev:
-                    self._load_snap(prev[-1])
-                else:
-                    self._open_txs = self._open_msgs = None
+                      batch_id: int) -> BatchResult:
+        """Assemble one micro-batch against the open-trace state.  Ids must
+        rise with mc_seqno; an id at or below the last committed snapshot
+        is a redelivery and replays from the snapshot before it."""
+        snaps = self._snap_ids()
+        if snaps and snaps[-1] >= batch_id:
+            # redelivered batch (crash after state persist, before the
+            # streaming checkpoint committed): rewind to the snapshot
+            # preceding this batch so the rerun is deterministic
+            prev = [s for s in snaps if s < batch_id]
+            if prev:
+                self._load_snap(prev[-1])
+            else:
+                self._open_txs = self._open_msgs = None
         all_txs, all_msgs = self._union_state(batch_txs, batch_msgs)
         # state ∪ batch messages feed both the assembler and the message
         # split below: read them once
@@ -306,8 +257,7 @@ class IncrementalTraceAssembler:
         # trace_id rides along on transactions so the pending overlay (T6)
         # can classify and serve these traces before finalization
         self._persist_state(
-            pending_txs, pending_msgs.select(*_MSG_STATE_COLS),
-            batch_id=batch_id,
+            pending_txs, pending_msgs.select(*_MSG_STATE_COLS), batch_id
         )
         return BatchResult(
             final_traces=traces.filter(closed),
